@@ -980,6 +980,8 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 ids: list = []
                 shs: list = []
                 for did, text in zip(pdf["doc_id"], pdf["text"]):
+                    if text is None:
+                        continue  # NULL text has no shingles, as in the oracle
                     toks = rx.sub(" ", text.lower()).strip().split(" ")
                     if len(toks) >= 3:
                         seen = dict.fromkeys(

@@ -1181,6 +1181,18 @@ def full_delineation(
     partitioning → MST clustering (road-crossing prune) → buffered
     dissolve to cells → PatchRemove → [EdgeCatch] → GapFix stitch →
     HoleClose → per-boundary summary.
+
+    Three frames read by more than one consumer are materialised with an
+    eager ``localCheckpoint``, so the Python kernel under each runs once
+    per call instead of once per consumer:
+
+    - the MST clustering (read by the main cells, the AddSinglBdg
+      anti-join and the PatchRemove counts);
+    - the main clusters' buffered-footprint cells, read by PatchRemove's
+      stats join and by its ``left_semi`` join;
+    - the cell set entering GapFix, read by the connected-components
+      labelling (whose inner actions compute it) and again by GapFix's
+      final join.
     """
     from . import synth
     from .config import filter_predicate
@@ -1217,13 +1229,15 @@ def full_delineation(
     # singletons bypass it (they are kept by construction, mirroring
     # the reference's ordering where AddSinglBdg output joins the
     # final merge after the density-based filters)
-    cells_main = cluster_cells(b.join(clustered.select("bid", "cluster_id"), "bid"), 25.0, cell_size)
+    cells_main = cluster_cells(
+        b.join(clustered.select("bid", "cluster_id"), "bid"), 25.0, cell_size
+    ).localCheckpoint(eager=True)
     cells_main = patch_remove(cells_main, b, cell_size, min_bdg_count=min_bdg_count, min_patch_cells=4)
     cells_single = cluster_cells(b.join(singles, "bid"), 25.0, cell_size)
     cells = cells_main.unionByName(cells_single)
     if use_edge_catch and roads is not None:
         cells = edge_catch(cells, roads, cell_size)
-    stitched = gap_fix(cells)
+    stitched = gap_fix(cells.localCheckpoint(eager=True))
     closed = _hole_close_grouped(stitched)
     return (
         closed.groupBy("boundary_id")

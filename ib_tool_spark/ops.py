@@ -33,6 +33,34 @@ from .cells import DEFAULT_GRID, GridConfig, encode_col, k_ring_offsets, parent_
 from .geom import cover_cells, points_in_polygon, rings_bbox
 
 # ---------------------------------------------------------------------------
+# Driver-built relations
+# ---------------------------------------------------------------------------
+
+
+def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A small relation built on the driver from ``rows`` (tuples of
+    Python values in ``schema`` order; ``None`` is NULL), scanned as a
+    JVM ``LocalTableScan``.
+
+    ``createDataFrame`` over a Python list plans a ``Scan ExistingRDD``
+    (``parallelize`` + a Python identity map), so every scan of the
+    result starts Python tasks; a ``pyarrow.Table`` is sent to the JVM
+    once, with Arrow on or off.  Columns are built with the schema's
+    own Arrow types, so NULL slots keep the declared type (pandas would
+    turn a nullable ``long`` into float64)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [[] for _ in arrow_schema]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, struct)
+
+
+# ---------------------------------------------------------------------------
 # Column-level stages (pure built-ins → whole-stage codegen)
 # ---------------------------------------------------------------------------
 
@@ -415,20 +443,13 @@ def knn_assign(
         if wide:
             rows = []
             for cell, g in cand.groupby("cell"):
-                row = {"cell": int(cell)}
-                for j, r in enumerate(g.itertuples()):
-                    row[f"cid{j}"] = int(r.center_id)
-                    row[f"cx{j}"] = float(r.cx)
-                    row[f"cy{j}"] = float(r.cy)
-                for j in range(len(g), width):
-                    row[f"cid{j}"] = None
-                    row[f"cx{j}"] = None
-                    row[f"cy{j}"] = None
-                rows.append(row)
+                slots = [(int(r.center_id), float(r.cx), float(r.cy)) for r in g.itertuples()]
+                slots += [(None, None, None)] * (width - len(slots))
+                rows.append((int(cell), *(v for s in slots for v in s)))
             schema = "cell long, " + ", ".join(
                 f"cid{j} long, cx{j} double, cy{j} double" for j in range(width)
             )
-            cached = spark.createDataFrame(pd.DataFrame(rows), schema).persist()
+            cached = local_df(spark, rows, schema).persist()
         else:
             grouped = [
                 (
@@ -440,8 +461,8 @@ def knn_assign(
                 )
                 for cell, g in cand.groupby("cell")
             ]
-            cached = spark.createDataFrame(
-                grouped, "cell long, cands array<struct<center_id: long, cx: double, cy: double>>"
+            cached = local_df(
+                spark, grouped, "cell long, cands array<struct<center_id: long, cx: double, cy: double>>"
             ).persist()
         _KNN_CAND_CACHE[ckey] = cached
     cand_df = cached
@@ -1253,9 +1274,7 @@ def edge_components_df(edges: DataFrame, cap: int = 65536, max_rounds: int = 64)
                 parent[hi] = lo
         ids = {i for row in head for i in (row.src, row.dst)}
         out = [(int(i), int(find(i))) for i in sorted(ids)]
-        if not out:
-            return spark.createDataFrame([], "id long, comp long")
-        return spark.createDataFrame(out, "id long, comp long")
+        return local_df(spark, out, "id long, comp long")
 
     und = pairs.select(F.col("src").alias("id"), F.col("dst").alias("nb")).unionByName(
         pairs.select(F.col("dst").alias("id"), F.col("src").alias("nb"))

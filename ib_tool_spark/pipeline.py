@@ -8,9 +8,9 @@ body measured by bench.py against BASELINE.json's north-star metric
                    only when the validate stage is on).
 2. geocode+cell  — pure Column expressions (xxhash64 + bit math) inside
                    one WholeStageCodegen span; no Python.
-3. pip_join      — broadcast hash join on the cell key + Arrow refine
-                   (boundary cells only).  The image side never
-                   shuffles.
+3. pip_join      — broadcast hash join on the cell key + even-odd
+                   refine in Column math (boundary cells only).  The
+                   image side never shuffles.
 4. tile_assign   — bit math on the cell id.
 5. sink          — parquet partitioned by tile, or an aggregate.
 """

@@ -742,6 +742,8 @@ ROADS_SCHEMA = "rid long, line array<array<double>>, true_cluster long, kind str
 
 
 def roads_df(spark, scene: Scene | None = None):
+    from .ops import local_df  # ops imports this module
+
     pdf = roads_pdf(scene)
     rows = [
         (
@@ -752,4 +754,4 @@ def roads_df(spark, scene: Scene | None = None):
         )
         for r in pdf.itertuples()
     ]
-    return spark.createDataFrame(rows, ROADS_SCHEMA)
+    return local_df(spark, rows, ROADS_SCHEMA)

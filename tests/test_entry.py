@@ -62,3 +62,24 @@ def test_every_query_has_matching_oracle_columns(spark, duck):
         want_cols = set(duck.sql(sql).df().columns)
         got_cols = set(qs[name](spark, SF_DIR).columns)
         assert got_cols == want_cols, (name, got_cols, want_cols)
+
+
+def test_near_dup_jaccard_skips_null_text(spark, tmp_path):
+    """A NULL ``text`` row yields no shingles (as in the oracle's
+    lower/split chain) instead of crashing the shingle generator."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet")
+    next_id = max(docs["doc_id"].to_pylist()) + 1
+    null_row = {c: [None] for c in docs.column_names} | {"doc_id": [next_id]}
+    docs = pa.concat_tables([docs, pa.table(null_row, schema=docs.schema)])
+    pq.write_table(docs, tmp_path / "documents.parquet")
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')")
+    name = "t_near_dup_jaccard"
+    got = entrymod.queries()[name](spark, str(tmp_path)).toPandas()
+    want = con.sql(entrymod.oracle_sql()[name]).df()
+    assert len(want) > 0
+    problems = compare(name, got, want)
+    assert not problems, problems

@@ -9,6 +9,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from ib_tool_spark import delineate, ops, pipeline, synth
@@ -147,3 +148,76 @@ def test_flagship_validated_repartition_policy(spark):
     one = synth.synth_images_df(spark, 200, 8).coalesce(1)
     p1 = plan_text(pipeline.flagship_validated(spark, images=one))
     assert "RoundRobinPartitioning" in p1, "fallback must fire when the scan can't fill the cores"
+
+
+ARROW_KEY = "spark.sql.execution.arrow.pyspark.enabled"
+
+
+@pytest.fixture(params=["true", "false"], ids=["arrow_on", "arrow_off"])
+def arrow(spark, request):
+    old = spark.conf.get(ARROW_KEY)
+    spark.conf.set(ARROW_KEY, request.param)
+    try:
+        yield request.param
+    finally:
+        spark.conf.set(ARROW_KEY, old)
+
+
+def _assert_local_scan(df):
+    # the whole query-execution dump: it also prints the plan cached
+    # under an InMemoryRelation
+    p = df._jdf.queryExecution().toString()
+    assert "LocalTableScan" in p, p[:3000]
+    assert "Scan ExistingRDD" not in p, p[:3000]
+
+
+def test_driver_built_relations_scan_locally(spark, arrow):
+    """Driver-built tables are LocalTableScans with Arrow on or off — a
+    list-built frame scans through a Python RDD on every action."""
+    roads = synth.roads_df(spark)
+    _assert_local_scan(roads)
+    assert roads.schema.simpleString() == (
+        "struct<rid:bigint,line:array<array<double>>,true_cluster:bigint,kind:string>"
+    )
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "src long, dst long")
+    comps = ops.edge_components_df(edges)  # small path: a new driver-built table
+    _assert_local_scan(comps)
+    assert sorted(map(tuple, comps.collect())) == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
+
+
+def test_knn_wide_candidates_keep_long_ids(spark, arrow):
+    """The wide knn candidate table pads missing slots with NULL longs
+    (not float64) under either Arrow setting, is a LocalTableScan, and
+    the argmin stays a least() chain."""
+    import numpy as np
+    import pandas as pd
+
+    # three centers 100 m apart in a row: cells at the ends of the row
+    # hold fewer candidates than the deepest cell, so slots are padded.
+    # The coordinates differ per Arrow setting so the candidate cache
+    # of one parameter cannot serve the other.
+    base = 50_000.0 + (0.0 if arrow == "true" else 1_000.0)
+    cx = base + np.array([0.0, 100.0, 200.0])
+    cy = np.full(3, base)
+    centers = pd.DataFrame({"center_id": [11, 12, 13], "cx": cx, "cy": cy})
+    px = base + np.arange(-80.0, 290.0, 7.0)
+    pts = spark.createDataFrame(
+        pd.DataFrame({"pid": np.arange(len(px)), "x": px, "y": np.full(len(px), base + 5.0)})
+    )
+    out = ops.knn_assign(pts, centers, cutoff=70.0)
+    p = out._jdf.queryExecution().toString()
+    assert "least(" in p, p[:3000]
+    cand = list(ops._KNN_CAND_CACHE.values())[-1]  # built by this call
+    _assert_local_scan(cand)
+    width = sum(c.startswith("cid") for c in cand.columns)
+    assert width >= 2, cand.columns
+    assert all(t == "bigint" for c, t in cand.dtypes if c.startswith("cid")), cand.dtypes
+    assert cand.filter(F.col(f"cid{width - 1}").isNull()).count() > 0
+    got = out.toPandas().set_index("pid")
+    d2 = (px[:, None] - cx[None, :]) ** 2 + 25.0
+    for i in range(len(px)):
+        j = int(np.argmin(d2[i]))
+        if np.sqrt(d2[i, j]) <= 70.0:
+            assert int(got.loc[i, "nearest_id"]) == 11 + j
+        else:
+            assert i not in got.index

@@ -80,3 +80,14 @@ def test_full_delineation_end_to_end(spark):
     pd.testing.assert_frame_equal(
         out.reset_index(drop=True), out2.reset_index(drop=True)
     )
+    # and independent of the session's Arrow setting
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        out3 = delineate.full_delineation(spark, per_cluster=20).toPandas()
+    finally:
+        spark.conf.set(key, old)
+    pd.testing.assert_frame_equal(
+        out.reset_index(drop=True), out3.reset_index(drop=True)
+    )

@@ -2,11 +2,16 @@
 __spark_entry__ query against its DuckDB oracle and compare row count,
 schema (column names), and exact values (order-insensitive).
 
-Usage: python tools/check_oracles.py [sf_dir]
+Usage: python tools/check_oracles.py [sf_dir] [name,name,...] [--arrow on|off]
+
+``--arrow off`` runs the queries with
+``spark.sql.execution.arrow.pyspark.enabled=false``: a gate's result
+must not depend on that setting.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -58,13 +63,22 @@ def compare(name: str, got: pd.DataFrame, want: pd.DataFrame) -> list[str]:
 
 
 def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--arrow", choices=["on", "off"], default="on")
+    # the positional [sf_dir] [names] are read from what is left
+    args, sys.argv[1:] = ap.parse_known_args()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 
     import __spark_entry__ as entrymod
     from ib_tool_spark.pipeline import get_spark
 
-    spark = get_spark(app="oracle_check", cores=8, shuffle_partitions=16)
+    spark = get_spark(
+        app="oracle_check",
+        cores=8,
+        shuffle_partitions=16,
+        extra={"spark.sql.execution.arrow.pyspark.enabled": str(args.arrow == "on").lower()},
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.sql(
