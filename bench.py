@@ -57,12 +57,13 @@ def main() -> None:
 
     spark = pipeline.get_spark(app="ib_tool_bench", cores=cpus, shuffle_partitions=max(cpus, 8))
 
-    # Decode-stage task policy (see ops.decode_validate_direct): this
-    # Spark build pays a large FIXED per-task cost in the Python-runner
-    # bridge (~300 ms/task measured against a no-op mapInPandas,
-    # payload-independent), so the decode stage wants ONE wave of big
-    # row-balanced tasks (r4 shipped 4m-split scans = 172 tasks, ~50
-    # core-seconds of pure bridge overhead).  Kernel cache residency is
+    # Decode-stage task policy (see ops.decode_validate_direct): every
+    # Python task pays a large FIXED, payload-independent cost (a no-op
+    # mapInPandas: 0.35-0.5 s for one wave of tasks, ~0.25 s per further
+    # wave on 4 cores; see pipeline.flagship_validated), so the decode
+    # stage wants ONE wave of big row-balanced tasks (r4 shipped 4m-split
+    # scans = 172 tasks, ~40 core-seconds of pure per-task overhead at
+    # ~0.25 core-seconds a task).  Kernel cache residency is
     # preserved independently by the direct reader's 2000-row batches —
     # task size and kernel working-set are decoupled knobs.
 

@@ -57,11 +57,11 @@ def density_partitions_df(
     """Dense-cell partition map as a DataFrame: (gx, gy, part_name).
 
     Mirrors Partitioning.pyt:84-119 (PointDensity cell=150 radius=300,
-    threshold 1e-5, NAME='PART_<k>').  Fully distributed: the density
-    grid aggregates map-side and the component labeling runs through
-    ops.cell_components_df (per-super-cell CC + border merge), so no
-    unbounded cell set ever reaches the driver.  Labels — and therefore
-    PART names — are bit-identical to the driver-side kernel's.
+    threshold 1e-5, NAME='PART_<k>').  The density grid aggregates
+    map-side and ops.cell_components_df labels the dense cells (on the
+    driver up to its cap, distributed beyond), so no unbounded cell set
+    ever reaches the driver.  Labels — and therefore PART names — are
+    bit-identical to the driver-side kernel's.
     """
     dense = (
         ops.density_grid(points, cell_size, radius)
@@ -265,8 +265,8 @@ def buffer_mask(
         .select((F.col("gx") + F.col("o.dx")).alias("gx"), (F.col("gy") + F.col("o.dy")).alias("gy"))
         .distinct()
     )
-    # dissolve = distributed CC (per-super-cell + border merge); the
-    # mask cell set never reaches the driver
+    # dissolve = ops.cell_components_df (driver labeling up to its cap,
+    # distributed beyond); no unbounded cell set reaches the driver
     cells_df = ops.cell_components_df(mask)
 
     def trace(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -673,12 +673,12 @@ def hole_close(cells: DataFrame, max_hole_cells: int = 64) -> DataFrame:
     IB-Tool2.py:1704-50: polygonize boundary → non-identical parts
     < MaxHoleSize get merged in).
 
-    Distributed: cells are labeled by ops.cell_components_df, then each
-    component fills its own holes in applyInPandas (the reference's
-    HoleClose likewise operates per polygonized boundary feature).  A
-    cavity jointly enclosed by several disjoint components is not a
-    hole of any single polygon and stays open — matching the
-    per-feature reference semantics.
+    Cells are labeled by ops.cell_components_df (on the driver up to its
+    cap, distributed beyond), then each component fills its own holes in
+    applyInPandas (the reference's HoleClose likewise operates per
+    polygonized boundary feature).  A cavity jointly enclosed by several
+    disjoint components is not a hole of any single polygon and stays
+    open — matching the per-feature reference semantics.
     """
     labeled = ops.cell_components_df(cells.select("gx", "gy")).withColumnRenamed(
         "comp", "boundary_id"

@@ -96,8 +96,9 @@ def classify_symdiff(
     sym = merged.filter(F.col("in_c") != F.col("in_e")).select(
         "gx", "gy", F.when(F.col("in_c") == 1, F.lit("POS")).otherwise(F.lit("NEG")).alias("sign")
     )
-    # patches = connected components per sign — distributed CC (the
-    # symdiff cell set is unbounded at scale); only the patch-id map
+    # patches = connected components per sign — ops.cell_components_df
+    # (driver labeling up to its cap, distributed beyond: the symdiff
+    # cell set is unbounded at scale); only the patch-id map
     # (one row per patch — output-scale) is collected, preserving the
     # original lexicographic patch numbering
     from . import ops

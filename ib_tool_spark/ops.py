@@ -177,6 +177,13 @@ _KNN_CAND_CACHE: dict = {}
 _KNN_WIDE_MAX = 8
 
 
+def _session_key(spark: SparkSession) -> str:
+    """Cache-key part naming the session's application.  ``id(spark)``
+    can be reused by a new session object at the same address; the
+    application id cannot."""
+    return spark.sparkContext.applicationId
+
+
 def _polygons_digest(polygons) -> str:
     """Content digest of a polygon set (sid + ring coordinates).  Used
     as the cover-cache key: id()-based keys can silently alias after
@@ -278,7 +285,7 @@ def pip_join(
     matching NO polygon (INVERT selections, IB-Tool2.py:818-823).
     """
     spark = points.sparkSession
-    ckey = (_polygons_digest(polygons), res, grid, refine, id(spark))
+    ckey = (_polygons_digest(polygons), res, grid, refine, _session_key(spark))
     if ckey in _COVER_CACHE:
         cover, bc = _COVER_CACHE[ckey]
     else:
@@ -428,7 +435,7 @@ def knn_assign(
         float(cutoff),
         res,
         grid,
-        id(spark),
+        _session_key(spark),
     )
     width = int(cand.groupby("cell").size().max()) if len(cand) else 0
     wide = 0 < width <= _KNN_WIDE_MAX
@@ -1025,6 +1032,10 @@ def dense_index_df(keys: DataFrame, key_col: str, out: str = "label") -> DataFra
 
 _CC_OFF = 1 << 30  # cell coords live in (-2^30, 2^30)
 
+# Largest distinct input (cells or edge pairs) the component labelers
+# fetch and label on the driver; larger inputs take the distributed plan.
+DRIVER_LABEL_CAP = 65_536
+
 
 def _cc_key_np(gx: np.ndarray, gy: np.ndarray) -> np.ndarray:
     """int64 cell key whose numeric order == lexicographic (gx, gy)."""
@@ -1033,8 +1044,10 @@ def _cc_key_np(gx: np.ndarray, gy: np.ndarray) -> np.ndarray:
     )
 
 
-def cell_components_df(cells: DataFrame, super_size: int = 256) -> DataFrame:
-    """Distributed 4-connected component labeling of a cell set.
+def cell_components_df(
+    cells: DataFrame, super_size: int = 256, cap: int = DRIVER_LABEL_CAP
+) -> DataFrame:
+    """4-connected component labeling of a cell set.
 
     Input: (gx, gy) rows (duplicates tolerated).  Output: (gx, gy, comp)
     where ``comp`` is the rank of the component's lexicographically
@@ -1042,8 +1055,17 @@ def cell_components_df(cells: DataFrame, super_size: int = 256) -> DataFrame:
     stable relabel, so driver-side call sites can switch over without
     changing any output.
 
-    Plan (the 100 TB shape — replaces the reference's single-process
-    dissolve and our round-1 ``toPandas()`` collects):
+    Two paths, with the same bound as edge_components_df's
+    (``cap`` = DRIVER_LABEL_CAP distinct cells):
+
+    - distinct cells ≤ ``cap``: one ``limit(cap + 1)`` collect, labeled
+      on the driver by geom.cell_components and returned as a
+      ``LocalTableScan`` (ops.local_df), so no Python tasks run;
+    - otherwise the super-cell plan below, whose driver work is bounded
+      by edge_components_df's cap over component-adjacency pairs.
+
+    Super-cell plan (the 100 TB shape — replaces the reference's
+    single-process dissolve and our round-1 ``toPandas()`` collects):
       1. local CC per ``super_size``² super-cell via applyInPandas —
          each group is bounded (≤ super_size² cells), work is
          parallel across super-cells;
@@ -1055,11 +1077,21 @@ def cell_components_df(cells: DataFrame, super_size: int = 256) -> DataFrame:
       4. global relabel = dense index over the distinct component keys
          via dense_index_df (two-stage rank — no single-partition sort).
     """
+    distinct = cells.select(
+        F.col("gx").cast("long").alias("gx"), F.col("gy").cast("long").alias("gy")
+    ).distinct()
+    head = distinct.limit(cap + 1).collect()
+    if len(head) <= cap:
+        from . import geom
+
+        xy = np.array(head, dtype=np.int64).reshape(-1, 2)
+        labels = geom.cell_components(xy[:, 0], xy[:, 1])
+        rows = np.column_stack([xy, labels]).tolist()
+        return local_df(cells.sparkSession, rows, "gx long, gy long, comp long")
+
     S = int(super_size)
     c = (
-        cells.select("gx", "gy")
-        .distinct()
-        .withColumn("sx", F.floor(F.col("gx") / F.lit(S)))
+        distinct.withColumn("sx", F.floor(F.col("gx") / F.lit(S)))
         .withColumn("sy", F.floor(F.col("gy") / F.lit(S)))
     )
 
@@ -1231,17 +1263,21 @@ def identity_join(
     )
 
 
-def edge_components_df(edges: DataFrame, cap: int = 65536, max_rounds: int = 64) -> DataFrame:
+def edge_components_df(
+    edges: DataFrame, cap: int = DRIVER_LABEL_CAP, max_rounds: int = 64
+) -> DataFrame:
     """Distributed connected components over an arbitrary (src, dst)
     edge list.  Returns (id, comp) with one row per distinct endpoint
     and ``comp`` = the smallest id in its component (the same
     union-by-min semantics every call site's driver union-find had).
 
     Two paths, so driver work is bounded by a CONSTANT, never by the
-    data:
+    data (``cap`` = DRIVER_LABEL_CAP, the bound cell_components_df
+    shares):
 
-    - distinct pairs ≤ ``cap``: collect + union-find on the driver
-      (bounded by design — one bounded fetch, no scan of the full set);
+    - distinct pairs ≤ ``cap``: one ``limit(cap + 1)`` collect +
+      union-find on the driver, returned as a ``LocalTableScan``
+      (ops.local_df);
     - otherwise: min-label propagation with pointer doubling — each
       round every endpoint takes the min label over itself and its
       neighbors, then jumps to its label's label, so convergence is

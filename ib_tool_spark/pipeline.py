@@ -151,9 +151,9 @@ def flagship_validated(
     if direct_path is not None:
         # executors stream their parquet row-group splits straight from
         # storage (ops.decode_validate_direct) — the image bytes never
-        # transit the JVM scan + Arrow IPC, which on this build costs
-        # two payload traversals plus ~300 ms fixed bridge overhead per
-        # task.  Identical rows to the shipped path (pinned by tests).
+        # transit the JVM scan + Arrow IPC, which costs two payload
+        # traversals on top of the fixed per-task Python cost (see
+        # below).  Identical rows to the shipped path (pinned by tests).
         valid = (
             ops.decode_validate_direct(spark, direct_path)
             .filter(F.col("pixels_ok") & F.col("caption_ok") & F.col("phash_ok"))
@@ -172,11 +172,15 @@ def flagship_validated(
     # cluster (fewer splits than ~3/4 of the cores) fall back to a
     # round-robin repartition — that path shuffles every image byte, so
     # it's the exception, not the default.  The threshold is cores, not
-    # 4×cores: this Spark build pays a large FIXED per-task cost in the
-    # Python-runner bridge (~300 ms/task measured against a no-op
-    # mapInPandas, independent of payload), so once the scan saturates
-    # the cores, fewer+bigger decode tasks beat finer ones — and a
-    # full-byte shuffle to manufacture granularity is never worth it.
+    # 4×cores: every Python task pays a large FIXED cost, independent of
+    # payload.  A no-op mapInPandas takes 0.35-0.5 s for one wave of
+    # tasks and ~0.25 s per further wave (4 cores, PySpark 4.1.2,
+    # Python 3.11; perfbench's traced spark.python_noop.s).  About 0.2 s
+    # of each task is the worker's importlib.invalidate_caches(), which
+    # re-reads the zip directory of pyspark.zip and the 15 MB spark-core
+    # jar on the worker's sys.path.  So once the scan saturates the
+    # cores, fewer+bigger decode tasks beat finer ones — and a full-byte
+    # shuffle to manufacture granularity is never worth it.
     n_min = max(1, (spark.sparkContext.defaultParallelism * 3) // 4)
     if images.rdd.getNumPartitions() < n_min:
         images = images.repartition(spark.sparkContext.defaultParallelism * 2)

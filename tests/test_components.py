@@ -9,24 +9,31 @@ import pytest
 from ib_tool_spark import geom, ops
 
 
+def _labeled(spark, gx, gy, super_size, cap):
+    sdf = spark.createDataFrame(pd.DataFrame({"gx": gx, "gy": gy}), "gx long, gy long")
+    out = ops.cell_components_df(sdf, super_size=super_size, cap=cap)
+    return out, out.toPandas().sort_values(["gx", "gy"]).reset_index(drop=True)
+
+
 def _check(spark, gx, gy, super_size):
+    """Both paths — driver labeling (default cap) and the distributed
+    super-cell plan (cap=0) — must return the kernel's frame."""
     gx = np.asarray(gx, dtype=np.int64)
     gy = np.asarray(gy, dtype=np.int64)
     expected = geom.cell_components(gx, gy)
-    sdf = spark.createDataFrame(pd.DataFrame({"gx": gx, "gy": gy}), "gx long, gy long")
-    got = (
-        ops.cell_components_df(sdf, super_size=super_size)
-        .toPandas()
-        .sort_values(["gx", "gy"])
-        .reset_index(drop=True)
-    )
     exp = (
         pd.DataFrame({"gx": gx, "gy": gy, "comp": expected})
         .drop_duplicates()
         .sort_values(["gx", "gy"])
         .reset_index(drop=True)
     )
-    pd.testing.assert_frame_equal(got, exp)
+    for cap in (ops.DRIVER_LABEL_CAP, 0):
+        _, got = _labeled(spark, gx, gy, super_size, cap)
+        pd.testing.assert_frame_equal(got, exp)
+
+
+def _is_local(df):
+    return "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_cc_df_matches_kernel_random(spark):
@@ -61,6 +68,24 @@ def test_cc_df_merge_chain_across_corners(spark):
     ]
     arr = np.array(sorted(set(cells)))
     _check(spark, arr[:, 0], arr[:, 1], super_size=8)
+
+
+def test_cc_df_cap_boundary(spark):
+    # exactly `cap` distinct cells (with duplicates) are labeled on the
+    # driver; one more takes the distributed plan — same frame either way
+    rng = np.random.default_rng(3)
+    cap = 64
+    cells = np.unique(rng.integers(-6, 6, size=(400, 2)), axis=0)[: cap + 1]
+    assert len(cells) == cap + 1
+    for n in (cap, cap + 1):
+        gx = np.concatenate([cells[:n, 0], cells[:5, 0]])
+        gy = np.concatenate([cells[:n, 1], cells[:5, 1]])
+        at_cap, got = _labeled(spark, gx, gy, 4, cap)
+        assert _is_local(at_cap) == (n == cap)
+        other, want = _labeled(spark, gx, gy, 4, 0 if n == cap else n)  # the other path
+        assert _is_local(other) != _is_local(at_cap)
+        pd.testing.assert_frame_equal(got, want)
+        assert len(got) == n
 
 
 def test_gap_fix_million_cells_distributed(spark):
@@ -192,3 +217,32 @@ def test_cover_cache_content_keyed(spark):
     assert xs_a != xs_b
     assert all(0.0 <= x <= 20.0 for x in xs_a)
     assert all(70.0 <= x <= 90.0 for x in xs_b)
+
+
+def test_cache_keys_name_the_application(spark, monkeypatch):
+    # a new session object can reuse the address of a stopped one, so the
+    # cover and knn candidate caches key on the application id instead
+    from types import SimpleNamespace
+
+    def session(app):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+
+    assert ops._session_key(session("app-1")) != ops._session_key(session("app-2"))
+    assert ops._session_key(spark) == spark.sparkContext.applicationId
+
+    pts = spark.createDataFrame(
+        pd.DataFrame({"pid": [0, 1], "x": [61_000.0, 61_050.0], "y": [61_000.0, 61_000.0]})
+    )
+    polys = [(0, "A", [geom.rect_ring(61_000.0, 61_000.0, 100.0, 100.0, 0.0).tolist()])]
+    centers = pd.DataFrame({"center_id": [1], "cx": [61_000.0], "cy": [61_000.0]})
+
+    ops.pip_join(ops.with_cell(pts, 10), polys, 10)
+    ops.knn_assign(pts, centers, cutoff=70.0)
+    app = spark.sparkContext.applicationId
+    assert app in {k[-1] for k in ops._COVER_CACHE}
+    assert app in {k[-1] for k in ops._KNN_CAND_CACHE}
+    monkeypatch.setattr(ops, "_session_key", lambda s: "another-app")
+    ops.pip_join(ops.with_cell(pts, 10), polys, 10)  # misses: builds its own entries
+    ops.knn_assign(pts, centers, cutoff=70.0)
+    assert sum(k[-1] == "another-app" for k in ops._COVER_CACHE) == 1
+    assert sum(k[-1] == "another-app" for k in ops._KNN_CAND_CACHE) == 1

@@ -185,6 +185,17 @@ def test_driver_built_relations_scan_locally(spark, arrow):
     assert sorted(map(tuple, comps.collect())) == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
 
 
+def test_cell_components_small_path_scans_locally(spark, arrow):
+    """A cell set under the cap is labeled on the driver: the result is a
+    LocalTableScan with no grouped Python stage, under either Arrow
+    setting."""
+    cells = spark.createDataFrame([(0, 0), (1, 0), (5, 5), (5, 6)], "gx long, gy long")
+    out = ops.cell_components_df(cells)
+    _assert_local_scan(out)
+    assert "FlatMapGroupsInPandas" not in out._jdf.queryExecution().toString()
+    assert sorted(map(tuple, out.collect())) == [(0, 0, 0), (1, 0, 0), (5, 5, 1), (5, 6, 1)]
+
+
 def test_knn_wide_candidates_keep_long_ids(spark, arrow):
     """The wide knn candidate table pads missing slots with NULL longs
     (not float64) under either Arrow setting, is a LocalTableScan, and
