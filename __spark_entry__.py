@@ -2525,26 +2525,28 @@ def oracle_sql() -> dict[str, str]:
     # img_phash_near_dups: the banding + Hamming-refine math re-run in
     # SQL over the materialized synthetic payload table (the query runs
     # at sf0.01 → min(20000, 4000) images; the driver executes the
-    # Spark side first, which materializes the cache this reads)
-    _phash_path = "/root/repo/.synth/images_n4000"
-    if os.path.exists(_phash_path):
-        o["img_phash_near_dups"] = f"""
-          WITH p AS (
-            SELECT image_id, phash
-            FROM read_parquet('{_phash_path}/*/*.parquet')
-          ),
-          banded AS (
-            SELECT image_id, phash, b.band, (phash >> (b.band * 16)) & 65535 AS key
-            FROM p CROSS JOIN (VALUES (0), (1), (2), (3)) b(band)
-          ),
-          pairs AS (
-            SELECT DISTINCT a.image_id AS id_a, b.image_id AS id_b,
-                   CAST(bit_count(xor(a.phash, b.phash)) AS INTEGER) AS hamming
-            FROM banded a JOIN banded b
-              ON a.band = b.band AND a.key = b.key AND a.image_id < b.image_id
-          )
-          SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 1
-        """
+    # Spark side first, which materializes the cache this reads under
+    # the checkout's .synth/, where synth.ensure_images_table writes)
+    from ib_tool_spark.synth import CACHE_ROOT as _synth_root
+
+    _phash_path = os.path.join(_synth_root, "images_n4000")
+    o["img_phash_near_dups"] = f"""
+      WITH p AS (
+        SELECT image_id, phash
+        FROM read_parquet('{_phash_path}/*/*.parquet')
+      ),
+      banded AS (
+        SELECT image_id, phash, b.band, (phash >> (b.band * 16)) & 65535 AS key
+        FROM p CROSS JOIN (VALUES (0), (1), (2), (3)) b(band)
+      ),
+      pairs AS (
+        SELECT DISTINCT a.image_id AS id_a, b.image_id AS id_b,
+               CAST(bit_count(xor(a.phash, b.phash)) AS INTEGER) AS hamming
+        FROM banded a JOIN banded b
+          ON a.band = b.band AND a.key = b.key AND a.image_id < b.image_id
+      )
+      SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 1
+    """
 
     # aud_features: literal table of the CLOSED-FORM feature values for
     # the single-sine synthesis — computed from the synthesis parameters

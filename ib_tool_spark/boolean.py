@@ -110,13 +110,6 @@ def _signed_area(ax, ay, bx, by, cx, cy) -> float:
     return (ax - cx) * (by - cy) - (bx - cx) * (ay - cy)
 
 
-def _event_order_key(e: _Event):
-    """Total order of sweep events.  Ties between a left and a right
-    endpoint at the same point put the RIGHT endpoint first (closing
-    edges before opening new ones)."""
-    return (e.x, e.y, 1 if e.left else 0)
-
-
 def _event_less(e1: _Event, e2: _Event) -> bool:
     """Full comparator including the collinearity tiebreak (the event
     whose segment is below comes first)."""

@@ -438,21 +438,47 @@ def mst_cluster(
     cols = ["bid", "rings", "cx", "cy", "area", part_col]
     prepared = buildings.select(*cols).withColumnRenamed(part_col, "part")
 
+    def kernel(pdf: pd.DataFrame, segs: "np.ndarray | None") -> pd.DataFrame:
+        return _mst_cluster_kernel(pdf, coverage_thresh, max_edge, segs)
+
+    return _per_partition(prepared, "part", roads, road_cell, kernel, CLUSTER_SCHEMA)
+
+
+def _per_partition(
+    prepared: DataFrame,
+    key: str,
+    roads: "pd.DataFrame | DataFrame | None",
+    road_cell: float,
+    kernel,
+    schema: str,
+) -> DataFrame:
+    """Run ``kernel(pdf, road_segs)`` once per ``key`` group of
+    ``prepared`` (bid, rings, cx, cy, area, part, …), where
+    ``road_segs`` is the (M, 5) road-segment array near the group's
+    partition or ``None``.
+
+    Spark ``roads`` are subset to each partition's centroid bbox by a
+    coarse-cell join and COGROUPED into the kernel — the reference's own
+    locality model (IB-Tool2.py:2428-2443) — so no task deserializes the
+    whole road table.  The road side is keyed by ``part``; a group whose
+    ``part`` is null gets no roads.  Pandas ``roads`` (small scenes) and
+    ``None`` run a plain grouped ``applyInPandas``, the segments riding
+    in the closure."""
     if roads is None or isinstance(roads, pd.DataFrame):
         road_segs = _road_segments_pdf(roads) if roads is not None else None
 
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _mst_cluster_kernel(pdf, coverage_thresh, max_edge, road_segs)
+            return kernel(pdf, road_segs)
 
-        return _spread(prepared, "part").groupBy("part").applyInPandas(run, CLUSTER_SCHEMA)
+        return _spread(prepared, key).groupBy(key).applyInPandas(run, schema)
 
-    # DataFrame roads: per-partition subset (pad 0 — pruning only tests
-    # crossings against centroid-to-centroid edges, which live inside
-    # the centroid bbox), cogrouped into the kernel
-    # fresh key attribute (`kpart`) so the cogroup's two sides don't
-    # share lineage (Spark flags the self-referencing join as ambiguous)
+    # pad 0: pruning only tests crossings against centroid-to-centroid
+    # edges, which live inside the centroid bbox.  Fresh key attribute
+    # (`kpart`) so the cogroup's two sides don't share lineage (Spark
+    # flags the self-referencing join as ambiguous)
     keys_bbox = (
-        prepared.select(F.col("part").alias("kpart"), "cx", "cy")
+        prepared.filter(F.col("part").isNotNull())
+        .select(F.col("part").alias("kpart"), "cx", "cy")
         .groupBy("kpart")
         .agg(
             F.min("cx").alias("kminx"),
@@ -463,23 +489,79 @@ def mst_cluster(
     )
     roadsub = _segments_for_keys(
         keys_bbox, road_segments_df(roads), "kpart", pad=0.0, cell=road_cell
-    ).select(F.col("kpart").alias("part"), "x1", "y1", "x2", "y2", "L")
+    ).select(F.col("kpart").alias(key), "x1", "y1", "x2", "y2", "L")
 
     def run_cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if not len(left):
-            return pd.DataFrame({"bid": [], "cluster_id": [], "part": []}).astype(
-                {"bid": "int64", "cluster_id": "int64", "part": "str"}
-            )
+            return pd.DataFrame()  # a road key with no buildings
         segs = _sorted_segs_np(right)
-        return _mst_cluster_kernel(
-            left, coverage_thresh, max_edge, segs if segs.shape[0] else None
-        )
+        return kernel(left, segs if segs.shape[0] else None)
 
     return (
-        _spread(prepared, "part").groupBy("part")
-        .cogroup(_spread(roadsub, "part").groupBy("part"))
-        .applyInPandas(run_cg, CLUSTER_SCHEMA)
+        _spread(prepared, key).groupBy(key)
+        .cogroup(_spread(roadsub, key).groupBy(key))
+        .applyInPandas(run_cg, schema)
     )
+
+
+MST_CELLS_SCHEMA = "gx long, gy long, cluster_id long, single boolean"
+
+
+def mst_cluster_cells(
+    buildings: DataFrame,
+    coverage_thresh: float = 12.0,
+    roads: "pd.DataFrame | DataFrame | None" = None,
+    cell_size: float = 8.0,
+) -> DataFrame:
+    """MST clustering, AddSinglBdg and the buffered dissolve in ONE
+    grouped Python stage, as the reference runs one partition's chain in
+    one process (IB-Tool2.py:2401-2517).
+
+    Input: buildings keyed by assign_partitions_df (``part_name`` null
+    outside every dense partition).  Output (gx, gy, cluster_id, single):
+
+    - each partition's buildings are clustered by _mst_cluster_kernel
+      (``roads`` and ``coverage_thresh`` as in mst_cluster, its default
+      120 m edge cap) and every cluster's 25 m buffered footprints
+      become its cells — the rows of
+      ``cluster_cells(b.join(mst_cluster(…)), 25.0, cell_size)``, with
+      single = false;
+    - AddSinglBdg (IB-Tool2.py:1649-1702): every unpartitioned building
+      of more than 300 m² is its own cluster (cluster_id = bid), with
+      single = true.  Each is its own group, keyed by its bid, so the
+      singletons spread over tasks like partitions do.
+
+    PatchRemove is left to the caller: its counts join every building by
+    centroid cell, across clusters and partitions, so no group sees
+    them."""
+    prepared = (
+        buildings.select("bid", "rings", "cx", "cy", "area", F.col("part_name").alias("part"))
+        .filter(F.col("part").isNotNull() | (F.col("area") > 300.0))
+        .withColumn(
+            "grp",
+            F.coalesce("part", F.concat(F.lit("single_"), F.col("bid").cast("string"))),
+        )
+    )
+
+    def kernel(pdf: pd.DataFrame, segs: "np.ndarray | None") -> pd.DataFrame:
+        pdf = pdf.sort_values("bid").reset_index(drop=True)
+        # a singleton group has one building: the kernel keeps its bid
+        cid = _mst_cluster_kernel(pdf, coverage_thresh, 120.0, segs)["cluster_id"]
+        ids, blocks = [], []
+        for c, rings in pdf["rings"].groupby(cid.to_numpy()):
+            ids.append(c)
+            blocks.append(_buffer_cells_np(rings, 25.0, cell_size))
+        xy = np.concatenate(blocks)
+        return pd.DataFrame(
+            {
+                "gx": xy[:, 0],
+                "gy": xy[:, 1],
+                "cluster_id": np.repeat(np.asarray(ids, np.int64), [len(b) for b in blocks]),
+                "single": bool(pdf["part"].isna().iloc[0]),
+            }
+        )
+
+    return _per_partition(prepared, "grp", roads, 1024.0, kernel, MST_CELLS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -503,11 +585,7 @@ def cluster_boundaries(
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         cid = int(pdf["cluster_id"].iloc[0])
-        cells = set()
-        for rlist in pdf["rings"]:
-            ring = np.vstack([np.asarray(v, dtype=np.float64) for v in rlist[0]])
-            cells |= _round_buffer_cells(ring, buffer_m, cell_size)
-        arr = np.array(sorted(cells), dtype=np.int64)
+        arr = _buffer_cells_np(pdf["rings"], buffer_m, cell_size)
         rings = geom.trace_cell_boundary(arr[:, 0], arr[:, 1])
         rings = [r * cell_size for r in rings]
         area = sum(geom.ring_area(r) for r in rings)
@@ -521,6 +599,17 @@ def cluster_boundaries(
         )
 
     return _spread(buildings_with_clusters, "cluster_id").groupBy("cluster_id").applyInPandas(run, BOUNDARY_SCHEMA)
+
+
+def _buffer_cells_np(rings, buffer_m: float, cell_size: float) -> np.ndarray:
+    """Sorted (N, 2) int64 cells of the union of the footprints' round
+    buffers (one cluster's dissolve body; ``rings`` is a footprint
+    column as Arrow delivers it, outer ring first)."""
+    cells: set = set()
+    for rlist in rings:
+        ring = np.vstack([np.asarray(v, dtype=np.float64) for v in rlist[0]])
+        cells |= _round_buffer_cells(ring, buffer_m, cell_size)
+    return np.array(sorted(cells), dtype=np.int64).reshape(-1, 2)
 
 
 def _round_buffer_cells(ring: np.ndarray, buffer_m: float, cell_size: float) -> set:
@@ -673,17 +762,50 @@ def hole_close(cells: DataFrame, max_hole_cells: int = 64) -> DataFrame:
     IB-Tool2.py:1704-50: polygonize boundary → non-identical parts
     < MaxHoleSize get merged in).
 
-    Cells are labeled by ops.cell_components_df (on the driver up to its
-    cap, distributed beyond), then each component fills its own holes in
-    applyInPandas (the reference's HoleClose likewise operates per
-    polygonized boundary feature).  A cavity jointly enclosed by several
-    disjoint components is not a hole of any single polygon and stays
-    open — matching the per-feature reference semantics.
+    Cells are labeled by connected component and each component fills
+    its own holes (_label_and_close: on the driver up to
+    ops.DRIVER_LABEL_CAP distinct cells, distributed beyond; the
+    reference's HoleClose likewise operates per polygonized boundary
+    feature).  A cavity jointly enclosed by several disjoint components
+    is not a hole of any single polygon and stays open — matching the
+    per-feature reference semantics.
     """
-    labeled = ops.cell_components_df(cells.select("gx", "gy")).withColumnRenamed(
-        "comp", "boundary_id"
-    )
-    return _hole_close_grouped(labeled, max_hole_cells).select("gx", "gy")
+    return _label_and_close(cells, max_hole_cells).select("gx", "gy")
+
+
+def _label_and_close(
+    cells: DataFrame, max_hole_cells: int = 64, cap: int = ops.DRIVER_LABEL_CAP
+) -> DataFrame:
+    """(gx, gy, boundary_id): the distinct cells labeled by 4-connected
+    component (GapFix's stitch: ``boundary_id`` is ops.cell_components_df's
+    ``comp``), each component with its holes of at most
+    ``max_hole_cells`` filled (HoleClose).
+
+    Two paths, split like ops.cell_components_df's at ``cap`` distinct
+    cells:
+
+    - at most ``cap``: one bounded Arrow collect; geom.cell_components
+      labels and _fill_holes_np closes each component on the driver,
+      returned as a ``LocalTableScan`` (ops.local_df);
+    - otherwise: the super-cell labelling, then one grouped fill per
+      boundary_id (_hole_close_grouped).
+
+    Both give the same frame, since a component's fill reads only its
+    own cells."""
+    distinct = ops._distinct_cells(cells)
+    xy = ops.collect_bounded(distinct, cap)
+    if xy is None:
+        labeled = ops._super_cell_components(distinct).withColumnRenamed("comp", "boundary_id")
+        return _hole_close_grouped(labeled, max_hole_cells)
+    labels = geom.cell_components(xy[:, 0], xy[:, 1])
+    order = np.argsort(labels, kind="stable")
+    out = []
+    for idx in np.split(order, np.flatnonzero(np.diff(labels[order])) + 1):
+        if idx.size:
+            filled = _fill_holes_np(xy[idx, 0], xy[idx, 1], max_hole_cells)
+            out.append(np.column_stack([filled, np.full(len(filled), labels[idx[0]])]))
+    rows = np.concatenate(out).tolist() if out else []
+    return ops.local_df(cells.sparkSession, rows, "gx long, gy long, boundary_id long")
 
 
 # ---------------------------------------------------------------------------
@@ -1135,14 +1257,9 @@ def cluster_cells(
     by the boundary stages), as (gx, gy, cluster_id) rows."""
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        cid = int(pdf["cluster_id"].iloc[0])
-        cells = set()
-        for rlist in pdf["rings"]:
-            ring = np.vstack([np.asarray(v, dtype=np.float64) for v in rlist[0]])
-            cells |= _round_buffer_cells(ring, buffer_m, cell_size)
-        arr = sorted(cells)
+        xy = _buffer_cells_np(pdf["rings"], buffer_m, cell_size)
         return pd.DataFrame(
-            {"gx": [c[0] for c in arr], "gy": [c[1] for c in arr], "cluster_id": cid}
+            {"gx": xy[:, 0], "gy": xy[:, 1], "cluster_id": int(pdf["cluster_id"].iloc[0])}
         )
 
     return _spread(buildings_with_clusters, "cluster_id").groupBy("cluster_id").applyInPandas(run, CLUSTER_CELLS_SCHEMA)
@@ -1178,21 +1295,25 @@ def full_delineation(
     its finalize stage, in one Spark DAG:
 
     buildings → InputHU_Filter (use-code + min-area filters) → density
-    partitioning → MST clustering (road-crossing prune) → buffered
-    dissolve to cells → PatchRemove → [EdgeCatch] → GapFix stitch →
-    HoleClose → per-boundary summary.
+    partitioning → MST clustering (road-crossing prune) + AddSinglBdg →
+    buffered dissolve to cells → PatchRemove → [EdgeCatch] → GapFix
+    stitch → HoleClose → per-boundary summary.
 
-    Three frames read by more than one consumer are materialised with an
-    eager ``localCheckpoint``, so the Python kernel under each runs once
-    per call instead of once per consumer:
+    One grouped Python stage runs: mst_cluster_cells, which clusters each
+    partition (cogrouped with its roads), buffers every cluster to cells
+    and makes the AddSinglBdg singletons in the same call.  PatchRemove
+    and EdgeCatch are JVM joins.  GapFix and HoleClose run in
+    _label_and_close: on the driver when the stitched cells number at
+    most ops.DRIVER_LABEL_CAP, otherwise through the super-cell
+    labelling and a second grouped stage.
 
-    - the MST clustering (read by the main cells, the AddSinglBdg
-      anti-join and the PatchRemove counts);
-    - the main clusters' buffered-footprint cells, read by PatchRemove's
-      stats join and by its ``left_semi`` join;
-    - the cell set entering GapFix, read by the connected-components
-      labelling (whose inner actions compute it) and again by GapFix's
-      final join.
+    Two materialisation points:
+
+    - the mst_cluster_cells output, an eager ``localCheckpoint`` read by
+      PatchRemove's stats join, its ``left_semi`` join and the
+      singletons' pass-through;
+    - the stitched cell set, fetched once by _label_and_close's bounded
+      Arrow collect (the summary then scans a driver-built table).
     """
     from . import synth
     from .config import filter_predicate
@@ -1205,40 +1326,26 @@ def full_delineation(
     parts = density_partitions_df(
         cent_pts.withColumn("image_id", F.col("bid").cast("string")), 150.0, 300.0, 1e-5
     )
-    bp = assign_partitions_df(
+    keyed = assign_partitions_df(
         b.withColumn("x", F.col("cx")).withColumn("y", F.col("cy")), parts, 150.0
     )
-    bp = bp.filter(F.col("part_name").isNotNull()).withColumnRenamed("part_name", "part")
 
     roads = synth.roads_df(spark).select("rid", "line") if use_roads else None
-    # downstream branches reuse the clustering 3× (main cells, the
-    # AddSinglBdg anti-join, patch counts) — cut the lineage so the MST
-    # cogroup walk runs once (clustered is output-scale: one row/bid)
-    clustered = mst_cluster(
-        bp, coverage_thresh=coverage_thresh, roads=roads
+    clustered = mst_cluster_cells(
+        keyed, coverage_thresh=coverage_thresh, roads=roads, cell_size=cell_size
     ).localCheckpoint(eager=True)
-    # AddSinglBdg (IB-Tool2.py:1649-1702): large detached buildings that
-    # fell outside every dense partition become their own clusters
-    singles = (
-        b.join(clustered.select("bid"), "bid", "left_anti")
-        .filter(F.col("area") > 300.0)
-        .select("bid", F.col("bid").alias("cluster_id"))
-    )
 
     # PatchRemove applies to the aggregated clusters; AddSinglBdg
     # singletons bypass it (they are kept by construction, mirroring
     # the reference's ordering where AddSinglBdg output joins the
     # final merge after the density-based filters)
-    cells_main = cluster_cells(
-        b.join(clustered.select("bid", "cluster_id"), "bid"), 25.0, cell_size
-    ).localCheckpoint(eager=True)
-    cells_main = patch_remove(cells_main, b, cell_size, min_bdg_count=min_bdg_count, min_patch_cells=4)
-    cells_single = cluster_cells(b.join(singles, "bid"), 25.0, cell_size)
-    cells = cells_main.unionByName(cells_single)
+    main = clustered.filter(~F.col("single")).select("gx", "gy", "cluster_id")
+    single = clustered.filter(F.col("single")).select("gx", "gy", "cluster_id")
+    cells = patch_remove(main, b, cell_size, min_bdg_count=min_bdg_count, min_patch_cells=4)
+    cells = cells.unionByName(single)
     if use_edge_catch and roads is not None:
         cells = edge_catch(cells, roads, cell_size)
-    stitched = gap_fix(cells.localCheckpoint(eager=True))
-    closed = _hole_close_grouped(stitched)
+    closed = _label_and_close(cells)
     return (
         closed.groupBy("boundary_id")
         .agg(

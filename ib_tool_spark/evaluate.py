@@ -23,7 +23,6 @@ threshold (default 3 buildings).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,14 +51,6 @@ def polygon_cells(rings: list[np.ndarray], cell_size: float) -> set[tuple[int, i
     inside = geom.points_in_polygon(cxx.ravel(), cyy.ravel(), rings).reshape(len(ys), len(xs))
     rr, cc = np.nonzero(inside)
     return {(int(gx0 + c), int(gy0 + r)) for r, c in zip(rr, cc)}
-
-
-def boundary_cells_df(spark, polygons: list[list[np.ndarray]], cell_size: float) -> DataFrame:
-    rows = set()
-    for rings in polygons:
-        rows |= polygon_cells(rings, cell_size)
-    pdf = pd.DataFrame(sorted(rows), columns=["gx", "gy"])
-    return spark.createDataFrame(pdf, "gx long, gy long")
 
 
 def _any_prefix(col, prefixes: tuple[str, ...]):

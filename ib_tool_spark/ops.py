@@ -60,6 +60,19 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     return spark.createDataFrame(table, struct)
 
 
+def collect_bounded(df: DataFrame, cap: int) -> "np.ndarray | None":
+    """``df``'s integer columns as an (n, k) int64 array when it has at
+    most ``cap`` rows, else ``None``.
+
+    One ``limit(cap + 1).toArrow()`` action: the rows cross as Arrow
+    batches (with Arrow on or off) and become numpy columns without
+    building a Python ``Row`` per record."""
+    table = df.limit(cap + 1).toArrow()
+    if table.num_rows > cap:
+        return None
+    return np.column_stack([c.to_numpy().astype(np.int64, copy=False) for c in table.columns])
+
+
 # ---------------------------------------------------------------------------
 # Column-level stages (pure built-ins → whole-stage codegen)
 # ---------------------------------------------------------------------------
@@ -1058,11 +1071,34 @@ def cell_components_df(
     Two paths, with the same bound as edge_components_df's
     (``cap`` = DRIVER_LABEL_CAP distinct cells):
 
-    - distinct cells ≤ ``cap``: one ``limit(cap + 1)`` collect, labeled
-      on the driver by geom.cell_components and returned as a
-      ``LocalTableScan`` (ops.local_df), so no Python tasks run;
-    - otherwise the super-cell plan below, whose driver work is bounded
-      by edge_components_df's cap over component-adjacency pairs.
+    - distinct cells ≤ ``cap``: one bounded Arrow collect
+      (collect_bounded), labeled on the driver by geom.cell_components
+      and returned as a ``LocalTableScan`` (ops.local_df), so no Python
+      tasks run;
+    - otherwise the super-cell plan of _super_cell_components, whose
+      driver work is bounded by edge_components_df's cap over
+      component-adjacency pairs.
+    """
+    distinct = _distinct_cells(cells)
+    xy = collect_bounded(distinct, cap)
+    if xy is not None:
+        from . import geom
+
+        labels = geom.cell_components(xy[:, 0], xy[:, 1])
+        rows = np.column_stack([xy, labels]).tolist()
+        return local_df(cells.sparkSession, rows, "gx long, gy long, comp long")
+    return _super_cell_components(distinct, super_size)
+
+
+def _distinct_cells(cells: DataFrame) -> DataFrame:
+    """The distinct (gx, gy) long pairs of a cell frame."""
+    return cells.select(
+        F.col("gx").cast("long").alias("gx"), F.col("gy").cast("long").alias("gy")
+    ).distinct()
+
+
+def _super_cell_components(distinct: DataFrame, super_size: int = 256) -> DataFrame:
+    """cell_components_df's distributed path over distinct (gx, gy) rows.
 
     Super-cell plan (the 100 TB shape — replaces the reference's
     single-process dissolve and our round-1 ``toPandas()`` collects):
@@ -1077,18 +1113,6 @@ def cell_components_df(
       4. global relabel = dense index over the distinct component keys
          via dense_index_df (two-stage rank — no single-partition sort).
     """
-    distinct = cells.select(
-        F.col("gx").cast("long").alias("gx"), F.col("gy").cast("long").alias("gy")
-    ).distinct()
-    head = distinct.limit(cap + 1).collect()
-    if len(head) <= cap:
-        from . import geom
-
-        xy = np.array(head, dtype=np.int64).reshape(-1, 2)
-        labels = geom.cell_components(xy[:, 0], xy[:, 1])
-        rows = np.column_stack([xy, labels]).tolist()
-        return local_df(cells.sparkSession, rows, "gx long, gy long, comp long")
-
     S = int(super_size)
     c = (
         distinct.withColumn("sx", F.floor(F.col("gx") / F.lit(S)))
@@ -1275,9 +1299,9 @@ def edge_components_df(
     data (``cap`` = DRIVER_LABEL_CAP, the bound cell_components_df
     shares):
 
-    - distinct pairs ≤ ``cap``: one ``limit(cap + 1)`` collect +
-      union-find on the driver, returned as a ``LocalTableScan``
-      (ops.local_df);
+    - distinct pairs ≤ ``cap``: one bounded Arrow collect
+      (collect_bounded) + union-find on the driver, returned as a
+      ``LocalTableScan`` (ops.local_df);
     - otherwise: min-label propagation with pointer doubling — each
       round every endpoint takes the min label over itself and its
       neighbors, then jumps to its label's label, so convergence is
@@ -1291,8 +1315,8 @@ def edge_components_df(
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    head = pairs.limit(cap + 1).collect()
-    if len(head) <= cap:
+    head = collect_bounded(pairs, cap)
+    if head is not None:
         parent: dict[int, int] = {}
 
         def find(k: int) -> int:
@@ -1303,13 +1327,12 @@ def edge_components_df(
                 parent[k], k = r, parent[k]
             return r
 
-        for row in head:
-            ra, rb = find(row.src), find(row.dst)
+        for a, b in head.tolist():
+            ra, rb = find(a), find(b)
             if ra != rb:
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        ids = {i for row in head for i in (row.src, row.dst)}
-        out = [(int(i), int(find(i))) for i in sorted(ids)]
+        out = [(i, find(i)) for i in np.unique(head).tolist()]
         return local_df(spark, out, "id long, comp long")
 
     und = pairs.select(F.col("src").alias("id"), F.col("dst").alias("nb")).unionByName(

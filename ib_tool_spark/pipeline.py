@@ -194,14 +194,3 @@ def flagship_validated(
     return ops.tile_assign(joined, cell_res, tile_res).select(
         "image_id", "cell", "tile", "sid"
     )
-
-
-def flagship_summary(spark: SparkSession, n_images: int = 2000) -> DataFrame:
-    """Per-settlement/tile rollup of the flagship join (the 'boundary
-    dissolve' reporting view)."""
-    return (
-        flagship(spark, n_images)
-        .groupBy("sid", "name", "tile")
-        .agg(F.count("*").alias("n_images"))
-        .orderBy("sid", "tile")
-    )

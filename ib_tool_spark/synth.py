@@ -528,7 +528,11 @@ def images_sf_count(sf_dir: str) -> int:
     return int(round(sf * 2_000_000))
 
 
-def ensure_images_table(spark, n: int, cache_root: str = "/root/repo/.synth") -> str:
+# Materialised synthetic tables live in the checkout's `.synth/`
+CACHE_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".synth")
+
+
+def ensure_images_table(spark, n: int, cache_root: str = CACHE_ROOT) -> str:
     """Materialize the synthetic table once per size; return parquet path.
 
     Written partitioned by a coarse derived cell ("Iceberg-style layout",
@@ -590,16 +594,6 @@ def settlements_pdf(scene: Scene | None = None):
             }
         )
     return pd.DataFrame(rows)
-
-
-SETTLEMENTS_SCHEMA = (
-    "sid long, name string, rings array<array<array<double>>>, "
-    "minx double, miny double, maxx double, maxy double, area double, outer_area double"
-)
-
-
-def settlements_df(spark, scene: Scene | None = None):
-    return spark.createDataFrame(settlements_pdf(scene), SETTLEMENTS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

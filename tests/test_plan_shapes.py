@@ -232,3 +232,31 @@ def test_knn_wide_candidates_keep_long_ids(spark, arrow):
             assert int(got.loc[i, "nearest_id"]) == 11 + j
         else:
             assert i not in got.index
+
+
+def _sql_status(spark):
+    """The SQL status store (and a Scala-to-Java collection converter),
+    read once the listener bus has delivered every event."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    return store, spark._jvm.scala.jdk.javaapi.CollectionConverters
+
+
+def test_full_delineation_runs_one_grouped_python_stage(spark, arrow):
+    """Clustering, AddSinglBdg and the buffered dissolve share one
+    cogroup stage, and the stitched cells are labeled and closed on the
+    driver: across every action of one call (the final collect
+    included), exactly one grouped Python operator runs."""
+    store, conv = _sql_status(spark)
+    before = {e.executionId() for e in conv.asJava(store.executionsList())}
+    delineate.full_delineation(spark, per_cluster=20).collect()
+    store, conv = _sql_status(spark)
+    # physical-plan node names of every new execution (adaptive final plans)
+    names = [
+        n.name()
+        for e in conv.asJava(store.executionsList())
+        if e.executionId() not in before
+        for n in conv.asJava(store.planGraph(e.executionId()).allNodes())
+    ]
+    assert names.count("FlatMapCoGroupsInPandas") == 1, names
+    assert "FlatMapGroupsInPandas" not in names, names

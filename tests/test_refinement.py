@@ -91,3 +91,94 @@ def test_full_delineation_end_to_end(spark):
     pd.testing.assert_frame_equal(
         out.reset_index(drop=True), out3.reset_index(drop=True)
     )
+
+
+@pytest.fixture(scope="module")
+def keyed_scene(spark):
+    """The filtered synthetic buildings and the same rows keyed by
+    density partition, as full_delineation builds them."""
+    from ib_tool_spark import synth
+    from ib_tool_spark.config import filter_predicate
+
+    b = synth.buildings_df(spark, per_cluster=20)
+    b = b.filter(filter_predicate(F.col("fkt"), list(synth.POS_FKT)) & (F.col("area") >= 35.0))
+    pts = b.select(
+        F.col("bid").cast("string").alias("image_id"), F.col("cx").alias("x"), F.col("cy").alias("y")
+    )
+    parts = delineate.density_partitions_df(pts, 150.0, 300.0, 1e-5)
+    keyed = delineate.assign_partitions_df(
+        b.withColumn("x", F.col("cx")).withColumn("y", F.col("cy")), parts, 150.0
+    )
+    return b, keyed
+
+
+def _sorted_cells(df):
+    return df.sort_values(["cluster_id", "gx", "gy"]).reset_index(drop=True)
+
+
+@pytest.mark.parametrize("use_roads", [True, False], ids=["roads", "no_roads"])
+def test_mst_cluster_cells_matches_staged_stages(spark, keyed_scene, use_roads):
+    """The fused stage emits the rows of mst_cluster + cluster_cells for
+    the partitioned buildings and of cluster_cells over the AddSinglBdg
+    singletons, flagged apart."""
+    from ib_tool_spark import synth
+
+    b, keyed = keyed_scene
+    roads = synth.roads_df(spark).select("rid", "line") if use_roads else None
+    fused = delineate.mst_cluster_cells(keyed, roads=roads, cell_size=16.0).toPandas()
+
+    bp = keyed.filter(F.col("part_name").isNotNull()).withColumnRenamed("part_name", "part")
+    clustered = delineate.mst_cluster(bp, roads=roads)
+    main = delineate.cluster_cells(b.join(clustered.select("bid", "cluster_id"), "bid"), 25.0, 16.0)
+    singles = (
+        b.join(clustered.select("bid"), "bid", "left_anti")
+        .filter(F.col("area") > 300.0)
+        .select("bid", F.col("bid").alias("cluster_id"))
+    )
+    single = delineate.cluster_cells(b.join(singles, "bid"), 25.0, 16.0)
+
+    want_main = _sorted_cells(main.toPandas())
+    want_single = _sorted_cells(single.toPandas())
+    assert len(want_main) and len(want_single)
+    cols = ["gx", "gy", "cluster_id"]
+    pd.testing.assert_frame_equal(_sorted_cells(fused[~fused["single"]][cols]), want_main)
+    pd.testing.assert_frame_equal(_sorted_cells(fused[fused["single"]][cols]), want_single)
+
+
+def _block(x0, y0, w, h):
+    return {(x0 + x, y0 + y) for x in range(w) for y in range(h)}
+
+
+def test_label_and_close_paths_agree(spark):
+    """The driver path and the distributed path (cap=0) give the same
+    frame: holes of 1 and max_hole_cells cells close, one cell larger
+    stays open, and an island inside a closed hole keeps its own id
+    while its ring's fill covers it too."""
+    k = 9
+    a = _block(0, 0, 3, 3) - {(1, 1)}  # 1-cell hole
+    b = _block(10, 0, 5, 5) - _block(11, 1, 3, 3)  # k-cell hole
+    c = _block(20, 0, 7, 4) - _block(21, 1, 5, 2)  # (k + 1)-cell hole
+    d = _block(30, 0, 5, 5) - _block(31, 1, 3, 3)  # k-cell hole around an island
+    island = {(32, 2)}
+    df = spark.createDataFrame(sorted(a | b | c | d | island), "gx long, gy long")
+
+    def run(**kw):
+        out = delineate._label_and_close(df, max_hole_cells=k, **kw)
+        plan = out._jdf.queryExecution().toString()
+        got = out.toPandas().sort_values(["boundary_id", "gx", "gy"]).reset_index(drop=True)
+        return got, plan
+
+    driver, driver_plan = run()
+    dist, dist_plan = run(cap=0)
+    assert "LocalTableScan" in driver_plan and "FlatMapGroupsInPandas" not in driver_plan
+    assert "FlatMapGroupsInPandas" in dist_plan
+    pd.testing.assert_frame_equal(driver, dist)
+
+    by_id = {bid: set(zip(g["gx"], g["gy"])) for bid, g in driver.groupby("boundary_id")}
+    assert by_id == {
+        0: _block(0, 0, 3, 3),
+        1: _block(10, 0, 5, 5),
+        2: c,
+        3: _block(30, 0, 5, 5),
+        4: island,
+    }
