@@ -1765,6 +1765,37 @@ def _swd_oracle_sql(n: int = 500) -> str:
     """
 
 
+def _phash_near_dups_oracle_sql(parquet_glob: str, max_hamming: int, max_bucket: int = 256) -> str:
+    """imageops.phash_near_dups re-run in SQL over (image_id, phash)
+    parquet files: four 16-bit bands, buckets of more than
+    ``max_bucket`` members dropped (the query's cap, textops._cap_buckets'
+    rule: a (band, key) bucket counts its rows), then the Hamming
+    refine."""
+    return f"""
+      WITH p AS (
+        SELECT image_id, phash
+        FROM read_parquet('{parquet_glob}')
+      ),
+      banded AS (
+        SELECT image_id, phash, b.band, (phash >> (b.band * 16)) & 65535 AS key
+        FROM p CROSS JOIN (VALUES (0), (1), (2), (3)) b(band)
+      ),
+      kept AS (
+        SELECT banded.* FROM banded
+        JOIN (
+          SELECT band, key FROM banded GROUP BY band, key HAVING count(*) <= {max_bucket}
+        ) small USING (band, key)
+      ),
+      pairs AS (
+        SELECT DISTINCT a.image_id AS id_a, b.image_id AS id_b,
+               CAST(bit_count(xor(a.phash, b.phash)) AS INTEGER) AS hamming
+        FROM kept a JOIN kept b
+          ON a.band = b.band AND a.key = b.key AND a.image_id < b.image_id
+      )
+      SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {max_hamming}
+    """
+
+
 def oracle_sql() -> dict[str, str]:
     o: dict[str, str] = {}
 
@@ -2529,24 +2560,9 @@ def oracle_sql() -> dict[str, str]:
     # the checkout's .synth/, where synth.ensure_images_table writes)
     from ib_tool_spark.synth import CACHE_ROOT as _synth_root
 
-    _phash_path = os.path.join(_synth_root, "images_n4000")
-    o["img_phash_near_dups"] = f"""
-      WITH p AS (
-        SELECT image_id, phash
-        FROM read_parquet('{_phash_path}/*/*.parquet')
-      ),
-      banded AS (
-        SELECT image_id, phash, b.band, (phash >> (b.band * 16)) & 65535 AS key
-        FROM p CROSS JOIN (VALUES (0), (1), (2), (3)) b(band)
-      ),
-      pairs AS (
-        SELECT DISTINCT a.image_id AS id_a, b.image_id AS id_b,
-               CAST(bit_count(xor(a.phash, b.phash)) AS INTEGER) AS hamming
-        FROM banded a JOIN banded b
-          ON a.band = b.band AND a.key = b.key AND a.image_id < b.image_id
-      )
-      SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 1
-    """
+    o["img_phash_near_dups"] = _phash_near_dups_oracle_sql(
+        os.path.join(_synth_root, "images_n4000", "*", "*.parquet"), max_hamming=1
+    )
 
     # aud_features: literal table of the CLOSED-FORM feature values for
     # the single-sine synthesis — computed from the synthesis parameters

@@ -415,6 +415,22 @@ def _mst_cluster_kernel(
     return pd.DataFrame({"bid": bids, "cluster_id": cluster_ids, "part": part})
 
 
+# Kernel input rows (buildings) up to which _per_partition runs its
+# kernel on the driver: starting the Python workers of a grouped stage
+# costs more than a small scene's kernel, while a large one runs faster
+# on the workers' cores.  full_delineation, one fresh session per cell
+# (4 cores), cold / warm seconds, driver vs grouped placement:
+#
+#   per_cluster  kernel rows  driver            grouped
+#    30           1,653        9.4 / 3.4, 3.2   14.5 / 4.6, 3.6
+#   120           6,533       16.1 / 6.3, 6.1   16.4 / 7.2, 6.0
+#   480          25,811       26.0 / 17.4, 18.9 21.0 / 12.3, 11.2
+#
+# The driver wins at 1,653 rows, draws at 6,533 and loses at 25,811;
+# the cap sits just above the draw (PLANS.md, "full_delineation").
+DRIVER_KERNEL_CAP = 8_192
+
+
 def mst_cluster(
     buildings: DataFrame,
     part_col: str = "part",
@@ -422,6 +438,7 @@ def mst_cluster(
     max_edge: float = 120.0,
     roads: "pd.DataFrame | DataFrame | None" = None,
     road_cell: float = 1024.0,
+    cap: int = DRIVER_KERNEL_CAP,
 ) -> DataFrame:
     """Footprint aggregation: (bid, cluster_id, part), parallel across
     partitions, sequential-greedy within (same shape as the reference's
@@ -430,18 +447,20 @@ def mst_cluster(
     the Delaunay road-crossing prune with the short-dead-end exemption.
 
     Pass roads as a Spark DataFrame (rid, line) for the scale path: the
-    road network is subset to each partition's bbox by a coarse-cell
-    join and COGROUPED into the kernel — the reference's own locality
-    model (IB-Tool2.py:2428-2443) — so no task ever deserializes the
-    whole road table.  A pandas DataFrame still works for small scenes
-    (closure broadcast, the pre-round-3 behavior)."""
+    road network is subset to each partition's bbox — by a coarse-cell
+    join COGROUPED into the kernel, the reference's own locality model
+    (IB-Tool2.py:2428-2443), so no task ever deserializes the whole
+    road table.  A pandas DataFrame still works for small scenes
+    (closure broadcast, the pre-round-3 behavior).  Up to ``cap``
+    buildings (default DRIVER_KERNEL_CAP) the kernel runs on the driver
+    instead (_per_partition), with the same rows."""
     cols = ["bid", "rings", "cx", "cy", "area", part_col]
     prepared = buildings.select(*cols).withColumnRenamed(part_col, "part")
 
     def kernel(pdf: pd.DataFrame, segs: "np.ndarray | None") -> pd.DataFrame:
         return _mst_cluster_kernel(pdf, coverage_thresh, max_edge, segs)
 
-    return _per_partition(prepared, "part", roads, road_cell, kernel, CLUSTER_SCHEMA)
+    return _per_partition(prepared, "part", roads, road_cell, kernel, CLUSTER_SCHEMA, cap)
 
 
 def _per_partition(
@@ -451,31 +470,55 @@ def _per_partition(
     road_cell: float,
     kernel,
     schema: str,
+    cap: int,
 ) -> DataFrame:
     """Run ``kernel(pdf, road_segs)`` once per ``key`` group of
     ``prepared`` (bid, rings, cx, cy, area, part, …), where
     ``road_segs`` is the (M, 5) road-segment array near the group's
     partition or ``None``.
 
-    Spark ``roads`` are subset to each partition's centroid bbox by a
-    coarse-cell join and COGROUPED into the kernel — the reference's own
-    locality model (IB-Tool2.py:2428-2443) — so no task deserializes the
-    whole road table.  The road side is keyed by ``part``; a group whose
-    ``part`` is null gets no roads.  Pandas ``roads`` (small scenes) and
-    ``None`` run a plain grouped ``applyInPandas``, the segments riding
-    in the closure."""
-    if roads is None or isinstance(roads, pd.DataFrame):
-        road_segs = _road_segments_pdf(roads) if roads is not None else None
+    Spark ``roads`` give each group the segments whose bbox overlaps
+    its partition's centroid bbox (pad 0: pruning only tests crossings
+    against centroid-to-centroid edges, which live inside it), in
+    _sorted_segs_np order; a group whose key names no partition (null
+    ``part``, AddSinglBdg's ``single_<bid>``) gets none.  Pandas
+    ``roads`` (small scenes) give every group all segments; ``None``
+    gives none.
+
+    Two placements, split at ``cap`` prepared rows:
+
+    - at most ``cap``: one bounded Arrow fetch (ops.collect_bounded),
+      the kernel runs per group on the driver and the rows come back as
+      a ``LocalTableScan`` (ops.local_df), so no Python worker starts.
+      Spark roads near the buildings are fetched through the same
+      bound; more segments than ``cap`` fall back to the next path;
+    - otherwise a grouped ``applyInPandas`` — with Spark roads a
+      cogroup, the segments subset by a coarse-cell join
+      (_segments_for_keys) so no task deserializes the whole road
+      table.
+
+    Both give the same rows."""
+    spark_roads = isinstance(roads, DataFrame)
+    road_segs = _road_segments_pdf(roads) if isinstance(roads, pd.DataFrame) else None
+    table = ops.collect_bounded(prepared, cap)
+    if table is not None:
+        pdf = table.to_pandas()
+        near = _part_road_segments(pdf, roads, cap) if spark_roads else {}
+        if near is not None:
+            groups = pdf.groupby(key, sort=True, dropna=False)
+            out = [kernel(g, near.get(k, road_segs)) for k, g in groups]
+            rows = pd.concat(out, ignore_index=True) if out else []
+            return ops.local_df(prepared.sparkSession, rows, schema)
+
+    if not spark_roads:
 
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
             return kernel(pdf, road_segs)
 
         return _spread(prepared, key).groupBy(key).applyInPandas(run, schema)
 
-    # pad 0: pruning only tests crossings against centroid-to-centroid
-    # edges, which live inside the centroid bbox.  Fresh key attribute
-    # (`kpart`) so the cogroup's two sides don't share lineage (Spark
-    # flags the self-referencing join as ambiguous)
+    # fresh key attribute (`kpart`) so the cogroup's two sides don't
+    # share lineage (Spark flags the self-referencing join as ambiguous)
     keys_bbox = (
         prepared.filter(F.col("part").isNotNull())
         .select(F.col("part").alias("kpart"), "cx", "cy")
@@ -504,6 +547,42 @@ def _per_partition(
     )
 
 
+def _part_road_segments(pdf: pd.DataFrame, roads: DataFrame, cap: int) -> "dict | None":
+    """{part: (M, 5) road segments} for the driver placement: per
+    partition of ``pdf`` the distinct segments whose bbox overlaps its
+    centroid bbox, in _sorted_segs_np order (what the cogroup's
+    _segments_for_keys join delivers; partitions with none are left
+    out).  ``None`` when more than ``cap`` segments lie near the
+    buildings."""
+    bbox = pdf[pdf["part"].notna()].groupby("part")[["cx", "cy"]].agg(["min", "max"])
+    if not len(bbox):
+        return {}
+    # one bounded fetch of the segments that reach some partition's bbox
+    near_any = (
+        (F.least("x1", "x2") <= float(bbox["cx", "max"].max()))
+        & (F.greatest("x1", "x2") >= float(bbox["cx", "min"].min()))
+        & (F.least("y1", "y2") <= float(bbox["cy", "max"].max()))
+        & (F.greatest("y1", "y2") >= float(bbox["cy", "min"].min()))
+    )
+    table = ops.collect_bounded(road_segments_df(roads).filter(near_any), cap)
+    if table is None:
+        return None
+    segs = table.to_pandas().drop_duplicates()
+    sx, sy = segs[["x1", "x2"]].to_numpy(np.float64), segs[["y1", "y2"]].to_numpy(np.float64)
+    sminx, smaxx, sminy, smaxy = sx.min(axis=1), sx.max(axis=1), sy.min(axis=1), sy.max(axis=1)
+    out = {}
+    for part, b in bbox.iterrows():
+        hit = (
+            (sminx <= b["cx", "max"])
+            & (smaxx >= b["cx", "min"])
+            & (sminy <= b["cy", "max"])
+            & (smaxy >= b["cy", "min"])
+        )
+        if hit.any():
+            out[part] = _sorted_segs_np(segs[hit])
+    return out
+
+
 MST_CELLS_SCHEMA = "gx long, gy long, cluster_id long, single boolean"
 
 
@@ -512,10 +591,13 @@ def mst_cluster_cells(
     coverage_thresh: float = 12.0,
     roads: "pd.DataFrame | DataFrame | None" = None,
     cell_size: float = 8.0,
+    cap: int = DRIVER_KERNEL_CAP,
 ) -> DataFrame:
     """MST clustering, AddSinglBdg and the buffered dissolve in ONE
-    grouped Python stage, as the reference runs one partition's chain in
-    one process (IB-Tool2.py:2401-2517).
+    per-group kernel call, as the reference runs one partition's chain
+    in one process (IB-Tool2.py:2401-2517): on the driver up to ``cap``
+    buildings (default DRIVER_KERNEL_CAP), otherwise one grouped Python
+    stage (_per_partition).
 
     Input: buildings keyed by assign_partitions_df (``part_name`` null
     outside every dense partition).  Output (gx, gy, cluster_id, single):
@@ -547,21 +629,17 @@ def mst_cluster_cells(
         pdf = pdf.sort_values("bid").reset_index(drop=True)
         # a singleton group has one building: the kernel keeps its bid
         cid = _mst_cluster_kernel(pdf, coverage_thresh, 120.0, segs)["cluster_id"]
-        ids, blocks = [], []
-        for c, rings in pdf["rings"].groupby(cid.to_numpy()):
-            ids.append(c)
-            blocks.append(_buffer_cells_np(rings, 25.0, cell_size))
-        xy = np.concatenate(blocks)
+        cxy = _buffer_cells_np(pdf["rings"], 25.0, cell_size, labels=cid)
         return pd.DataFrame(
             {
-                "gx": xy[:, 0],
-                "gy": xy[:, 1],
-                "cluster_id": np.repeat(np.asarray(ids, np.int64), [len(b) for b in blocks]),
+                "gx": cxy[:, 1],
+                "gy": cxy[:, 2],
+                "cluster_id": cxy[:, 0],
                 "single": bool(pdf["part"].isna().iloc[0]),
             }
         )
 
-    return _per_partition(prepared, "grp", roads, 1024.0, kernel, MST_CELLS_SCHEMA)
+    return _per_partition(prepared, "grp", roads, 1024.0, kernel, MST_CELLS_SCHEMA, cap)
 
 
 # ---------------------------------------------------------------------------
@@ -601,34 +679,71 @@ def cluster_boundaries(
     return _spread(buildings_with_clusters, "cluster_id").groupBy("cluster_id").applyInPandas(run, BOUNDARY_SCHEMA)
 
 
-def _buffer_cells_np(rings, buffer_m: float, cell_size: float) -> np.ndarray:
+def _buffer_cells_np(rings, buffer_m: float, cell_size: float, labels=None) -> np.ndarray:
     """Sorted (N, 2) int64 cells of the union of the footprints' round
     buffers (one cluster's dissolve body; ``rings`` is a footprint
-    column as Arrow delivers it, outer ring first)."""
-    cells: set = set()
-    for rlist in rings:
-        ring = np.vstack([np.asarray(v, dtype=np.float64) for v in rlist[0]])
-        cells |= _round_buffer_cells(ring, buffer_m, cell_size)
-    return np.array(sorted(cells), dtype=np.int64).reshape(-1, 2)
+    column as Arrow delivers it, outer ring first): every cell whose
+    center lies within ``buffer_m`` of a footprint — the EXACT round
+    buffer at grid resolution (round 1 used bbox dilation, which
+    over-buffers rotated footprints: VERDICT missing #4).  With
+    ``labels`` (one integer per footprint) the union is taken per
+    label instead, as sorted (N, 3) rows (label, gx, gy): several
+    clusters' bodies in one call.
 
+    Vectorized over all footprints at once: each footprint's
+    ``buffer_m``-padded bbox contributes its candidate cells to one flat
+    grid, every candidate carries its footprint's edges (padded to the
+    longest ring, with a validity mask), and the distance test repeats
+    geom.point_polygon_distance's float operations — the even-odd test
+    of geom.points_in_polygon and the clamped nearest-on-segment of
+    geom.nearest_on_segments — so the cells equal a per-footprint
+    point_polygon_distance pass bit for bit."""
+    outer = [geom.coerce_ring(r[0]) for r in rings]
+    lab = [] if labels is None else [np.asarray(labels, dtype=np.int64)]
+    if not outer:
+        return np.empty((0, 2 + len(lab)), dtype=np.int64)
+    n_v = np.array([len(r) for r in outer])
+    k = np.arange(n_v.max())
+    valid = k[None, :] < n_v[:, None]  # (F, K) real edges
+    verts = np.zeros((len(outer), k.size, 2))
+    verts[valid] = np.concatenate(outer)
+    nxt = np.where(k[None, :] + 1 < n_v[:, None], k[None, :] + 1, 0)
+    ends = np.take_along_axis(verts, nxt[:, :, None], axis=1)
+    x1, y1, x2, y2 = verts[:, :, 0], verts[:, :, 1], ends[:, :, 0], ends[:, :, 1]
+    dx, dy = x2 - x1, y2 - y1
+    L2 = dx * dx + dy * dy
+    with np.errstate(divide="ignore", invalid="ignore"):
+        inv_dy = np.where(dy != 0.0, 1.0 / dy, 0.0)
 
-def _round_buffer_cells(ring: np.ndarray, buffer_m: float, cell_size: float) -> set:
-    """Cells whose center lies within ``buffer_m`` of the footprint —
-    the EXACT round buffer at grid resolution (round 1 used bbox
-    dilation, which over-buffers rotated footprints: VERDICT missing
-    #4).  Vectorized: padded-bbox candidate grid → point-to-polygon
-    distance."""
-    minx, miny = ring.min(axis=0) - buffer_m
-    maxx, maxy = ring.max(axis=0) + buffer_m
-    gx = np.arange(int(np.floor(minx / cell_size)), int(np.floor(maxx / cell_size)) + 1)
-    gy = np.arange(int(np.floor(miny / cell_size)), int(np.floor(maxy / cell_size)) + 1)
-    gxx, gyy = np.meshgrid(gx, gy)
-    gxx, gyy = gxx.ravel(), gyy.ravel()
-    d = geom.point_polygon_distance(
-        (gxx + 0.5) * cell_size, (gyy + 0.5) * cell_size, [ring]
-    )
-    near = d <= buffer_m
-    return set(zip(gxx[near].tolist(), gyy[near].tolist()))
+    # candidate grid: each footprint's padded-bbox cells, flattened
+    lo = np.stack([r.min(axis=0) for r in outer]) - buffer_m
+    hi = np.stack([r.max(axis=0) for r in outer]) + buffer_m
+    g0 = np.floor(lo / cell_size).astype(np.int64)
+    span = np.floor(hi / cell_size).astype(np.int64) - g0 + 1
+    count = span[:, 0] * span[:, 1]
+    foot = np.repeat(np.arange(len(outer)), count)
+    local = np.arange(foot.size) - np.repeat(np.cumsum(count) - count, count)
+    gx = g0[foot, 0] + local % span[foot, 0]
+    gy = g0[foot, 1] + local // span[foot, 0]
+
+    near = np.empty(foot.size, dtype=bool)
+    step = max(1, 500_000 // k.size)  # bounds the (batch, K) temporaries
+    for s in range(0, foot.size, step):
+        f = foot[s : s + step]
+        px = ((gx[s : s + step] + 0.5) * cell_size)[:, None]
+        py = ((gy[s : s + step] + 0.5) * cell_size)[:, None]
+        ok = valid[f]
+        ex1, ey1, ex2, ey2, edx, edy = x1[f], y1[f], x2[f], y2[f], dx[f], dy[f]
+        cond = (ey1 > py) != (ey2 > py)
+        xi = ex1 + (py - ey1) * edx * inv_dy[f]
+        inside = (np.sum(cond & (px < xi) & ok, axis=1) % 2).astype(bool)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            t = ((px - ex1) * edx + (py - ey1) * edy) / L2[f]
+        t = np.clip(np.where(np.isfinite(t), t, 0.0), 0.0, 1.0)
+        d2 = ((ex1 + t * edx) - px) ** 2 + ((ey1 + t * edy) - py) ** 2
+        dist = np.sqrt(np.where(ok, d2, np.inf).min(axis=1))
+        near[s : s + step] = np.where(inside, 0.0, dist) <= buffer_m
+    return np.unique(np.column_stack([*(a[foot[near]] for a in lab), gx[near], gy[near]]), axis=0)
 
 
 # ---------------------------------------------------------------------------
@@ -784,28 +899,54 @@ def _label_and_close(
     Two paths, split like ops.cell_components_df's at ``cap`` distinct
     cells:
 
-    - at most ``cap``: one bounded Arrow collect; geom.cell_components
-      labels and _fill_holes_np closes each component on the driver,
-      returned as a ``LocalTableScan`` (ops.local_df);
+    - at most ``cap``: _close_on_driver, returned as a
+      ``LocalTableScan`` (ops.local_df);
     - otherwise: the super-cell labelling, then one grouped fill per
-      boundary_id (_hole_close_grouped).
+      boundary_id (_close_grouped).
 
     Both give the same frame, since a component's fill reads only its
     own cells."""
     distinct = ops._distinct_cells(cells)
-    xy = ops.collect_bounded(distinct, cap)
-    if xy is None:
-        labeled = ops._super_cell_components(distinct).withColumnRenamed("comp", "boundary_id")
-        return _hole_close_grouped(labeled, max_hole_cells)
+    closed = _close_on_driver(distinct, max_hole_cells, cap)
+    if closed is None:
+        return _close_grouped(distinct, max_hole_cells)
+    return ops.local_df(cells.sparkSession, closed.tolist(), "gx long, gy long, boundary_id long")
+
+
+def _close_on_driver(distinct: DataFrame, max_hole_cells: int, cap: int) -> "np.ndarray | None":
+    """_label_and_close's driver path over distinct (gx, gy) rows: one
+    bounded Arrow collect, geom.cell_components labels and
+    _fill_holes_np closes each component; (n, 3) int64 rows (gx, gy,
+    boundary_id), or ``None`` above ``cap`` cells."""
+    table = ops.collect_bounded(distinct, cap)
+    if table is None:
+        return None
+    xy = ops.int64_columns(table)
     labels = geom.cell_components(xy[:, 0], xy[:, 1])
     order = np.argsort(labels, kind="stable")
-    out = []
+    out = [np.empty((0, 3), dtype=np.int64)]
     for idx in np.split(order, np.flatnonzero(np.diff(labels[order])) + 1):
         if idx.size:
             filled = _fill_holes_np(xy[idx, 0], xy[idx, 1], max_hole_cells)
             out.append(np.column_stack([filled, np.full(len(filled), labels[idx[0]])]))
-    rows = np.concatenate(out).tolist() if out else []
-    return ops.local_df(cells.sparkSession, rows, "gx long, gy long, boundary_id long")
+    return np.concatenate(out)
+
+
+def _close_grouped(distinct: DataFrame, max_hole_cells: int) -> DataFrame:
+    """_label_and_close's distributed path: the super-cell labelling,
+    then one grouped fill per boundary_id (_fill_holes_np)."""
+    labeled = ops._super_cell_components(distinct).withColumnRenamed("comp", "boundary_id")
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        bid = int(pdf["boundary_id"].iloc[0])
+        filled = _fill_holes_np(
+            pdf["gx"].to_numpy(np.int64), pdf["gy"].to_numpy(np.int64), max_hole_cells
+        )
+        return pd.DataFrame({"gx": filled[:, 0], "gy": filled[:, 1], "boundary_id": bid})
+
+    return _spread(labeled.select("gx", "gy", "boundary_id"), "boundary_id").groupBy("boundary_id").applyInPandas(
+        run, "gx long, gy long, boundary_id long"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1265,22 +1406,6 @@ def cluster_cells(
     return _spread(buildings_with_clusters, "cluster_id").groupBy("cluster_id").applyInPandas(run, CLUSTER_CELLS_SCHEMA)
 
 
-def _hole_close_grouped(cells: DataFrame, max_hole_cells: int = 64) -> DataFrame:
-    """hole_close applied per boundary_id via applyInPandas (vectorized
-    dense-grid flood per group — see _fill_holes_np)."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        bid = int(pdf["boundary_id"].iloc[0])
-        filled = _fill_holes_np(
-            pdf["gx"].to_numpy(np.int64), pdf["gy"].to_numpy(np.int64), max_hole_cells
-        )
-        return pd.DataFrame({"gx": filled[:, 0], "gy": filled[:, 1], "boundary_id": bid})
-
-    return _spread(cells.select("gx", "gy", "boundary_id"), "boundary_id").groupBy("boundary_id").applyInPandas(
-        run, "gx long, gy long, boundary_id long"
-    )
-
-
 def full_delineation(
     spark,
     per_cluster: int = 30,
@@ -1289,6 +1414,7 @@ def full_delineation(
     min_bdg_count: int = 5,
     use_roads: bool = True,
     use_edge_catch: bool = False,
+    cap: int = DRIVER_KERNEL_CAP,
 ) -> DataFrame:
     """End-to-end settlement delineation over the synthetic scene —
     the reference's per-partition dataflow (IB-Tool2.py:2401-2517) plus
@@ -1299,21 +1425,40 @@ def full_delineation(
     buffered dissolve to cells → PatchRemove → [EdgeCatch] → GapFix
     stitch → HoleClose → per-boundary summary.
 
-    One grouped Python stage runs: mst_cluster_cells, which clusters each
-    partition (cogrouped with its roads), buffers every cluster to cells
-    and makes the AddSinglBdg singletons in the same call.  PatchRemove
-    and EdgeCatch are JVM joins.  GapFix and HoleClose run in
-    _label_and_close: on the driver when the stitched cells number at
-    most ops.DRIVER_LABEL_CAP, otherwise through the super-cell
-    labelling and a second grouped stage.
+    Stages, all JVM except the per-group kernel of mst_cluster_cells:
 
-    Two materialisation points:
+    1. the buildings and roads are driver-built ``LocalTableScan``s;
+       density partitioning labels its dense cells with
+       ops.cell_components_df (on the driver up to
+       ops.DRIVER_LABEL_CAP cells) and assign_partitions_df keys every
+       building by broadcast join;
+    2. mst_cluster_cells clusters each partition, buffers every cluster
+       to cells and makes the AddSinglBdg singletons, in one kernel
+       call per group.  Up to ``cap`` kernel input rows (default
+       DRIVER_KERNEL_CAP) the kernel runs on the driver: the keyed
+       buildings and the road segments near them are fetched by one
+       bounded Arrow collect each, and the cells come back as a
+       ``LocalTableScan``, so no Python worker starts in the whole
+       call.  Beyond it the kernel runs in one grouped Python stage,
+       cogrouped with each partition's roads;
+    3. PatchRemove and EdgeCatch are JVM joins;
+    4. GapFix and HoleClose, as in _label_and_close: on the driver when
+       the stitched cells number at most ops.DRIVER_LABEL_CAP, and then
+       the per-boundary counts are built there too; otherwise through
+       the super-cell labelling, a grouped Python stage and a Spark
+       aggregation.
 
-    - the mst_cluster_cells output, an eager ``localCheckpoint`` read by
-      PatchRemove's stats join, its ``left_semi`` join and the
-      singletons' pass-through;
-    - the stitched cell set, fetched once by _label_and_close's bounded
-      Arrow collect (the summary then scans a driver-built table).
+    Materialisation points:
+
+    - driver placement: the two bounded fetches of stage 2 (the cells
+      are then a driver-built table, read by PatchRemove's stats join,
+      its ``left_semi`` join and the singletons' pass-through without
+      recomputation);
+    - grouped placement: an eager ``localCheckpoint`` of the
+      mst_cluster_cells output, for the same three readers;
+    - either way, the stitched cell set, fetched once by
+      _close_on_driver's bounded Arrow collect (below its cap the
+      summary is then a driver-built table).
     """
     from . import synth
     from .config import filter_predicate
@@ -1332,8 +1477,10 @@ def full_delineation(
 
     roads = synth.roads_df(spark).select("rid", "line") if use_roads else None
     clustered = mst_cluster_cells(
-        keyed, coverage_thresh=coverage_thresh, roads=roads, cell_size=cell_size
-    ).localCheckpoint(eager=True)
+        keyed, coverage_thresh=coverage_thresh, roads=roads, cell_size=cell_size, cap=cap
+    )
+    if not clustered.isLocal():
+        clustered = clustered.localCheckpoint(eager=True)
 
     # PatchRemove applies to the aggregated clusters; AddSinglBdg
     # singletons bypass it (they are kept by construction, mirroring
@@ -1345,15 +1492,20 @@ def full_delineation(
     cells = cells.unionByName(single)
     if use_edge_catch and roads is not None:
         cells = edge_catch(cells, roads, cell_size)
-    closed = _label_and_close(cells)
-    return (
-        closed.groupBy("boundary_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            (F.count(F.lit(1)).cast("double") * F.lit(cell_size * cell_size)).alias("area"),
+    # GapFix + HoleClose (_label_and_close), counted per boundary
+    distinct = ops._distinct_cells(cells)
+    closed = _close_on_driver(distinct, 64, ops.DRIVER_LABEL_CAP)
+    if closed is None:
+        counts = _close_grouped(distinct, 64).groupBy("boundary_id").agg(
+            F.count(F.lit(1)).alias("n_cells")
         )
-        .orderBy("boundary_id")
-    )
+    else:
+        ids, n = np.unique(closed[:, 2], return_counts=True)
+        counts = ops.local_df(
+            spark, pd.DataFrame({"boundary_id": ids, "n_cells": n}), "boundary_id long, n_cells long"
+        )
+    area = F.col("n_cells").cast("double") * F.lit(cell_size * cell_size)
+    return counts.withColumn("area", area).orderBy("boundary_id")
 
 
 # ---------------------------------------------------------------------------

@@ -38,38 +38,47 @@ from .geom import cover_cells, points_in_polygon, rings_bbox
 
 
 def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """A small relation built on the driver from ``rows`` (tuples of
-    Python values in ``schema`` order; ``None`` is NULL), scanned as a
-    JVM ``LocalTableScan``.
+    """A small relation built on the driver, scanned as a JVM
+    ``LocalTableScan``.  ``rows`` is either a list of tuples of Python
+    values in ``schema`` order (``None`` is NULL) or a pandas DataFrame
+    holding the schema's columns by name.
 
-    ``createDataFrame`` over a Python list plans a ``Scan ExistingRDD``
-    (``parallelize`` + a Python identity map), so every scan of the
-    result starts Python tasks; a ``pyarrow.Table`` is sent to the JVM
-    once, with Arrow on or off.  Columns are built with the schema's
-    own Arrow types, so NULL slots keep the declared type (pandas would
-    turn a nullable ``long`` into float64)."""
+    ``createDataFrame`` over a Python list or a pandas frame with Arrow
+    off plans a ``Scan ExistingRDD`` (``parallelize`` + a Python identity
+    map), so every scan of the result starts Python tasks; a
+    ``pyarrow.Table`` is sent to the JVM once, with Arrow on or off.
+    Columns are built with the schema's own Arrow types, so NULL slots
+    keep the declared type (pandas would turn a nullable ``long`` into
+    float64)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     struct = T.StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(struct)
-    cols = list(zip(*rows)) if rows else [[] for _ in arrow_schema]
+    if isinstance(rows, pd.DataFrame):
+        cols = [rows[f.name] for f in arrow_schema]
+    else:
+        cols = list(zip(*rows)) if rows else [[] for _ in arrow_schema]
     table = pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
     )
     return spark.createDataFrame(table, struct)
 
 
-def collect_bounded(df: DataFrame, cap: int) -> "np.ndarray | None":
-    """``df``'s integer columns as an (n, k) int64 array when it has at
-    most ``cap`` rows, else ``None``.
+def collect_bounded(df: DataFrame, cap: int) -> "pa.Table | None":
+    """``df`` as one ``pyarrow.Table`` when it has at most ``cap`` rows,
+    else ``None``.
 
     One ``limit(cap + 1).toArrow()`` action: the rows cross as Arrow
-    batches (with Arrow on or off) and become numpy columns without
-    building a Python ``Row`` per record."""
+    batches (with Arrow on or off), without building a Python ``Row``
+    per record.  Integer-column callers read the table through
+    int64_columns; delineate's driver kernels convert it to pandas."""
     table = df.limit(cap + 1).toArrow()
-    if table.num_rows > cap:
-        return None
+    return None if table.num_rows > cap else table
+
+
+def int64_columns(table: "pa.Table") -> np.ndarray:
+    """A table of integer columns as an (n, k) int64 array."""
     return np.column_stack([c.to_numpy().astype(np.int64, copy=False) for c in table.columns])
 
 
@@ -91,7 +100,8 @@ def with_geocode(df: DataFrame, scene=None) -> DataFrame:
 
     scene = scene or S.default_scene()
     spark = df.sparkSession
-    lookup = spark.createDataFrame(
+    lookup = local_df(
+        spark,
         pd.DataFrame(
             {
                 "__slot": np.arange(S.LOOKUP_LEN, dtype=np.int64),
@@ -100,7 +110,8 @@ def with_geocode(df: DataFrame, scene=None) -> DataFrame:
         ),
         "__slot long, __k long",
     )
-    clusters = spark.createDataFrame(
+    clusters = local_df(
+        spark,
         pd.DataFrame(
             {
                 "__k": np.arange(len(scene.cx), dtype=np.int64),
@@ -1080,10 +1091,11 @@ def cell_components_df(
       component-adjacency pairs.
     """
     distinct = _distinct_cells(cells)
-    xy = collect_bounded(distinct, cap)
-    if xy is not None:
+    table = collect_bounded(distinct, cap)
+    if table is not None:
         from . import geom
 
+        xy = int64_columns(table)
         labels = geom.cell_components(xy[:, 0], xy[:, 1])
         rows = np.column_stack([xy, labels]).tolist()
         return local_df(cells.sparkSession, rows, "gx long, gy long, comp long")
@@ -1315,8 +1327,9 @@ def edge_components_df(
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    head = collect_bounded(pairs, cap)
-    if head is not None:
+    table = collect_bounded(pairs, cap)
+    if table is not None:
+        head = int64_columns(table)
         parent: dict[int, int] = {}
 
         def find(k: int) -> int:

@@ -673,7 +673,9 @@ BUILDINGS_SCHEMA = (
 
 
 def buildings_df(spark, scene: Scene | None = None, per_cluster: int = 40):
-    return spark.createDataFrame(buildings_pdf(scene, per_cluster), BUILDINGS_SCHEMA)
+    from .ops import local_df  # ops imports this module
+
+    return local_df(spark, buildings_pdf(scene, per_cluster), BUILDINGS_SCHEMA)
 
 
 def buildings_sf_per_cluster(sf_dir: str) -> int:

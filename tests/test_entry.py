@@ -87,3 +87,37 @@ def test_near_dup_jaccard_skips_null_text(spark, tmp_path):
     assert len(want) > 0
     problems = compare(name, got, want)
     assert not problems, problems
+
+
+def test_phash_oracle_applies_the_bucket_cap(spark, tmp_path):
+    """The img_phash_near_dups oracle drops (band, key) buckets above 256
+    members, as imageops.phash_near_dups does: a 257-member bucket
+    yields no pairs in either, a 256-member one all of its pairs."""
+    import numpy as np
+    import pandas as pd
+
+    from ib_tool_spark import imageops
+
+    def phash(b0, b1, b2, b3):
+        return np.array((b3 << 48) | (b2 << 32) | (b1 << 16) | b0, dtype=np.uint64).astype(np.int64)
+
+    over = np.arange(257)  # one shared band-0 key, every other band unique
+    full = np.arange(256)  # one shared band-1 key; band 3 sets the sign bit
+    pdf = pd.DataFrame(
+        {
+            "image_id": [f"img_{i:06d}" for i in range(len(over) + len(full))],
+            "phash": np.concatenate(
+                [
+                    phash(0xBEEF, over + 1, over + 1000, over + 5000),
+                    phash(full + 20000, 0x7777, full + 30000, full + 40000),
+                ]
+            ),
+        }
+    )
+    (tmp_path / "imgs" / "part").mkdir(parents=True)
+    pdf.to_parquet(tmp_path / "imgs" / "part" / "0.parquet", index=False)
+    sql = entrymod._phash_near_dups_oracle_sql(str(tmp_path / "imgs" / "*" / "*.parquet"), 64)
+    want = duckdb.sql(sql).df()
+    got = imageops.phash_near_dups(spark.createDataFrame(pdf), max_hamming=64).toPandas()
+    assert len(want) == 256 * 255 // 2
+    assert not compare("img_phash_near_dups", got, want)

@@ -183,6 +183,21 @@ def test_driver_built_relations_scan_locally(spark, arrow):
     comps = ops.edge_components_df(edges)  # small path: a new driver-built table
     _assert_local_scan(comps)
     assert sorted(map(tuple, comps.collect())) == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
+    buildings = synth.buildings_df(spark, per_cluster=2)
+    _assert_local_scan(buildings)
+    assert buildings.schema.simpleString() == (
+        "struct<bid:bigint,rings:array<array<array<double>>>,cx:double,cy:double,"
+        "area:double,fkt:string,true_cluster:bigint>"
+    )
+    assert buildings.count() == len(synth.buildings_pdf(per_cluster=2))
+    # with_geocode's two lookup tables are its only scans besides the input
+    ids = spark.range(50).select(F.format_string("img_%012d", "id").alias("image_id"))
+    geo = ops.with_geocode(ids)
+    p = geo._jdf.queryExecution().toString()
+    assert p.count("LocalTableScan") >= 2 and "Scan ExistingRDD" not in p, p[:3000]
+    got = geo.orderBy("image_id").toPandas()
+    x, y = synth.geocode_np(got["image_id"].tolist())
+    assert (got["x"].to_numpy() == x).all() and (got["y"].to_numpy() == y).all()
 
 
 def test_cell_components_small_path_scans_locally(spark, arrow):
@@ -243,20 +258,28 @@ def _sql_status(spark):
 
 
 def test_full_delineation_runs_one_grouped_python_stage(spark, arrow):
-    """Clustering, AddSinglBdg and the buffered dissolve share one
-    cogroup stage, and the stitched cells are labeled and closed on the
-    driver: across every action of one call (the final collect
-    included), exactly one grouped Python operator runs."""
-    store, conv = _sql_status(spark)
-    before = {e.executionId() for e in conv.asJava(store.executionsList())}
-    delineate.full_delineation(spark, per_cluster=20).collect()
-    store, conv = _sql_status(spark)
-    # physical-plan node names of every new execution (adaptive final plans)
-    names = [
-        n.name()
-        for e in conv.asJava(store.executionsList())
-        if e.executionId() not in before
-        for n in conv.asJava(store.planGraph(e.executionId()).allNodes())
-    ]
+    """Across every action of one call (the final collect included):
+    at the default cap the per-partition kernel and the stitch run on
+    the driver, so no Python plan node runs at all; with the kernel cap
+    forced to 0, clustering, AddSinglBdg and the buffered dissolve share
+    exactly one cogroup stage."""
+
+    def plan_nodes(**kw):
+        store, conv = _sql_status(spark)
+        before = {e.executionId() for e in conv.asJava(store.executionsList())}
+        delineate.full_delineation(spark, per_cluster=20, **kw).collect()
+        store, conv = _sql_status(spark)
+        # physical-plan node names of every new execution (adaptive final plans)
+        return [
+            n.name()
+            for e in conv.asJava(store.executionsList())
+            if e.executionId() not in before
+            for n in conv.asJava(store.planGraph(e.executionId()).allNodes())
+        ]
+
+    names = plan_nodes()
+    python = [n for n in names if "InPandas" in n or "EvalPython" in n or "ExistingRDD" in n]
+    assert not python, names
+    names = plan_nodes(cap=0)
     assert names.count("FlatMapCoGroupsInPandas") == 1, names
     assert "FlatMapGroupsInPandas" not in names, names

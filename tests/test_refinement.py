@@ -182,3 +182,148 @@ def test_label_and_close_paths_agree(spark):
         3: _block(30, 0, 5, 5),
         4: island,
     }
+
+
+def _scene_subset(spark, keyed_scene):
+    """The keyed buildings of eight settlements (about a sixth of the
+    scene), so the grouped placement stays quick."""
+    _b, keyed = keyed_scene
+    return keyed.filter(F.col("true_cluster") < 8)
+
+
+def _road_variants(spark):
+    from ib_tool_spark import synth
+
+    return {
+        "spark": synth.roads_df(spark).select("rid", "line"),
+        "pandas": synth.roads_pdf()[["rid", "line"]],
+        "none": None,
+    }
+
+
+def _placement(df):
+    plan = df._jdf.queryExecution().toString()
+    if df.isLocal():
+        assert "PythonUDF" not in plan and "InPandas" not in plan, plan[:2000]
+        return "driver"
+    assert "FlatMapCoGroupsInPandas" in plan or "FlatMapGroupsInPandas" in plan, plan[:2000]
+    return "grouped"
+
+
+@pytest.mark.parametrize("roads_kind", ["spark", "pandas", "none"])
+def test_per_partition_placements_agree(spark, keyed_scene, roads_kind):
+    """mst_cluster and mst_cluster_cells return the same frame on the
+    driver (default cap) and in the grouped stage (cap=0), with Spark
+    roads, pandas roads and none."""
+    keyed = _scene_subset(spark, keyed_scene)
+    roads = _road_variants(spark)[roads_kind]
+    bp = keyed.filter(F.col("part_name").isNotNull()).withColumnRenamed("part_name", "part")
+    cases = [
+        (lambda **kw: delineate.mst_cluster(bp, roads=roads, **kw), ["part", "bid"]),
+        (
+            lambda **kw: delineate.mst_cluster_cells(keyed, roads=roads, cell_size=16.0, **kw),
+            ["cluster_id", "gx", "gy"],
+        ),
+    ]
+    for fn, order in cases:
+        driver, grouped = fn(), fn(cap=0)
+        assert (_placement(driver), _placement(grouped)) == ("driver", "grouped")
+        want = grouped.toPandas().sort_values(order).reset_index(drop=True)
+        got = driver.toPandas().sort_values(order).reset_index(drop=True)
+        assert len(want)
+        pd.testing.assert_frame_equal(got, want)
+
+
+def test_per_partition_cap_boundary(spark, keyed_scene):
+    """n kernel input rows run on the driver at cap = n and in the
+    grouped stage at cap = n - 1, with the same rows.  Spark roads are
+    fetched under the same cap: with more segments near the buildings
+    than the cap allows, the grouped stage runs, with the same rows."""
+    from ib_tool_spark import synth
+
+    keyed = _scene_subset(spark, keyed_scene).filter(F.col("true_cluster") < 3)
+    n = keyed.filter(F.col("part_name").isNotNull() | (F.col("area") > 300.0)).count()
+    order = ["cluster_id", "gx", "gy"]
+
+    def cells(roads, cap):
+        out = delineate.mst_cluster_cells(keyed, roads=roads, cell_size=16.0, cap=cap)
+        return _placement(out), out.toPandas().sort_values(order).reset_index(drop=True)
+
+    for roads in (None, synth.roads_pdf()[["rid", "line"]]):
+        (p_at, at_cap), (p_above, above) = cells(roads, n), cells(roads, n - 1)
+        assert (p_at, p_above) == ("driver", "grouped")
+        pd.testing.assert_frame_equal(at_cap, above)
+
+    # the n buildings fit, so the road fetch is what exceeds the cap
+    roads = synth.roads_df(spark).select("rid", "line")
+    (p_at, at_cap), (p_grouped, grouped) = cells(roads, n), cells(roads, 0)
+    assert (p_at, p_grouped) == ("grouped", "grouped")
+    pd.testing.assert_frame_equal(at_cap, grouped)
+
+
+def _round_buffer_cells(ring: np.ndarray, buffer_m: float, cell_size: float) -> set:
+    """Reference for delineate._buffer_cells_np, one footprint at a
+    time: cells of the footprint's padded bbox whose center lies within
+    ``buffer_m`` of it (geom.point_polygon_distance)."""
+    from ib_tool_spark import geom
+
+    minx, miny = ring.min(axis=0) - buffer_m
+    maxx, maxy = ring.max(axis=0) + buffer_m
+    gx = np.arange(int(np.floor(minx / cell_size)), int(np.floor(maxx / cell_size)) + 1)
+    gy = np.arange(int(np.floor(miny / cell_size)), int(np.floor(maxy / cell_size)) + 1)
+    gxx, gyy = np.meshgrid(gx, gy)
+    gxx, gyy = gxx.ravel(), gyy.ravel()
+    d = geom.point_polygon_distance((gxx + 0.5) * cell_size, (gyy + 0.5) * cell_size, [ring])
+    near = d <= buffer_m
+    return set(zip(gxx[near].tolist(), gyy[near].tolist()))
+
+
+def _reference_cells(rings, buffer_m, cell_size) -> np.ndarray:
+    cells: set = set()
+    for rlist in rings:
+        ring = np.vstack([np.asarray(v, dtype=np.float64) for v in rlist[0]])
+        cells |= _round_buffer_cells(ring, buffer_m, cell_size)
+    return np.array(sorted(cells), dtype=np.int64).reshape(-1, 2)
+
+
+def test_buffer_cells_match_per_footprint_reference():
+    """The vectorized buffer kernel equals the per-footprint reference
+    on every settlement of the scene and on its AddSinglBdg halls, on
+    seeded rotated rectangles with negative coordinates and on rings
+    of mixed vertex counts; with labels it equals one call per label."""
+    from ib_tool_spark import geom, synth
+
+    pdf = synth.buildings_pdf(per_cluster=20)
+    groups = [g["rings"] for _k, g in pdf.groupby("true_cluster")]
+    groups += [pdf["rings"].iloc[i : i + 1] for i in pdf.index[pdf["area"] > 300.0][:20]]
+    rng = np.random.RandomState(17)
+    for _ in range(60):
+        rings = []
+        for _j in range(rng.randint(1, 6)):
+            cx, cy = rng.uniform(-900.0, 40.0, size=2)
+            if rng.uniform() < 0.3:  # a triangle or pentagon among rectangles
+                k = rng.choice([3, 5])
+                ang = np.sort(rng.uniform(0.0, 2 * np.pi, k))
+                ring = np.stack([cx + 12 * np.cos(ang), cy + 9 * np.sin(ang)], axis=1)
+            else:
+                ring = geom.rect_ring(cx, cy, *rng.uniform(1.0, 40.0, 2), rng.uniform(0, np.pi))
+            rings.append([ring.tolist()])
+        groups.append(rings)
+    for i, rings in enumerate(groups):
+        for buffer_m, cell_size in ((25.0, 16.0), (25.0, 8.0), (7.3, 3.0)):
+            want = _reference_cells(rings, buffer_m, cell_size)
+            got = delineate._buffer_cells_np(rings, buffer_m, cell_size)
+            assert got.dtype == np.int64 and np.array_equal(got, want), (i, buffer_m, cell_size)
+
+    rings = list(pdf["rings"].iloc[:40])
+    labels = np.arange(40) % 3 + 100
+    got = delineate._buffer_cells_np(rings, 25.0, 16.0, labels=labels)
+    want = np.concatenate(
+        [
+            np.column_stack([np.full(len(c), lab), c])
+            for lab in (100, 101, 102)
+            for c in [delineate._buffer_cells_np([r for r, l in zip(rings, labels) if l == lab], 25.0, 16.0)]
+        ]
+    )
+    assert np.array_equal(got, want)
+    assert delineate._buffer_cells_np([], 25.0, 16.0).shape == (0, 2)
