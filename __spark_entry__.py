@@ -2111,7 +2111,7 @@ def oracle_sql() -> dict[str, str]:
 
     from ib_tool_spark import codecs as _codecs
     from ib_tool_spark import synth as _synth
-    from ib_tool_spark.delineate import _road_segments_pdf as _rsegs
+    from ib_tool_spark.delineate import _road_segments_np as _rsegs
 
     # g_tile_clip_exact: Σ exact per-tile clip areas per sid must equal
     # the polygon's ring shoelace area (outer minus holes)

@@ -145,7 +145,7 @@ def thiessen_partitions(
     spark = points.sparkSession
     schema = "part string, rings array<array<array<double>>>, area double"
     if dense.empty:
-        return spark.createDataFrame([], schema)
+        return ops.local_df(spark, [], schema)
     sites = np.stack(
         [
             (dense["gx"].to_numpy(np.float64) + 0.5) * cell_size,
@@ -182,7 +182,7 @@ def thiessen_partitions(
         )
         for k, (_key, f) in enumerate(keyed)
     ]
-    return spark.createDataFrame(rows, schema)
+    return ops.local_df(spark, rows, schema)
 
 
 def partition_outlines(parts: DataFrame, cell_size: float = 150.0) -> DataFrame:
@@ -222,8 +222,7 @@ def assign_partitions(
     points: DataFrame, parts: pd.DataFrame, cell_size: float = 150.0
 ) -> DataFrame:
     """assign_partitions_df with a pandas partition map (test-scale)."""
-    spark = points.sparkSession
-    part_df = spark.createDataFrame(parts, "gx long, gy long, part_name string")
+    part_df = ops.local_df(points.sparkSession, parts, "gx long, gy long, part_name string")
     return assign_partitions_df(points, part_df, cell_size)
 
 
@@ -365,13 +364,17 @@ def _mst_cluster_kernel(
     order = np.lexsort((mst[:, 1], mst[:, 0], mst[:, 2]))
 
     segs_by_i = [geom.ring_segments(r) for r in rings]
+    # main_angle_rect's rounded angles are per segment: compute each
+    # footprint's once, not per candidate group
+    ang_by_i = [np.round(geom.segment_angles_deg(sg), 1) for sg in segs_by_i]
     member_group: dict[int, int] = {}
-    group_members: dict[int, list[int]] = {}
+    # per group, in member order: stacked segments, their angles and the
+    # running footprint-area sum
+    stacks: dict[int, tuple[np.ndarray, np.ndarray, float]] = {}
     gnum = 0
 
-    def rect_ratio(cand: list[int], area_sum: float) -> float:
-        segs = np.vstack([segs_by_i[i] for i in cand])
-        _c, rect_area = geom.main_angle_rect(segs)
+    def rect_ratio(segs: np.ndarray, angles: np.ndarray, area_sum: float) -> float:
+        _c, rect_area = geom.main_angle_rect(segs, angles)
         if rect_area is None:
             return 0.0  # ≤4 segments: reference emits no rectangle
         return area_sum / rect_area * 100.0
@@ -388,18 +391,26 @@ def _mst_cluster_kernel(
             # reference extends the member list unconditionally — a
             # footprint already in the group is counted twice, exactly
             # as IB-Tool2.py:1578-1580 does
-            cand = group_members[gid] + [new]
-            ratio = rect_ratio(cand, float(sum(areas[i] for i in cand)))
-            if ratio > coverage_thresh:
-                group_members[gid] = cand
+            segs, angles, area_sum = stacks[gid]
+            cand = (
+                np.vstack([segs, segs_by_i[new]]),
+                np.concatenate([angles, ang_by_i[new]]),
+                area_sum + float(areas[new]),
+            )
+            if rect_ratio(*cand) > coverage_thresh:
+                stacks[gid] = cand
                 member_group[new] = gid
                 groupestatus = True
         if not grouped or not groupestatus:
-            ratio = rect_ratio([a, b], float(areas[a] + areas[b]))
-            if ratio > coverage_thresh:
+            cand = (
+                np.vstack([segs_by_i[a], segs_by_i[b]]),
+                np.concatenate([ang_by_i[a], ang_by_i[b]]),
+                float(areas[a] + areas[b]),
+            )
+            if rect_ratio(*cand) > coverage_thresh:
                 member_group[a] = gnum
                 member_group[b] = gnum
-                group_members[gnum] = [a, b]
+                stacks[gnum] = cand
                 gnum += 1
 
     # final assignment: member_group (last write wins, like the
@@ -488,29 +499,53 @@ def _per_partition(
     Two placements, split at ``cap`` prepared rows:
 
     - at most ``cap``: one bounded Arrow fetch (ops.collect_bounded),
-      the kernel runs per group on the driver and the rows come back as
-      a ``LocalTableScan`` (ops.local_df), so no Python worker starts.
-      Spark roads near the buildings are fetched through the same
-      bound; more segments than ``cap`` fall back to the next path;
-    - otherwise a grouped ``applyInPandas`` — with Spark roads a
-      cogroup, the segments subset by a coarse-cell join
-      (_segments_for_keys) so no task deserializes the whole road
-      table.
+      the kernel runs per group on the driver (_kernel_on_driver) and
+      the rows come back as a ``LocalTableScan`` (ops.local_df), so no
+      Python worker starts;
+    - otherwise, or when the roads near the buildings exceed ``cap``,
+      one grouped Python stage (_per_partition_grouped).
 
     Both give the same rows."""
-    spark_roads = isinstance(roads, DataFrame)
-    road_segs = _road_segments_pdf(roads) if isinstance(roads, pd.DataFrame) else None
     table = ops.collect_bounded(prepared, cap)
     if table is not None:
-        pdf = table.to_pandas()
-        near = _part_road_segments(pdf, roads, cap) if spark_roads else {}
-        if near is not None:
-            groups = pdf.groupby(key, sort=True, dropna=False)
-            out = [kernel(g, near.get(k, road_segs)) for k, g in groups]
-            rows = pd.concat(out, ignore_index=True) if out else []
+        rows = _kernel_on_driver(table.to_pandas(), key, roads, kernel, cap)
+        if rows is not None:
             return ops.local_df(prepared.sparkSession, rows, schema)
+    return _per_partition_grouped(prepared, key, roads, road_cell, kernel, schema)
 
-    if not spark_roads:
+
+def _kernel_on_driver(
+    pdf: pd.DataFrame, key: str, roads: "pd.DataFrame | DataFrame | None", kernel, cap: int
+) -> "pd.DataFrame | list | None":
+    """_per_partition's driver placement over the fetched rows: the
+    kernel's rows of every ``key`` group (``[]`` when there are none),
+    or ``None`` when the Spark roads near the buildings exceed ``cap``
+    (_part_road_segments)."""
+    if isinstance(roads, DataFrame):
+        near, road_segs = _part_road_segments(pdf, roads, cap), None
+        if near is None:
+            return None
+    else:
+        near = {}
+        road_segs = _road_segments_np(roads) if roads is not None else None
+    out = [kernel(g, near.get(k, road_segs)) for k, g in pdf.groupby(key, sort=True, dropna=False)]
+    return pd.concat(out, ignore_index=True) if out else []
+
+
+def _per_partition_grouped(
+    prepared: DataFrame,
+    key: str,
+    roads: "pd.DataFrame | DataFrame | None",
+    road_cell: float,
+    kernel,
+    schema: str,
+) -> DataFrame:
+    """_per_partition's grouped placement: a grouped ``applyInPandas``,
+    with Spark roads a cogroup whose segments are subset by a
+    coarse-cell join (_segments_for_keys), so no task deserializes the
+    whole road table."""
+    if not isinstance(roads, DataFrame):
+        road_segs = _road_segments_np(roads) if roads is not None else None
 
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
             return kernel(pdf, road_segs)
@@ -552,34 +587,47 @@ def _part_road_segments(pdf: pd.DataFrame, roads: DataFrame, cap: int) -> "dict 
     partition of ``pdf`` the distinct segments whose bbox overlaps its
     centroid bbox, in _sorted_segs_np order (what the cogroup's
     _segments_for_keys join delivers; partitions with none are left
-    out).  ``None`` when more than ``cap`` segments lie near the
-    buildings."""
+    out).
+
+    One bounded fetch of the raw (rid, line) rows whose bbox reaches
+    the partitions' joint centroid bbox, exploded on the driver by
+    _road_segments_np (whole lines, so ``L`` is each road's full
+    length).  ``None`` when more than ``cap`` lines, or more than
+    ``cap`` of their segments, reach that bbox."""
     bbox = pdf[pdf["part"].notna()].groupby("part")[["cx", "cy"]].agg(["min", "max"])
     if not len(bbox):
         return {}
-    # one bounded fetch of the segments that reach some partition's bbox
+    x0, x1 = float(bbox["cx", "min"].min()), float(bbox["cx", "max"].max())
+    y0, y1 = float(bbox["cy", "min"].min()), float(bbox["cy", "max"].max())
+    xs = F.transform("line", lambda p: F.element_at(p, 1))
+    ys = F.transform("line", lambda p: F.element_at(p, 2))
     near_any = (
-        (F.least("x1", "x2") <= float(bbox["cx", "max"].max()))
-        & (F.greatest("x1", "x2") >= float(bbox["cx", "min"].min()))
-        & (F.least("y1", "y2") <= float(bbox["cy", "max"].max()))
-        & (F.greatest("y1", "y2") >= float(bbox["cy", "min"].min()))
+        (F.array_min(xs) <= x1)
+        & (F.array_max(xs) >= x0)
+        & (F.array_min(ys) <= y1)
+        & (F.array_max(ys) >= y0)
     )
-    table = ops.collect_bounded(road_segments_df(roads).filter(near_any), cap)
+    table = ops.collect_bounded(roads.select("rid", "line").filter(near_any), cap)
     if table is None:
         return None
-    segs = table.to_pandas().drop_duplicates()
-    sx, sy = segs[["x1", "x2"]].to_numpy(np.float64), segs[["y1", "y2"]].to_numpy(np.float64)
-    sminx, smaxx, sminy, smaxy = sx.min(axis=1), sx.max(axis=1), sy.min(axis=1), sy.max(axis=1)
+    segs = _road_segments_np(table)
+    lo, hi = np.minimum(segs[:, :2], segs[:, 2:4]), np.maximum(segs[:, :2], segs[:, 2:4])
+    near = (lo[:, 0] <= x1) & (hi[:, 0] >= x0) & (lo[:, 1] <= y1) & (hi[:, 1] >= y0)
+    if near.sum() > cap:
+        return None
+    cols = ["x1", "y1", "x2", "y2", "L"]
+    keep = near & ~pd.DataFrame(segs).duplicated().to_numpy()
+    segs, lo, hi = segs[keep], lo[keep], hi[keep]
     out = {}
     for part, b in bbox.iterrows():
         hit = (
-            (sminx <= b["cx", "max"])
-            & (smaxx >= b["cx", "min"])
-            & (sminy <= b["cy", "max"])
-            & (smaxy >= b["cy", "min"])
+            (lo[:, 0] <= b["cx", "max"])
+            & (hi[:, 0] >= b["cx", "min"])
+            & (lo[:, 1] <= b["cy", "max"])
+            & (hi[:, 1] >= b["cy", "min"])
         )
         if hit.any():
-            out[part] = _sorted_segs_np(segs[hit])
+            out[part] = _sorted_segs_np(pd.DataFrame(segs[hit], columns=cols))
     return out
 
 
@@ -616,14 +664,33 @@ def mst_cluster_cells(
     PatchRemove is left to the caller: its counts join every building by
     centroid cell, across clusters and partitions, so no group sees
     them."""
-    prepared = (
-        buildings.select("bid", "rings", "cx", "cy", "area", F.col("part_name").alias("part"))
-        .filter(F.col("part").isNotNull() | (F.col("area") > 300.0))
-        .withColumn(
-            "grp",
-            F.coalesce("part", F.concat(F.lit("single_"), F.col("bid").cast("string"))),
-        )
+    prepared = _mst_cells_input(buildings).filter(
+        F.col("part").isNotNull() | (F.col("area") > _SINGLE_MIN_AREA)
     )
+    kernel = _mst_cells_kernel(coverage_thresh, cell_size)
+    return _per_partition(prepared, "grp", roads, 1024.0, kernel, MST_CELLS_SCHEMA, cap)
+
+
+# AddSinglBdg keeps an unpartitioned building above this footprint (m²)
+_SINGLE_MIN_AREA = 300.0
+
+
+def _mst_cells_input(buildings: DataFrame) -> DataFrame:
+    """Every building keyed by assign_partitions_df as
+    mst_cluster_cells' kernel reads it: (bid, rings, cx, cy, area, part,
+    grp), where ``grp`` is the partition or ``single_<bid>``.  The
+    kernel's rows are those with a partition or an area above
+    _SINGLE_MIN_AREA."""
+    return buildings.select(
+        "bid", "rings", "cx", "cy", "area", F.col("part_name").alias("part")
+    ).withColumn(
+        "grp", F.coalesce("part", F.concat(F.lit("single_"), F.col("bid").cast("string")))
+    )
+
+
+def _mst_cells_kernel(coverage_thresh: float, cell_size: float):
+    """mst_cluster_cells' per-group kernel (pdf, road_segs) → rows of
+    MST_CELLS_SCHEMA."""
 
     def kernel(pdf: pd.DataFrame, segs: "np.ndarray | None") -> pd.DataFrame:
         pdf = pdf.sort_values("bid").reset_index(drop=True)
@@ -639,7 +706,7 @@ def mst_cluster_cells(
             }
         )
 
-    return _per_partition(prepared, "grp", roads, 1024.0, kernel, MST_CELLS_SCHEMA, cap)
+    return kernel
 
 
 # ---------------------------------------------------------------------------
@@ -765,8 +832,7 @@ def footprint_density(
     drives its dense-block selection; the same ratio here feeds
     PatchRemove-style rescue decisions.
     """
-    spark = buildings.sparkSession
-    part_df = spark.createDataFrame(parts, "gx long, gy long, part_name string")
+    part_df = ops.local_df(buildings.sparkSession, parts, "gx long, gy long, part_name string")
     part_area = (
         part_df.groupBy("part_name")
         .agg((F.count(F.lit(1)).cast("double") * F.lit(cell_size * cell_size)).alias("part_area"))
@@ -915,13 +981,16 @@ def _label_and_close(
 
 def _close_on_driver(distinct: DataFrame, max_hole_cells: int, cap: int) -> "np.ndarray | None":
     """_label_and_close's driver path over distinct (gx, gy) rows: one
-    bounded Arrow collect, geom.cell_components labels and
-    _fill_holes_np closes each component; (n, 3) int64 rows (gx, gy,
-    boundary_id), or ``None`` above ``cap`` cells."""
+    bounded Arrow collect closed by _close_np, or ``None`` above ``cap``
+    cells."""
     table = ops.collect_bounded(distinct, cap)
-    if table is None:
-        return None
-    xy = ops.int64_columns(table)
+    return None if table is None else _close_np(ops.int64_columns(table), max_hole_cells)
+
+
+def _close_np(xy: np.ndarray, max_hole_cells: int) -> np.ndarray:
+    """GapFix and HoleClose over distinct (n, 2) int64 cells on the
+    driver: geom.cell_components labels them and _fill_holes_np closes
+    each component; (m, 3) int64 rows (gx, gy, boundary_id)."""
     labels = geom.cell_components(xy[:, 0], xy[:, 1])
     order = np.argsort(labels, kind="stable")
     out = [np.empty((0, 3), dtype=np.int64)]
@@ -1179,15 +1248,53 @@ def _sorted_segs_np(pdf: pd.DataFrame, with_len: bool = True) -> np.ndarray:
     )
 
 
-def _road_segments_pdf(roads_pdf: pd.DataFrame) -> np.ndarray:
-    """(M, 5) array of (x1, y1, x2, y2, total_line_length)."""
-    rows = []
-    for r in roads_pdf.itertuples():
-        pts = np.asarray([list(p) for p in r.line], dtype=np.float64)
-        L = float(np.hypot(*(np.diff(pts, axis=0).T)).sum())
-        for i in range(len(pts) - 1):
-            rows.append([pts[i, 0], pts[i, 1], pts[i + 1, 0], pts[i + 1, 1], L])
-    return np.asarray(rows, dtype=np.float64)
+def _road_segments_np(roads: "pd.DataFrame | pa.Table") -> np.ndarray:
+    """Road polylines (rid, line), a pandas frame or a pyarrow Table →
+    (M, 5) float64 rows (x1, y1, x2, y2, L), one per consecutive vertex
+    pair, in row then vertex order.
+
+    The rows equal road_segments_df's bit for bit: a segment's length is
+    sqrt(dx*dx + dy*dy), and ``L``, its road's total length, adds the
+    lengths one at a time from 0.0 in vertex order, which is the order
+    of Spark's per-``rid`` sum (a row's segments are exploded inside
+    one partition, so its partial sum sees them in order).  Rows
+    sharing a ``rid`` count as one road, in row order; rows with a null
+    ``rid`` drop out, as they do in road_segments_df's join."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(roads, pd.DataFrame):
+        rid = pa.array(roads["rid"], type=pa.int64())
+        line = pa.array(roads["line"], type=pa.list_(pa.list_(pa.float64())))
+    else:
+        rid = roads.column("rid").combine_chunks()
+        line = roads.column("line").combine_chunks()
+    valid = rid.is_valid()
+    rid, line = rid.filter(valid).to_numpy(), line.filter(valid)
+    n = pc.list_value_length(line).fill_null(0).to_numpy().astype(np.int64)
+    pts = pc.list_flatten(line)
+    x = pc.list_element(pts, 0).to_numpy(zero_copy_only=False)
+    y = pc.list_element(pts, 1).to_numpy(zero_copy_only=False)
+    # a vertex starts a segment unless it is its line's last
+    start = np.ones(x.size, dtype=bool)
+    start[np.cumsum(n)[n > 0] - 1] = False
+    j = np.flatnonzero(start)
+    if not j.size:
+        return np.empty((0, 5))
+    x1, y1, x2, y2 = x[j], y[j], x[j + 1], y[j + 1]
+    dx, dy = x2 - x1, y2 - y1
+    seg_len = np.sqrt(dx * dx + dy * dy)
+    # each road's segments by position: one vectorised add per position
+    # keeps every road's sum sequential
+    road = np.unique(rid, return_inverse=True)[1][np.repeat(np.arange(n.size), n)[j]]
+    by_road = np.argsort(road, kind="stable")
+    pos = np.empty_like(by_road)
+    pos[by_road] = np.arange(j.size) - np.searchsorted(road[by_road], road[by_road])
+    by_pos = np.argsort(pos, kind="stable")
+    L = np.zeros(road.max() + 1)
+    for idx in np.split(by_pos, np.flatnonzero(np.diff(pos[by_pos])) + 1):
+        L[road[idx]] += seg_len[idx]
+    return np.column_stack([x1, y1, x2, y2, L[road]])
 
 
 def prune_edges_by_roads(
@@ -1276,6 +1383,41 @@ def patch_remove(
     return boundary_cells.join(F.broadcast(kept), "cluster_id", "left_semi")
 
 
+def _patch_remove_np(
+    cells: np.ndarray,  # (n, 3) int64: gx, gy, cluster_id
+    buildings: pd.DataFrame,  # (cx, cy, area)
+    cell_size: float,
+    min_bdg_count: int = 10,
+    min_patch_cells: int = 8,
+    rescue_overlap_pct: float = 15.0,
+) -> np.ndarray:
+    """patch_remove on the driver: the boolean mask of the ``cells``
+    rows it keeps.  The same rule over the same join: each row meets the
+    buildings whose centroid lies in its cell; per cluster ``n_cells``
+    counts distinct cells, ``n_buildings`` the (row, building) pairs
+    and ``bdg_area`` their footprint areas.  Only the order in which
+    ``bdg_area`` is summed differs, and Spark's own order is not fixed
+    either."""
+    cx, cy, area = (buildings[c].to_numpy(np.float64) for c in ("cx", "cy", "area"))
+    bkey = ops._cc_key_np(np.floor(cx / cell_size), np.floor(cy / cell_size))
+    ukey, binv = np.unique(bkey, return_inverse=True)
+    ckey = ops._cc_key_np(cells[:, 0], cells[:, 1])
+    slot = np.searchsorted(ukey, ckey)
+    hit = slot < ukey.size
+    hit[hit] = ukey[slot[hit]] == ckey[hit]
+    row_n = np.zeros(len(cells))
+    row_a = np.zeros(len(cells))
+    row_n[hit] = np.bincount(binv, minlength=ukey.size)[slot[hit]]
+    row_a[hit] = np.bincount(binv, weights=area, minlength=ukey.size)[slot[hit]]
+    cid, cinv = np.unique(cells[:, 2], return_inverse=True)
+    n_bdg = np.bincount(cinv, weights=row_n, minlength=cid.size)
+    bdg_area = np.bincount(cinv, weights=row_a, minlength=cid.size)
+    n_cells = np.bincount(np.unique(np.column_stack([cinv, ckey]), axis=0)[:, 0], minlength=cid.size)
+    overlap = bdg_area / (n_cells.astype(np.float64) * (cell_size * cell_size)) * 100.0
+    keep = ((n_bdg >= min_bdg_count) & (n_cells >= min_patch_cells)) | (overlap >= rescue_overlap_pct)
+    return keep[cinv]
+
+
 def gap_fix(boundary_cells: DataFrame) -> DataFrame:
     """Cross-partition stitch (GapFix, IB-Tool2.py:2121-95): boundary
     patches produced independently per partition get re-labeled by a
@@ -1349,16 +1491,14 @@ def edge_catch(
     if not isinstance(roads, pd.DataFrame):
         road_df = road_cells_df(roads, cell_size)
     else:
-        segs = _road_segments_pdf(roads)[:, :4]
+        segs = _road_segments_np(roads)[:, :4]
         road_cells: set[tuple[int, int]] = set()
         for x1, y1, x2, y2 in segs:
             gx, gy = _segment_cover_cells(x1, y1, x2, y2, cell_size)
             road_cells.update(zip(gx.tolist(), gy.tolist()))
         if not road_cells:
             return boundary_cells.select("gx", "gy", "cluster_id").distinct()
-        road_df = spark.createDataFrame(
-            pd.DataFrame(sorted(road_cells), columns=["gx", "gy"]), "gx long, gy long"
-        )
+        road_df = ops.local_df(spark, sorted(road_cells), "gx long, gy long")
 
     # candidates: k-ring dilation per cluster minus the cluster's own
     # cells — shuffle ∝ boundary cells × ring size, aggregated by
@@ -1418,47 +1558,51 @@ def full_delineation(
 ) -> DataFrame:
     """End-to-end settlement delineation over the synthetic scene —
     the reference's per-partition dataflow (IB-Tool2.py:2401-2517) plus
-    its finalize stage, in one Spark DAG:
+    its finalize stage:
 
     buildings → InputHU_Filter (use-code + min-area filters) → density
     partitioning → MST clustering (road-crossing prune) + AddSinglBdg →
     buffered dissolve to cells → PatchRemove → [EdgeCatch] → GapFix
     stitch → HoleClose → per-boundary summary.
 
-    Stages, all JVM except the per-group kernel of mst_cluster_cells:
+    Stages:
 
     1. the buildings and roads are driver-built ``LocalTableScan``s;
        density partitioning labels its dense cells with
        ops.cell_components_df (on the driver up to
        ops.DRIVER_LABEL_CAP cells) and assign_partitions_df keys every
        building by broadcast join;
-    2. mst_cluster_cells clusters each partition, buffers every cluster
-       to cells and makes the AddSinglBdg singletons, in one kernel
-       call per group.  Up to ``cap`` kernel input rows (default
-       DRIVER_KERNEL_CAP) the kernel runs on the driver: the keyed
-       buildings and the road segments near them are fetched by one
-       bounded Arrow collect each, and the cells come back as a
-       ``LocalTableScan``, so no Python worker starts in the whole
-       call.  Beyond it the kernel runs in one grouped Python stage,
-       cogrouped with each partition's roads;
-    3. PatchRemove and EdgeCatch are JVM joins;
-    4. GapFix and HoleClose, as in _label_and_close: on the driver when
-       the stitched cells number at most ops.DRIVER_LABEL_CAP, and then
-       the per-boundary counts are built there too; otherwise through
-       the super-cell labelling, a grouped Python stage and a Spark
-       aggregation.
+    2. mst_cluster_cells' kernel clusters each partition, buffers every
+       cluster to cells and makes the AddSinglBdg singletons, one call
+       per group.  Up to ``cap`` filtered buildings (default
+       DRIVER_KERNEL_CAP) it runs on the driver: every keyed building
+       is fetched by one bounded Arrow collect (the kernel reads the
+       partitioned ones and those above 300 m², PatchRemove
+       all of them) and the road lines near them by another
+       (_part_road_segments).  Beyond it, or when the roads near the
+       buildings exceed ``cap``, the kernel runs in one grouped Python
+       stage, cogrouped with each partition's roads;
+    3. PatchRemove, then [EdgeCatch]: after the driver kernel (without
+       EdgeCatch) _patch_remove_np on the driver; otherwise the JVM
+       joins of patch_remove and edge_catch;
+    4. GapFix and HoleClose: after the driver kernel (without EdgeCatch)
+       _close_np over the kernel's cells, so the whole finish runs on
+       the driver and the summary is one driver-built table; otherwise
+       as in _label_and_close, on the driver when the stitched cells
+       number at most ops.DRIVER_LABEL_CAP (the per-boundary counts are
+       then built there too), else through the super-cell labelling, a
+       grouped Python stage and a Spark aggregation.
 
     Materialisation points:
 
-    - driver placement: the two bounded fetches of stage 2 (the cells
-      are then a driver-built table, read by PatchRemove's stats join,
-      its ``left_semi`` join and the singletons' pass-through without
-      recomputation);
-    - grouped placement: an eager ``localCheckpoint`` of the
-      mst_cluster_cells output, for the same three readers;
-    - either way, the stitched cell set, fetched once by
-      _close_on_driver's bounded Arrow collect (below its cap the
-      summary is then a driver-built table).
+    - driver placement: the two bounded fetches of stage 2 and nothing
+      else; with EdgeCatch the cells become a driver-built table that
+      PatchRemove's stats join, its ``left_semi`` join and the
+      singletons' pass-through read without recomputation, and the
+      stitched cells are fetched once more by _close_on_driver;
+    - grouped placement: an eager ``localCheckpoint`` of the kernel's
+      output, for the same three readers, and the stitched-cells fetch
+      of _close_on_driver.
     """
     from . import synth
     from .config import filter_predicate
@@ -1476,11 +1620,26 @@ def full_delineation(
     )
 
     roads = synth.roads_df(spark).select("rid", "line") if use_roads else None
-    clustered = mst_cluster_cells(
-        keyed, coverage_thresh=coverage_thresh, roads=roads, cell_size=cell_size, cap=cap
-    )
-    if not clustered.isLocal():
-        clustered = clustered.localCheckpoint(eager=True)
+    edge_catching = use_edge_catch and roads is not None
+    kernel = _mst_cells_kernel(coverage_thresh, cell_size)
+    everyone = _mst_cells_input(keyed)
+    table = ops.collect_bounded(everyone, cap)
+    rows = None
+    if table is not None:
+        pdf = table.to_pandas()
+        kernel_rows = pdf[pdf["part"].notna() | (pdf["area"] > _SINGLE_MIN_AREA)]
+        rows = _kernel_on_driver(kernel_rows, "grp", roads, kernel, cap)
+    if rows is not None and not edge_catching:
+        counts = _finish_on_driver(spark, rows, pdf, cell_size, min_bdg_count)
+        return _with_area(counts, cell_size)
+
+    if rows is not None:
+        clustered = ops.local_df(spark, rows, MST_CELLS_SCHEMA)
+    else:
+        prepared = everyone.filter(F.col("part").isNotNull() | (F.col("area") > _SINGLE_MIN_AREA))
+        clustered = _per_partition_grouped(
+            prepared, "grp", roads, 1024.0, kernel, MST_CELLS_SCHEMA
+        ).localCheckpoint(eager=True)
 
     # PatchRemove applies to the aggregated clusters; AddSinglBdg
     # singletons bypass it (they are kept by construction, mirroring
@@ -1490,7 +1649,7 @@ def full_delineation(
     single = clustered.filter(F.col("single")).select("gx", "gy", "cluster_id")
     cells = patch_remove(main, b, cell_size, min_bdg_count=min_bdg_count, min_patch_cells=4)
     cells = cells.unionByName(single)
-    if use_edge_catch and roads is not None:
+    if edge_catching:
         cells = edge_catch(cells, roads, cell_size)
     # GapFix + HoleClose (_label_and_close), counted per boundary
     distinct = ops._distinct_cells(cells)
@@ -1500,10 +1659,36 @@ def full_delineation(
             F.count(F.lit(1)).alias("n_cells")
         )
     else:
-        ids, n = np.unique(closed[:, 2], return_counts=True)
-        counts = ops.local_df(
-            spark, pd.DataFrame({"boundary_id": ids, "n_cells": n}), "boundary_id long, n_cells long"
-        )
+        counts = _boundary_counts(spark, closed)
+    return _with_area(counts, cell_size)
+
+
+def _finish_on_driver(
+    spark, rows, buildings: pd.DataFrame, cell_size: float, min_bdg_count: int
+) -> DataFrame:
+    """full_delineation's stages 3-4 over the driver kernel's rows
+    (MST_CELLS_SCHEMA columns, or ``[]``): PatchRemove
+    (_patch_remove_np over every filtered building), the singletons'
+    union, the distinct cells, GapFix and HoleClose (_close_np);
+    (boundary_id, n_cells) as one driver-built table."""
+    cols = ["gx", "gy", "cluster_id"]
+    rows = pd.DataFrame(rows, columns=cols + ["single"])
+    single = rows["single"].to_numpy(bool)
+    main = rows[cols].to_numpy(np.int64)[~single]
+    kept = main[_patch_remove_np(main, buildings, cell_size, min_bdg_count, min_patch_cells=4)]
+    xy = np.concatenate([kept[:, :2], rows.loc[single, ["gx", "gy"]].to_numpy(np.int64)])
+    return _boundary_counts(spark, _close_np(np.unique(xy, axis=0), 64))
+
+
+def _boundary_counts(spark, closed: np.ndarray) -> DataFrame:
+    """(boundary_id, n_cells) of _close_np's rows, as a driver-built table."""
+    ids, n = np.unique(closed[:, 2], return_counts=True)
+    return ops.local_df(
+        spark, pd.DataFrame({"boundary_id": ids, "n_cells": n}), "boundary_id long, n_cells long"
+    )
+
+
+def _with_area(counts: DataFrame, cell_size: float) -> DataFrame:
     area = F.col("n_cells").cast("double") * F.lit(cell_size * cell_size)
     return counts.withColumn("area", area).orderBy("boundary_id")
 
@@ -1589,7 +1774,7 @@ def blocker(
         if roads is not None and not isinstance(roads, pd.DataFrame):
             raise TypeError("pandas partitions require pandas roads")
         road_segs = (
-            _road_segments_pdf(roads)[:, :4] if roads is not None else np.empty((0, 4))
+            _road_segments_np(roads)[:, :4] if roads is not None else np.empty((0, 4))
         )
         part_map = {
             str(r.part): [np.asarray(x, dtype=np.float64) for x in r.rings]
@@ -1614,7 +1799,7 @@ def blocker(
     # ---- DataFrame partitions/roads: cogrouped subsets ----
     spark = buildings.sparkSession
     if isinstance(roads, pd.DataFrame):
-        roads = spark.createDataFrame(roads[["rid", "line"]])
+        roads = ops.local_df(spark, roads, "rid long, line array<array<double>>")
     keys_bbox = _rings_bbox_cols(
         partitions.select(F.col("part").alias("kid"), "rings"), "k"
     ).select("kid", "kminx", "kminy", "kmaxx", "kmaxy")
@@ -1849,7 +2034,7 @@ def edge_catch_exact(
                 stacklevel=2,
             )
     if isinstance(roads, pd.DataFrame):
-        road_segs = _road_segments_pdf(roads)[:, :4]
+        road_segs = _road_segments_np(roads)[:, :4]
         block_polys = (
             [[np.asarray(r, dtype=np.float64) for r in b.rings] for b in blocks.itertuples()]
             if blocks is not None

@@ -1013,7 +1013,9 @@ def main_angle(angles: np.ndarray, lengths: np.ndarray, maxdiff: float = 10.0) -
     return float(a_sorted[lg[int(np.argmax(lengthsum))]])
 
 
-def main_angle_rect(segs: np.ndarray) -> tuple["np.ndarray | None", "float | None"]:
+def main_angle_rect(
+    segs: np.ndarray, angles: "np.ndarray | None" = None
+) -> tuple["np.ndarray | None", "float | None"]:
     """Oriented bounding rectangle by dominant edge angle
     (CalcBoundingRect "list" path, IB-Tool2.py:570-642): project the
     segment START points onto a long baseline at the MainAngle through
@@ -1021,11 +1023,16 @@ def main_angle_rect(segs: np.ndarray) -> tuple["np.ndarray | None", "float | Non
     extreme foot positions, scale the four corner points, and measure
     the rectangle.  Returns (corners (4,2), area); (None, None) when
     ≤ 4 segments (the reference emits no rectangle then).  A degenerate
-    zero-area rectangle reports 1e12 like the reference's guard."""
+    zero-area rectangle reports 1e12 like the reference's guard.
+
+    ``angles``, when given, are the segments' angles as this function
+    computes them, ``np.round(segment_angles_deg(segs), 1)``: callers
+    testing many stacks of the same segments compute them once."""
     segs = np.asarray(segs, dtype=np.float64)
     if segs.shape[0] <= 4:
         return None, None
-    angles = np.round(segment_angles_deg(segs), 1)  # "list" path rounds to 0.1°
+    if angles is None:
+        angles = np.round(segment_angles_deg(segs), 1)  # "list" path rounds to 0.1°
     lengths = segs[:, 4]
     ang = main_angle(angles, lengths, 10.0)
     px_pts = segs[:, 0]

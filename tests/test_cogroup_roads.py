@@ -23,17 +23,53 @@ def scene(spark):
     return b, roads_pd, roads_sp
 
 
+def _random_roads(seed: int = 11, n: int = 60) -> pd.DataFrame:
+    """Seeded random polylines of 2-12 vertices, plus dead-end stubs
+    whose total length lies within 1e-6 m of the 50 m exemption."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for rid in range(n):
+        k = int(rng.integers(2, 13))
+        start = rng.uniform(-5_000.0, 5_000.0, 2)
+        pts = start + np.cumsum(rng.normal(0.0, 40.0, (k, 2)), axis=0)
+        rows.append((rid, pts.tolist()))
+    for i in range(24):
+        theta = rng.uniform(0.0, 2.0 * np.pi)
+        length = 50.0 + rng.uniform(-1e-6, 1e-6)
+        frac = np.sort(rng.uniform(0.0, 1.0, int(rng.integers(0, 4))))
+        t = np.concatenate([[0.0], frac, [1.0]]) * length
+        start = rng.uniform(-5_000.0, 5_000.0, 2)
+        pts = start + t[:, None] * np.array([np.cos(theta), np.sin(theta)])
+        rows.append((n + i, pts.tolist()))
+    return pd.DataFrame(rows, columns=["rid", "line"])
+
+
 def test_road_segments_df_matches_pdf(spark, scene):
+    """The driver builder and the Spark explode give the same rows, bit
+    for bit (L included), on the scene's roads and on random polylines
+    with stubs at the dead-end threshold; the driver builder reads a
+    pandas frame or the Arrow table a bounded fetch returns."""
+    from ib_tool_spark import ops
+
     _b, roads_pd, roads_sp = scene
-    a = delineate._road_segments_pdf(roads_pd)
-    c = (
-        delineate.road_segments_df(roads_sp)
-        .toPandas()[["x1", "y1", "x2", "y2", "L"]]
-        .to_numpy(np.float64)
-    )
-    a = a[np.lexsort((a[:, 3], a[:, 2], a[:, 1], a[:, 0]))]
-    c = c[np.lexsort((c[:, 3], c[:, 2], c[:, 1], c[:, 0]))]
-    np.testing.assert_allclose(a, c, rtol=0, atol=1e-9)
+    rand_pd = _random_roads()
+    rand_sp = ops.local_df(spark, rand_pd, "rid long, line array<array<double>>")
+    stubs = delineate._road_segments_np(rand_pd.tail(24))
+    assert (np.abs(stubs[:, 4] - 50.0) <= 1e-6).all()
+    assert (stubs[:, 4] < 50.0).any() and (stubs[:, 4] >= 50.0).any()
+    for pdf, sdf in ((roads_pd, roads_sp), (rand_pd, rand_sp)):
+        a = delineate._road_segments_np(pdf)
+        t = delineate._road_segments_np(sdf.select("rid", "line").toArrow())
+        c = (
+            delineate.road_segments_df(sdf)
+            .toPandas()[["x1", "y1", "x2", "y2", "L"]]
+            .to_numpy(np.float64)
+        )
+        assert a.shape == c.shape == t.shape and a.shape[1] == 5
+        np.testing.assert_array_equal(a, t)
+        a = a[np.lexsort(a.T[::-1])]
+        c = c[np.lexsort(c.T[::-1])]
+        np.testing.assert_array_equal(a, c)
 
 
 def test_mst_cluster_df_roads_parity(spark, scene):
@@ -102,7 +138,7 @@ def test_mst_cluster_df_roads_beyond_closure_scale(spark, scene):
 def test_road_cells_df_matches_driver_loop(spark, scene):
     _b, roads_pd, roads_sp = scene
     cell_size = 16.0
-    segs = delineate._road_segments_pdf(roads_pd)[:, :4]
+    segs = delineate._road_segments_np(roads_pd)[:, :4]
     want = set()
     for x1, y1, x2, y2 in segs:
         gx, gy = delineate._segment_cover_cells(x1, y1, x2, y2, cell_size)

@@ -218,6 +218,26 @@ def test_main_angle_rect_axis_pair():
     assert got == want
 
 
+def test_main_angle_rect_precomputed_angles_are_bit_identical():
+    # the MST accept test passes each footprint's rounded angles,
+    # computed once, for every stack of footprints it tries
+    rng = np.random.default_rng(5)
+    rings = [
+        geom.rect_ring(*rng.uniform(-500.0, 500.0, 2), *rng.uniform(4.0, 40.0, 2), rng.uniform(0, np.pi))
+        for _ in range(40)
+    ] + [np.array([[0.0, 0.0], [7.0, 1.0], [3.0, 9.0]]) + rng.uniform(-50.0, 50.0, 2) for _ in range(10)]
+    segs = [geom.ring_segments(r) for r in rings]
+    angles = [np.round(geom.segment_angles_deg(s), 1) for s in segs]
+    for _ in range(200):
+        pick = rng.choice(len(rings), int(rng.integers(1, 8)))
+        stack = np.vstack([segs[i] for i in pick])
+        c0, a0 = geom.main_angle_rect(stack)
+        c1, a1 = geom.main_angle_rect(stack, np.concatenate([angles[i] for i in pick]))
+        assert a0 == a1 and (c0 is None) == (c1 is None)
+        if c0 is not None:
+            assert np.array_equal(c0, c1)
+
+
 def test_main_angle_rect_four_or_fewer_segments():
     segs = geom.ring_segments(geom.rect_ring(0, 0, 10, 10, 0.0))
     corners, area = geom.main_angle_rect(segs)

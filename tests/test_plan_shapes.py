@@ -199,6 +199,55 @@ def test_driver_built_relations_scan_locally(spark, arrow):
     x, y = synth.geocode_np(got["image_id"].tolist())
     assert (got["x"].to_numpy() == x).all() and (got["y"].to_numpy() == y).all()
 
+    # delineate's driver-built tables: the Thiessen faces, a pandas
+    # partition map (assign_partitions, footprint_density), edge_catch's
+    # road cells from pandas roads and blocker's pandas roads
+    import pandas as pd
+
+    from ib_tool_spark import geom
+
+    b = synth.buildings_df(spark, per_cluster=10)
+    pts = b.select(F.col("cx").alias("x"), F.col("cy").alias("y"))
+    faces = delineate.thiessen_partitions(pts)
+    _assert_local_scan(faces)
+    assert faces.schema.simpleString() == (
+        "struct<part:string,rings:array<array<array<double>>>,area:double>"
+    )
+    assert faces.count() >= 2
+    none = delineate.thiessen_partitions(pts.limit(1))  # no dense cell
+    _assert_local_scan(none)
+    assert none.count() == 0
+
+    parts = delineate.density_partitions(pts, 150.0, 300.0, 1e-5)
+    assigned = delineate.assign_partitions(pts, parts, 150.0)
+    _assert_local_scan(assigned)
+    assert assigned.count() == b.count()
+    assert assigned.filter(F.col("part_name").isNotNull()).count() > 0
+    density = delineate.footprint_density(b, parts)
+    _assert_local_scan(density)
+    assert density.count() == parts["part_name"].nunique()
+
+    cells = ops.local_df(
+        spark, [(x, y, 0) for x in range(4) for y in range(4)], "gx long, gy long, cluster_id long"
+    )
+    road = pd.DataFrame([{"rid": 0, "line": [[65.0, -100.0], [65.0, 200.0]]}])
+    caught = delineate.edge_catch(cells, road, cell_size=10.0, max_dist=70.0)
+    _assert_local_scan(caught)
+    assert caught.count() > 16
+
+    part = ops.local_df(
+        spark,
+        [("P0", [geom.rect_ring(300.0, 100.0, 600.0, 200.0, 0.0).tolist()])],
+        "part string, rings array<array<array<double>>>",
+    )
+    roads = pd.DataFrame([{"rid": 0, "line": [[300.0, -10.0], [300.0, 210.0]]}])
+    bdf = ops.local_df(
+        spark, [(100.0, 100.0, "P0"), (500.0, 100.0, "P0")], "cx double, cy double, part string"
+    )
+    blocks = delineate.blocker(bdf, part, roads)
+    _assert_local_scan(blocks)
+    assert blocks.count() == 2
+
 
 def test_cell_components_small_path_scans_locally(spark, arrow):
     """A cell set under the cap is labeled on the driver: the result is a
@@ -259,27 +308,36 @@ def _sql_status(spark):
 
 def test_full_delineation_runs_one_grouped_python_stage(spark, arrow):
     """Across every action of one call (the final collect included):
-    at the default cap the per-partition kernel and the stitch run on
-    the driver, so no Python plan node runs at all; with the kernel cap
-    forced to 0, clustering, AddSinglBdg and the buffered dissolve share
-    exactly one cogroup stage."""
+    at the default cap the per-partition kernel and the whole finish
+    (PatchRemove, the stitch, HoleClose) run on the driver, so no Python
+    plan node runs at all and the call runs at most 10 Spark jobs; with
+    the kernel cap forced to 0, clustering, AddSinglBdg and the buffered
+    dissolve share exactly one cogroup stage."""
+    sc = spark.sparkContext
 
     def plan_nodes(**kw):
         store, conv = _sql_status(spark)
         before = {e.executionId() for e in conv.asJava(store.executionsList())}
-        delineate.full_delineation(spark, per_cluster=20, **kw).collect()
+        group = f"full_delineation_{arrow}_{kw}"
+        sc.setJobGroup(group, group)
+        try:
+            delineate.full_delineation(spark, per_cluster=20, **kw).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
         store, conv = _sql_status(spark)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
         # physical-plan node names of every new execution (adaptive final plans)
-        return [
+        return jobs, [
             n.name()
             for e in conv.asJava(store.executionsList())
             if e.executionId() not in before
             for n in conv.asJava(store.planGraph(e.executionId()).allNodes())
         ]
 
-    names = plan_nodes()
+    jobs, names = plan_nodes()
     python = [n for n in names if "InPandas" in n or "EvalPython" in n or "ExistingRDD" in n]
     assert not python, names
-    names = plan_nodes(cap=0)
+    assert 0 < len(jobs) <= 10, (len(jobs), names)
+    _jobs, names = plan_nodes(cap=0)
     assert names.count("FlatMapCoGroupsInPandas") == 1, names
     assert "FlatMapGroupsInPandas" not in names, names

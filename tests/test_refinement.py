@@ -34,6 +34,16 @@ def test_patch_remove(spark):
         .tolist()
     )
     assert sorted(kept) == [0, 2]
+    # the driver twin that finishes a driver-placed full_delineation
+    mask = delineate._patch_remove_np(
+        np.array(cells, dtype=np.int64),
+        pd.DataFrame(b_rows, columns=["bid", "cx", "cy", "area"]),
+        cell_size=10.0,
+        min_bdg_count=10,
+        min_patch_cells=8,
+    )
+    assert sorted({c[2] for c, k in zip(cells, mask) if k}) == [0, 2]
+    assert mask.sum() == 100 + 3
 
 
 def test_gap_fix_stitches_across_partitions(spark):
@@ -327,3 +337,39 @@ def test_buffer_cells_match_per_footprint_reference():
     )
     assert np.array_equal(got, want)
     assert delineate._buffer_cells_np([], 25.0, 16.0).shape == (0, 2)
+
+
+ARROW_KEY = "spark.sql.execution.arrow.pyspark.enabled"
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"], ids=["arrow_on", "arrow_off"])
+@pytest.mark.parametrize("use_roads", [True, False], ids=["roads", "no_roads"])
+def test_full_delineation_placements_agree(spark, use_roads, arrow):
+    """At the default caps the kernel and the whole finish (PatchRemove,
+    the stitch, HoleClose) run on the driver; with cap=0 the grouped
+    kernel, the Spark PatchRemove and the stitched-cells close run
+    instead (test_plan_shapes pins both placements).  Both give the
+    same frame, with or without roads, with Arrow on or off."""
+    old = spark.conf.get(ARROW_KEY)
+    spark.conf.set(ARROW_KEY, arrow)
+    try:
+        driver = delineate.full_delineation(spark, per_cluster=20, use_roads=use_roads)
+        grouped = delineate.full_delineation(spark, per_cluster=20, use_roads=use_roads, cap=0)
+        got, want = driver.toPandas(), grouped.toPandas()
+    finally:
+        spark.conf.set(ARROW_KEY, old)
+    assert len(want) > 48
+    pd.testing.assert_frame_equal(got, want)
+
+
+def test_full_delineation_edge_catch_keeps_the_spark_chain(spark):
+    """With EdgeCatch the finish stays in Spark after the driver kernel
+    (PatchRemove's joins, edge_catch, the stitched-cells close), and the
+    frame equals the one from the grouped kernel (cap=0)."""
+    driver = delineate.full_delineation(spark, per_cluster=20, use_edge_catch=True)
+    grouped = delineate.full_delineation(spark, per_cluster=20, use_edge_catch=True, cap=0)
+    base = delineate.full_delineation(spark, per_cluster=20)
+    got, want = driver.toPandas(), grouped.toPandas()
+    pd.testing.assert_frame_equal(got, want)
+    # EdgeCatch annexes road cells, so it changes the boundaries
+    assert not got.equals(base.toPandas())
