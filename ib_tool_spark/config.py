@@ -80,11 +80,22 @@ def parse_filter_lists(text: str) -> tuple[list[str], list[str]]:
     return pos, neg
 
 
+def filter_prefixes(codes: list[str], prefix_len: int = 10) -> list[str]:
+    """The sorted distinct ``prefix_len``-character code prefixes that
+    filter_predicate and filter_mask test."""
+    return sorted({c[:prefix_len] for c in codes})
+
+
 def filter_predicate(col, codes: list[str], prefix_len: int = 10):
     """Compile a code list to the engine predicate: exact prefix isin
     (the reference's ``fkt LIKE 'code%'`` chains are all fixed-length
     prefixes, so isin is equivalent and sargable)."""
     from pyspark.sql import functions as F
 
-    prefixes = sorted({c[:prefix_len] for c in codes})
-    return F.substring(col, 1, prefix_len).isin(prefixes)
+    return F.substring(col, 1, prefix_len).isin(filter_prefixes(codes, prefix_len))
+
+
+def filter_mask(codes_col, codes: list[str], prefix_len: int = 10):
+    """filter_predicate over a pandas Series of codes: a boolean mask
+    that is False where the predicate is false or NULL."""
+    return codes_col.str[:prefix_len].isin(filter_prefixes(codes, prefix_len)).to_numpy(bool)

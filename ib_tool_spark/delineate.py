@@ -61,7 +61,8 @@ def density_partitions_df(
     map-side and ops.cell_components_df labels the dense cells (on the
     driver up to its cap, distributed beyond), so no unbounded cell set
     ever reaches the driver.  Labels — and therefore PART names — are
-    bit-identical to the driver-side kernel's.
+    bit-identical to the driver-side kernel's, and the rows to
+    _density_partitions_np's over the same points.
     """
     dense = (
         ops.density_grid(points, cell_size, radius)
@@ -71,6 +72,36 @@ def density_partitions_df(
     lab = ops.cell_components_df(dense)
     return lab.select(
         "gx", "gy", F.concat(F.lit("PART_"), F.col("comp").cast("string")).alias("part_name")
+    )
+
+
+def _density_partitions_np(
+    x: np.ndarray,
+    y: np.ndarray,
+    cell_size: float = 150.0,
+    radius: float = 300.0,
+    min_density: float = 1e-5,
+) -> pd.DataFrame:
+    """density_partitions_df over point coordinates on the driver: the
+    same (gx, gy, part_name) rows, sorted by (gx, gy).
+
+    The same float operations as ops.density_grid: floor(x / cell_size)
+    bins, an int64 count per cell spread over ops.density_offsets and
+    summed, density = nsum / (π·radius²) against ``min_density``, and
+    geom.cell_components' labels (which ops.cell_components_df
+    reproduces) as ``PART_<k>``."""
+    gxy = np.floor(np.column_stack([x, y]).astype(np.float64) / cell_size).astype(np.int64)
+    cells, cnt = np.unique(gxy.reshape(-1, 2), axis=0, return_counts=True)
+    offs = ops.density_offsets(cell_size, radius)
+    spread = (cells[:, None, :] + offs[None, :, :]).reshape(-1, 2)
+    tgt, inv = np.unique(spread, axis=0, return_inverse=True)
+    nsum = np.zeros(len(tgt), dtype=np.int64)
+    np.add.at(nsum, inv.reshape(-1), np.repeat(cnt, len(offs)))
+    area = float(np.pi) * radius * radius
+    dense = tgt[nsum.astype(np.float64) / area > min_density]
+    comp = geom.cell_components(dense[:, 0], dense[:, 1])
+    return pd.DataFrame(
+        {"gx": dense[:, 0], "gy": dense[:, 1], "part_name": [f"PART_{k}" for k in comp]}
     )
 
 
@@ -303,6 +334,12 @@ def buffer_mask(
 CLUSTER_SCHEMA = "bid long, cluster_id long, part string"
 
 
+def _by_bid(pdf: pd.DataFrame) -> pd.DataFrame:
+    """``pdf`` in ascending bid order (a grouped stage delivers a
+    group's rows unordered; _run_groups presorts them)."""
+    return pdf if pdf["bid"].is_monotonic_increasing else pdf.sort_values("bid")
+
+
 def _mst_cluster_kernel(
     pdf: pd.DataFrame,
     coverage_thresh: float,
@@ -333,7 +370,7 @@ def _mst_cluster_kernel(
     # applyInPandas gives no within-group row order; node indices and all
     # edge tie-breaks derive from row position, so pin them to bid order
     # or the output flips run-to-run (10/10 permutations differed).
-    pdf = pdf.sort_values("bid").reset_index(drop=True)
+    pdf = _by_bid(pdf)
     n = len(pdf)
     part = pdf["part"].iloc[0] if n else ""
     bids = pdf["bid"].to_numpy(dtype=np.int64)
@@ -528,6 +565,18 @@ def _kernel_on_driver(
     else:
         near = {}
         road_segs = _road_segments_np(roads) if roads is not None else None
+    return _run_groups(pdf, key, kernel, near, road_segs)
+
+
+def _run_groups(
+    pdf: pd.DataFrame, key: str, kernel, near: dict, road_segs=None
+) -> "pd.DataFrame | list":
+    """``kernel(group, segments)`` over every ``key`` group of ``pdf``
+    in key order, where ``segments`` is ``near[key]`` or ``road_segs``;
+    the concatenated rows, or ``[]`` when there are none.  The rows are
+    sorted by (key, bid) once, so each group reaches the kernel in the
+    bid order it pins."""
+    pdf = pdf.sort_values([key, "bid"])
     out = [kernel(g, near.get(k, road_segs)) for k, g in pdf.groupby(key, sort=True, dropna=False)]
     return pd.concat(out, ignore_index=True) if out else []
 
@@ -582,23 +631,26 @@ def _per_partition_grouped(
     )
 
 
-def _part_road_segments(pdf: pd.DataFrame, roads: DataFrame, cap: int) -> "dict | None":
-    """{part: (M, 5) road segments} for the driver placement: per
-    partition of ``pdf`` the distinct segments whose bbox overlaps its
-    centroid bbox, in _sorted_segs_np order (what the cogroup's
-    _segments_for_keys join delivers; partitions with none are left
-    out).
-
-    One bounded fetch of the raw (rid, line) rows whose bbox reaches
-    the partitions' joint centroid bbox, exploded on the driver by
-    _road_segments_np (whole lines, so ``L`` is each road's full
-    length).  ``None`` when more than ``cap`` lines, or more than
-    ``cap`` of their segments, reach that bbox."""
+def _part_bboxes(pdf: pd.DataFrame) -> "tuple[pd.DataFrame, tuple] | None":
+    """Per non-null ``part`` of ``pdf`` its centroid bbox (columns
+    (cx, min), (cx, max), (cy, min), (cy, max)) and the joint bbox
+    (x0, x1, y0, y1) of them all; ``None`` when no row has a part."""
     bbox = pdf[pdf["part"].notna()].groupby("part")[["cx", "cy"]].agg(["min", "max"])
     if not len(bbox):
-        return {}
+        return None
     x0, x1 = float(bbox["cx", "min"].min()), float(bbox["cx", "max"].max())
     y0, y1 = float(bbox["cy", "min"].min()), float(bbox["cy", "max"].max())
+    return bbox, (x0, x1, y0, y1)
+
+
+def _part_road_segments(pdf: pd.DataFrame, roads: DataFrame, cap: int) -> "dict | None":
+    """_near_segments over Spark ``roads``: one bounded fetch of the
+    raw (rid, line) rows whose bbox reaches the partitions' joint
+    centroid bbox, or ``None`` when more than ``cap`` lines reach it."""
+    boxes = _part_bboxes(pdf)
+    if boxes is None:
+        return {}
+    x0, x1, y0, y1 = boxes[1]
     xs = F.transform("line", lambda p: F.element_at(p, 1))
     ys = F.transform("line", lambda p: F.element_at(p, 2))
     near_any = (
@@ -608,9 +660,24 @@ def _part_road_segments(pdf: pd.DataFrame, roads: DataFrame, cap: int) -> "dict 
         & (F.array_max(ys) >= y0)
     )
     table = ops.collect_bounded(roads.select("rid", "line").filter(near_any), cap)
-    if table is None:
-        return None
-    segs = _road_segments_np(table)
+    return None if table is None else _near_segments(pdf, table, cap)
+
+
+def _near_segments(pdf: pd.DataFrame, lines: "pd.DataFrame | pa.Table", cap: int) -> "dict | None":
+    """{part: (M, 5) road segments} for the driver placement: per
+    partition of ``pdf`` the distinct segments of the road ``lines``
+    (rid, line) whose bbox overlaps its centroid bbox, in
+    _sorted_segs_np order (what the cogroup's _segments_for_keys join
+    delivers; partitions with none are left out).
+
+    Whole lines are exploded by _road_segments_np, so ``L`` is each
+    road's full length.  ``None`` when more than ``cap`` segments reach
+    the partitions' joint centroid bbox."""
+    boxes = _part_bboxes(pdf)
+    if boxes is None:
+        return {}
+    bbox, (x0, x1, y0, y1) = boxes
+    segs = _road_segments_np(lines)
     lo, hi = np.minimum(segs[:, :2], segs[:, 2:4]), np.maximum(segs[:, :2], segs[:, 2:4])
     near = (lo[:, 0] <= x1) & (hi[:, 0] >= x0) & (lo[:, 1] <= y1) & (hi[:, 1] >= y0)
     if near.sum() > cap:
@@ -693,7 +760,7 @@ def _mst_cells_kernel(coverage_thresh: float, cell_size: float):
     MST_CELLS_SCHEMA."""
 
     def kernel(pdf: pd.DataFrame, segs: "np.ndarray | None") -> pd.DataFrame:
-        pdf = pdf.sort_values("bid").reset_index(drop=True)
+        pdf = _by_bid(pdf)
         # a singleton group has one building: the kernel keeps its bid
         cid = _mst_cluster_kernel(pdf, coverage_thresh, 120.0, segs)["cluster_id"]
         cxy = _buffer_cells_np(pdf["rings"], 25.0, cell_size, labels=cid)
@@ -1243,9 +1310,8 @@ def _sorted_segs_np(pdf: pd.DataFrame, with_len: bool = True) -> np.ndarray:
     cols = ["x1", "y1", "x2", "y2"] + (["L"] if with_len else [])
     if not len(pdf):
         return np.empty((0, len(cols)))
-    return pdf.sort_values(["x1", "y1", "x2", "y2"]).reset_index(drop=True)[cols].to_numpy(
-        np.float64
-    )
+    arr = pdf[cols].to_numpy(np.float64)
+    return arr[np.lexsort(arr[:, 3::-1].T)]
 
 
 def _road_segments_np(roads: "pd.DataFrame | pa.Table") -> np.ndarray:
@@ -1567,21 +1633,24 @@ def full_delineation(
 
     Stages:
 
-    1. the buildings and roads are driver-built ``LocalTableScan``s;
-       density partitioning labels its dense cells with
-       ops.cell_components_df (on the driver up to
-       ops.DRIVER_LABEL_CAP cells) and assign_partitions_df keys every
-       building by broadcast join;
+    1. synth.buildings_pdf builds the scene once, on the driver, and
+       the filter runs there (config.filter_mask, the pandas twin of
+       the Spark predicate).  Up to ``cap`` filtered buildings (default
+       DRIVER_KERNEL_CAP) the density partitions come from
+       _density_partitions_np and every building is keyed by its
+       density cell in pandas (_keyed_buildings_np), so no Spark job
+       runs.  Beyond it the filtered frame becomes one driver-built
+       table (ops.local_df): density_partitions_df labels its dense
+       cells with ops.cell_components_df and assign_partitions_df keys
+       every building by broadcast join;
     2. mst_cluster_cells' kernel clusters each partition, buffers every
        cluster to cells and makes the AddSinglBdg singletons, one call
-       per group.  Up to ``cap`` filtered buildings (default
-       DRIVER_KERNEL_CAP) it runs on the driver: every keyed building
-       is fetched by one bounded Arrow collect (the kernel reads the
-       partitioned ones and those above 300 m², PatchRemove
-       all of them) and the road lines near them by another
-       (_part_road_segments).  Beyond it, or when the roads near the
-       buildings exceed ``cap``, the kernel runs in one grouped Python
-       stage, cogrouped with each partition's roads;
+       per group.  At the driver placement it runs on the driver over
+       the keyed rows (the partitioned ones and those above 300 m²),
+       with each partition's road segments cut from synth.roads_pdf by
+       _near_segments.  Beyond ``cap`` buildings, or when more than
+       ``cap`` road segments reach the partitions, it runs in one
+       grouped Python stage, cogrouped with each partition's roads;
     3. PatchRemove, then [EdgeCatch]: after the driver kernel (without
        EdgeCatch) _patch_remove_np on the driver; otherwise the JVM
        joins of patch_remove and edge_catch;
@@ -1595,48 +1664,50 @@ def full_delineation(
 
     Materialisation points:
 
-    - driver placement: the two bounded fetches of stage 2 and nothing
-      else; with EdgeCatch the cells become a driver-built table that
-      PatchRemove's stats join, its ``left_semi`` join and the
-      singletons' pass-through read without recomputation, and the
-      stitched cells are fetched once more by _close_on_driver;
-    - grouped placement: an eager ``localCheckpoint`` of the kernel's
-      output, for the same three readers, and the stitched-cells fetch
-      of _close_on_driver.
+    - driver placement: none before the caller's action; with EdgeCatch
+      the kernel's cells become a driver-built table that PatchRemove's
+      stats join, its ``left_semi`` join and the singletons'
+      pass-through read without recomputation, and the stitched cells
+      are fetched once by _close_on_driver;
+    - grouped placement: the dense-cell fetch of
+      ops.cell_components_df, an eager ``localCheckpoint`` of the
+      kernel's output, for the same three readers, and the
+      stitched-cells fetch of _close_on_driver.
     """
     from . import synth
-    from .config import filter_predicate
 
-    b = synth.buildings_df(spark, per_cluster=per_cluster)
-    # InputHU_Filter: positive use codes + >= 35 m² (IB-Tool2.py:831-40)
-    b = b.filter(filter_predicate(F.col("fkt"), list(synth.POS_FKT)) & (F.col("area") >= 35.0))
-
-    cent_pts = b.select("bid", F.col("cx").alias("x"), F.col("cy").alias("y"))
-    parts = density_partitions_df(
-        cent_pts.withColumn("image_id", F.col("bid").cast("string")), 150.0, 300.0, 1e-5
-    )
-    keyed = assign_partitions_df(
-        b.withColumn("x", F.col("cx")).withColumn("y", F.col("cy")), parts, 150.0
-    )
-
-    roads = synth.roads_df(spark).select("rid", "line") if use_roads else None
-    edge_catching = use_edge_catch and roads is not None
+    b = _filtered_buildings(synth.buildings_pdf(per_cluster=per_cluster))
+    lines = synth.roads_pdf()[["rid", "line"]] if use_roads else None
+    edge_catching = use_edge_catch and use_roads
     kernel = _mst_cells_kernel(coverage_thresh, cell_size)
-    everyone = _mst_cells_input(keyed)
-    table = ops.collect_bounded(everyone, cap)
     rows = None
-    if table is not None:
-        pdf = table.to_pandas()
-        kernel_rows = pdf[pdf["part"].notna() | (pdf["area"] > _SINGLE_MIN_AREA)]
-        rows = _kernel_on_driver(kernel_rows, "grp", roads, kernel, cap)
+    if len(b) <= cap:
+        keyed = _keyed_buildings_np(b)
+        kernel_rows = keyed[keyed["part"].notna() | (keyed["area"] > _SINGLE_MIN_AREA)]
+        near = {} if lines is None else _near_segments(kernel_rows, lines, cap)
+        if near is not None:
+            rows = _run_groups(kernel_rows, "grp", kernel, near)
     if rows is not None and not edge_catching:
-        counts = _finish_on_driver(spark, rows, pdf, cell_size, min_bdg_count)
+        counts = _finish_on_driver(spark, rows, b, cell_size, min_bdg_count)
         return _with_area(counts, cell_size)
 
+    b_df = ops.local_df(spark, b, synth.BUILDINGS_SCHEMA)
+    roads = None
+    if lines is not None:
+        roads = ops.local_df(spark, lines, "rid long, line array<array<double>>")
     if rows is not None:
         clustered = ops.local_df(spark, rows, MST_CELLS_SCHEMA)
     else:
-        prepared = everyone.filter(F.col("part").isNotNull() | (F.col("area") > _SINGLE_MIN_AREA))
+        cent_pts = b_df.select("bid", F.col("cx").alias("x"), F.col("cy").alias("y"))
+        parts = density_partitions_df(
+            cent_pts.withColumn("image_id", F.col("bid").cast("string")), 150.0, 300.0, 1e-5
+        )
+        keyed_df = assign_partitions_df(
+            b_df.withColumn("x", F.col("cx")).withColumn("y", F.col("cy")), parts, 150.0
+        )
+        prepared = _mst_cells_input(keyed_df).filter(
+            F.col("part").isNotNull() | (F.col("area") > _SINGLE_MIN_AREA)
+        )
         clustered = _per_partition_grouped(
             prepared, "grp", roads, 1024.0, kernel, MST_CELLS_SCHEMA
         ).localCheckpoint(eager=True)
@@ -1647,7 +1718,7 @@ def full_delineation(
     # final merge after the density-based filters)
     main = clustered.filter(~F.col("single")).select("gx", "gy", "cluster_id")
     single = clustered.filter(F.col("single")).select("gx", "gy", "cluster_id")
-    cells = patch_remove(main, b, cell_size, min_bdg_count=min_bdg_count, min_patch_cells=4)
+    cells = patch_remove(main, b_df, cell_size, min_bdg_count=min_bdg_count, min_patch_cells=4)
     cells = cells.unionByName(single)
     if edge_catching:
         cells = edge_catch(cells, roads, cell_size)
@@ -1661,6 +1732,33 @@ def full_delineation(
     else:
         counts = _boundary_counts(spark, closed)
     return _with_area(counts, cell_size)
+
+
+def _filtered_buildings(pdf: pd.DataFrame) -> pd.DataFrame:
+    """InputHU_Filter over a buildings frame (synth.buildings_pdf's
+    columns): positive use codes and at least 35 m² (IB-Tool2.py:831-40)."""
+    from . import synth
+    from .config import filter_mask
+
+    keep = filter_mask(pdf["fkt"], list(synth.POS_FKT)) & (pdf["area"].to_numpy() >= 35.0)
+    return pdf[keep].reset_index(drop=True)
+
+
+def _keyed_buildings_np(b: pd.DataFrame) -> pd.DataFrame:
+    """The driver twin of _mst_cells_input(assign_partitions_df(…)):
+    every building of ``b`` as (bid, rings, cx, cy, area, part, grp),
+    ``part`` its density cell's partition from _density_partitions_np
+    (null outside every one) and ``grp`` the partition or
+    ``single_<bid>``."""
+    parts = _density_partitions_np(b["cx"].to_numpy(), b["cy"].to_numpy(), 150.0, 300.0, 1e-5)
+    keyed = b[["bid", "rings", "cx", "cy", "area"]].assign(
+        gx=np.floor(b["cx"].to_numpy(np.float64) / 150.0).astype(np.int64),
+        gy=np.floor(b["cy"].to_numpy(np.float64) / 150.0).astype(np.int64),
+    )
+    keyed = keyed.merge(parts, on=["gx", "gy"], how="left").rename(columns={"part_name": "part"})
+    single = "single_" + keyed["bid"].astype(str)
+    grp = keyed["part"].where(keyed["part"].notna(), single)
+    return keyed.drop(columns=["gx", "gy"]).assign(grp=grp)
 
 
 def _finish_on_driver(

@@ -988,29 +988,28 @@ def main_angle(angles: np.ndarray, lengths: np.ndarray, maxdiff: float = 10.0) -
     order = np.argsort(angles, kind="stable")
     a_sorted = angles[order]
     l_sorted = lengths[order]
-    # chain grouping
-    groups: list[list[int]] = [[0]]
-    for i in range(1, a_sorted.shape[0]):
-        if abs(a_sorted[i] - a_sorted[groups[-1][-1]]) < maxdiff:
-            groups[-1].append(i)
-        else:
-            groups.append([i])
-    sums = [float(l_sorted[g].sum()) for g in groups]
-    lg = groups[int(np.argmax(sums))]
+    # chain grouping: the sorted angles split where a gap is not below
+    # maxdiff; each group's length sum is numpy's sum over its slice
+    cuts = np.flatnonzero(~(np.abs(np.diff(a_sorted)) < maxdiff)) + 1
+    bounds = np.concatenate([[0], cuts, [a_sorted.shape[0]]])
+    sums = [float(l_sorted[lo:hi].sum()) for lo, hi in zip(bounds[:-1], bounds[1:])]
+    k = int(np.argmax(sums))
+    ga = a_sorted[bounds[k] : bounds[k + 1]].tolist()
+    gl = l_sorted[bounds[k] : bounds[k + 1]].tolist()
     # per-run (equal consecutive angle) length sums, last run dropped
     s = 0.0
-    g1 = a_sorted[lg[0]]
+    g1 = ga[0]
     lengthsum: list[float] = []
-    for idx in lg:
-        if g1 == a_sorted[idx]:
-            s += float(l_sorted[idx])
+    for a, length in zip(ga, gl):
+        if g1 == a:
+            s += length
         else:
             lengthsum.append(s)
-            s = float(l_sorted[idx])
-        g1 = a_sorted[idx]
+            s = length
+        g1 = a
     if not lengthsum:
         lengthsum.append(s)
-    return float(a_sorted[lg[int(np.argmax(lengthsum))]])
+    return float(ga[int(np.argmax(lengthsum))])
 
 
 def main_angle_rect(

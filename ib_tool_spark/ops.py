@@ -328,13 +328,13 @@ def pip_join(
             # the driver-local relation saves ~0.15 s per run (measured
             # at 12 cores) — a per-job fixed cost, so it matters most
             # for short jobs and small-cluster scaling legs
-            cover = spark.createDataFrame(
-                _cover_with_edges_pdf(polygons, res, grid), _COVER_EDGES_SCHEMA
+            cover = local_df(
+                spark, _cover_with_edges_pdf(polygons, res, grid), _COVER_EDGES_SCHEMA
             ).persist()
             bc = None
         else:
-            cover = spark.createDataFrame(
-                polygon_cover_pdf(polygons, res, grid), "cell long, sid long, full boolean"
+            cover = local_df(
+                spark, polygon_cover_pdf(polygons, res, grid), "cell long, sid long, full boolean"
             )
             rings_by_sid = {
                 sid: [np.asarray(r, dtype=np.float64) for r in rings]
@@ -558,6 +558,14 @@ def knn_assign(
 # ---------------------------------------------------------------------------
 
 
+def density_offsets(cell_size: float, radius: float) -> np.ndarray:
+    """(k, 2) int64 (dx, dy) cell offsets of density_grid's disk: the
+    square ring of floor(radius / cell_size) cells, less the offsets
+    farther than ``radius`` in cell units."""
+    offs = k_ring_offsets(int(np.floor(radius / cell_size)))
+    return offs[offs[:, 0] ** 2 + offs[:, 1] ** 2 <= (radius / cell_size) ** 2]
+
+
 def density_grid(
     points: DataFrame,
     cell_size: float,
@@ -575,10 +583,7 @@ def density_grid(
     Density = Σ count(neighbors within radius) / (π r²), mirroring
     arcpy.sa.PointDensity with a Circle kernel (IB-Tool2.py:799-801).
     """
-    r_cells = int(np.floor(radius / cell_size))
-    offs = k_ring_offsets(r_cells)
-    keep = offs[:, 0] ** 2 + offs[:, 1] ** 2 <= (radius / cell_size) ** 2
-    offs = offs[keep]
+    offs = density_offsets(cell_size, radius)
     binned = (
         points.withColumn("gx", F.floor((F.col("x") - F.lit(x0)) / F.lit(cell_size)).cast("long"))
         .withColumn("gy", F.floor((F.col("y") - F.lit(y0)) / F.lit(cell_size)).cast("long"))
@@ -874,7 +879,7 @@ def within_distance_join(
             "cy": np.repeat(cxy[:, 1], reps)[ok],
         }
     )
-    cand_df = spark.createDataFrame(cand, "cell long, center_id long, cx double, cy double")
+    cand_df = local_df(spark, cand, "cell long, center_id long, cx double, cy double")
     pts = points.withColumn("__kcell", encode_col(F.col("x"), F.col("y"), res, grid))
     joined = pts.join(F.broadcast(cand_df), pts["__kcell"] == cand_df["cell"], "inner").drop(
         cand_df["cell"]

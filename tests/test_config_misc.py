@@ -47,6 +47,11 @@ def test_filter_predicate(spark):
     pred = config.filter_predicate(F.col("fkt"), ["31001_1000", "31001_1010"])
     got = [r.fkt for r in df.filter(pred).collect()]
     assert got == ["31001_1000", "31001_1010x"]
+    # the pandas twin keeps the same rows, and drops a NULL code as the
+    # predicate does
+    codes = pd.Series(["31001_1000", "31001_1010x", "31001_2721", None, "3100"])
+    mask = config.filter_mask(codes, ["31001_1000", "31001_1010"])
+    assert mask.tolist() == [True, True, False, False, False]
 
 
 def test_perp_foot():

@@ -60,6 +60,49 @@ def test_density_partitions_cover_clusters(spark, image_points):
     )
 
 
+def _density_points(seed: int) -> pd.DataFrame:
+    """Seeded points for the density partitioners: a scattered cluster
+    across negative coordinates, points on exact multiples of the
+    150 m cell, and isolated pairs and triples in one cell, whose
+    neighbourhood sums (2 and 3) sit either side of the 1e-5
+    threshold (2 / (π·300²) < 1e-5 < 3 / (π·300²))."""
+    rng = np.random.default_rng(seed)
+    xy = [rng.normal([-1_000.0, 2_000.0], 250.0, size=(400, 2))]
+    grid = np.array([-450.0, -150.0, 0.0, 150.0, 3_000.0])
+    xy.append(np.column_stack([rng.choice(grid, 60), rng.choice(grid, 60)]))
+    for k, n in enumerate([2, 3, 2, 3, 3]):
+        base = np.array([20_000.0 + 5_000.0 * k, -7_000.0 - 150.0 * k])
+        xy.append(base + rng.uniform(0.0, 149.0, size=(n, 2)))
+    xy = np.concatenate(xy)
+    return pd.DataFrame({"x": xy[:, 0], "y": xy[:, 1]})
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_density_partitions_np_matches_spark(spark, seed):
+    """The driver density partitions (_density_partitions_np) equal
+    density_partitions_df's (gx, gy, part_name) rows, on seeded points
+    that reach the threshold's edge and on the filtered scene."""
+    pdf = _density_points(seed)
+    pts = spark.createDataFrame(pdf, "x double, y double")
+    nsum = set(ops.density_grid(pts, 150.0, 300.0).toPandas()["nsum"])
+    assert {2, 3} <= nsum
+    want = delineate.density_partitions(pts, 150.0, 300.0, 1e-5)
+    got = delineate._density_partitions_np(pdf["x"].to_numpy(), pdf["y"].to_numpy())
+    pd.testing.assert_frame_equal(got, want)
+    assert (got["gx"] < 0).any() and got["part_name"].nunique() >= 4
+
+    b = delineate._filtered_buildings(synth.buildings_pdf(per_cluster=20))
+    scene = spark.createDataFrame(
+        b[["cx", "cy"]].rename(columns={"cx": "x", "cy": "y"}), "x double, y double"
+    )
+    want = delineate.density_partitions(scene, 150.0, 300.0, 1e-5)
+    got = delineate._density_partitions_np(b["cx"].to_numpy(), b["cy"].to_numpy())
+    pd.testing.assert_frame_equal(got, want)
+
+    empty = delineate._density_partitions_np(np.empty(0), np.empty(0))
+    assert list(empty.columns) == ["gx", "gy", "part_name"] and empty.empty
+
+
 def test_buffer_mask_covers_points(spark, image_points):
     sub = image_points.limit(300)
     cells_df, polys = delineate.buffer_mask(sub, radius=400.0, cell_size=100.0)

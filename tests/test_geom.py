@@ -291,6 +291,63 @@ def test_main_angle_grouping_quirks():
     assert geom.main_angle(angles2, lengths2, 10.0) == 0.0
 
 
+def _main_angle_loop(angles, lengths, maxdiff=10.0):
+    """geom.main_angle as a per-segment loop: the reference's chain
+    grouping and per-run sums, one element at a time."""
+    order = np.argsort(angles, kind="stable")
+    a_sorted, l_sorted = angles[order], lengths[order]
+    groups = [[0]]
+    for i in range(1, a_sorted.shape[0]):
+        if abs(a_sorted[i] - a_sorted[groups[-1][-1]]) < maxdiff:
+            groups[-1].append(i)
+        else:
+            groups.append([i])
+    sums = [float(l_sorted[g].sum()) for g in groups]
+    lg = groups[int(np.argmax(sums))]
+    s, g1, lengthsum = 0.0, a_sorted[lg[0]], []
+    for idx in lg:
+        if g1 == a_sorted[idx]:
+            s += float(l_sorted[idx])
+        else:
+            lengthsum.append(s)
+            s = float(l_sorted[idx])
+        g1 = a_sorted[idx]
+    if not lengthsum:
+        lengthsum.append(s)
+    return float(a_sorted[lg[int(np.argmax(lengthsum))]])
+
+
+def test_main_angle_matches_the_per_segment_loop():
+    """The vectorised chain grouping returns the loop's angle bit for
+    bit, on seeded angles with repeated values, gaps of exactly 10.0
+    (a split) and gaps a rounding step either side of it, and long runs
+    whose length sums depend on summation order."""
+    rng = np.random.default_rng(7)
+    grid = np.concatenate([np.arange(0.0, 181.0, 10.0), [20.3, 30.3, 29.9, 40.1, 50.0, 59.9]])
+    for trial in range(600):
+        n = int(rng.integers(1, 80))
+        if trial % 3 == 0:
+            angles = rng.choice(grid, n)
+        elif trial % 3 == 1:
+            angles = np.round(rng.uniform(0.0, 180.0, n), 1)
+        else:
+            angles = np.round(rng.choice(grid, n) + rng.choice([0.0, 0.1, -0.1], n), 1)
+        lengths = rng.choice([1.0, 2.5, 0.1, 1e-3], n) if trial % 2 else rng.uniform(0.0, 30.0, n)
+        want = _main_angle_loop(angles, lengths)
+        assert geom.main_angle(angles, lengths, 10.0) == want, (trial, angles, lengths)
+    # a group's length sum is numpy's (pairwise) sum: these 16 lengths
+    # sum to 269.638 that way and to 269.63800000000003 one at a time,
+    # so a sequential sum would pick the group at 100° over the tie at 0°
+    group = [25.895, 16.244, 8.991, 12.681, 0.85, 3.728, 20.119, 19.416,
+             18.462, 11.51, 29.916, 29.425, 20.566, 19.514, 20.653, 11.668]
+    angles = np.array([0.0] + [100.0 + 0.1 * i for i in range(16)])
+    lengths = np.array([float(np.sum(group))] + group)
+    assert geom.main_angle(angles, lengths, 10.0) == _main_angle_loop(angles, lengths) == 0.0
+    # a gap of exactly maxdiff starts a new group; one just below does not
+    assert geom.main_angle(np.array([0.0, 10.0, 10.0]), np.array([3.0, 2.0, 2.0])) == 10.0
+    assert geom.main_angle(np.array([0.0, 9.9, 9.9]), np.array([3.0, 2.0, 2.0])) == 0.0
+
+
 def test_buffer_polygon_closed_form():
     # round buffer of a rotated square: A + P*r + pi*r^2, with the
     # inscribed-n-gon arc deficit bounded by sin(2pi/n)*n/(2pi)

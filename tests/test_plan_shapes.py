@@ -248,6 +248,25 @@ def test_driver_built_relations_scan_locally(spark, arrow):
     _assert_local_scan(blocks)
     assert blocks.count() == 2
 
+    # pip_join's cover under either refine and within_distance_join's
+    # candidates.  The coordinates differ per Arrow setting so the cover
+    # cache of one parameter cannot serve the other.
+    base = 70_000.0 + (0.0 if arrow == "true" else 1_000.0)
+    pts = ops.with_cell(
+        ops.local_df(spark, [(0, base, base), (1, base + 500.0, base)], "pid long, x double, y double"),
+        10,
+    )
+    polys = [(0, "A", [geom.rect_ring(base, base, 100.0, 100.0, 0.0).tolist()])]
+    for refine in ("sql", "pandas"):
+        joined = ops.pip_join(pts, polys, 10, refine=refine)
+        cover, _bc = list(ops._COVER_CACHE.values())[-1]  # built by this call
+        _assert_local_scan(cover)
+        assert [r.pid for r in joined.collect()] == [0]
+    centers = pd.DataFrame({"center_id": [7], "cx": [base], "cy": [base]})
+    near = ops.within_distance_join(pts, centers, 200.0)
+    _assert_local_scan(near)
+    assert [(r.pid, r.center_id) for r in near.collect()] == [(0, 7)]
+
 
 def test_cell_components_small_path_scans_locally(spark, arrow):
     """A cell set under the cap is labeled on the driver: the result is a
@@ -308,10 +327,11 @@ def _sql_status(spark):
 
 def test_full_delineation_runs_one_grouped_python_stage(spark, arrow):
     """Across every action of one call (the final collect included):
-    at the default cap the per-partition kernel and the whole finish
-    (PatchRemove, the stitch, HoleClose) run on the driver, so no Python
-    plan node runs at all and the call runs at most 10 Spark jobs; with
-    the kernel cap forced to 0, clustering, AddSinglBdg and the buffered
+    at the default cap the density partitions, the per-partition kernel
+    and the whole finish (PatchRemove, the stitch, HoleClose) run on the
+    driver, so building the frame starts no Spark job, no Python plan
+    node runs at all and the collect runs at most 3 jobs; with the
+    kernel cap forced to 0, clustering, AddSinglBdg and the buffered
     dissolve share exactly one cogroup stage."""
     sc = spark.sparkContext
 
@@ -321,23 +341,26 @@ def test_full_delineation_runs_one_grouped_python_stage(spark, arrow):
         group = f"full_delineation_{arrow}_{kw}"
         sc.setJobGroup(group, group)
         try:
-            delineate.full_delineation(spark, per_cluster=20, **kw).collect()
+            df = delineate.full_delineation(spark, per_cluster=20, **kw)
+            built = list(sc.statusTracker().getJobIdsForGroup(group))
+            df.collect()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         store, conv = _sql_status(spark)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         # physical-plan node names of every new execution (adaptive final plans)
-        return jobs, [
+        return built, jobs, [
             n.name()
             for e in conv.asJava(store.executionsList())
             if e.executionId() not in before
             for n in conv.asJava(store.planGraph(e.executionId()).allNodes())
         ]
 
-    jobs, names = plan_nodes()
+    built, jobs, names = plan_nodes()
+    assert built == [], built
     python = [n for n in names if "InPandas" in n or "EvalPython" in n or "ExistingRDD" in n]
     assert not python, names
-    assert 0 < len(jobs) <= 10, (len(jobs), names)
-    _jobs, names = plan_nodes(cap=0)
+    assert 0 < len(jobs) <= 3, (len(jobs), names)
+    _built, _jobs, names = plan_nodes(cap=0)
     assert names.count("FlatMapCoGroupsInPandas") == 1, names
     assert "FlatMapGroupsInPandas" not in names, names
