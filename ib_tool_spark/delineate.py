@@ -334,12 +334,6 @@ def buffer_mask(
 CLUSTER_SCHEMA = "bid long, cluster_id long, part string"
 
 
-def _by_bid(pdf: pd.DataFrame) -> pd.DataFrame:
-    """``pdf`` in ascending bid order (a grouped stage delivers a
-    group's rows unordered; _run_groups presorts them)."""
-    return pdf if pdf["bid"].is_monotonic_increasing else pdf.sort_values("bid")
-
-
 def _mst_cluster_kernel(
     pdf: pd.DataFrame,
     coverage_thresh: float,
@@ -370,7 +364,7 @@ def _mst_cluster_kernel(
     # applyInPandas gives no within-group row order; node indices and all
     # edge tie-breaks derive from row position, so pin them to bid order
     # or the output flips run-to-run (10/10 permutations differed).
-    pdf = _by_bid(pdf)
+    pdf = pdf.sort_values("bid").reset_index(drop=True)
     n = len(pdf)
     part = pdf["part"].iloc[0] if n else ""
     bids = pdf["bid"].to_numpy(dtype=np.int64)
@@ -476,6 +470,10 @@ def _mst_cluster_kernel(
 #
 # The driver wins at 1,653 rows, draws at 6,533 and loses at 25,811;
 # the cap sits just above the draw (PLANS.md, "full_delineation").
+# The table predates full_delineation's numpy front-end: its driver
+# placement still fetched the keyed buildings and the road lines from
+# Spark.  The crossover of the current placement is not re-measured,
+# and no benchmark workload runs above the cap.
 DRIVER_KERNEL_CAP = 8_192
 
 
@@ -573,10 +571,7 @@ def _run_groups(
 ) -> "pd.DataFrame | list":
     """``kernel(group, segments)`` over every ``key`` group of ``pdf``
     in key order, where ``segments`` is ``near[key]`` or ``road_segs``;
-    the concatenated rows, or ``[]`` when there are none.  The rows are
-    sorted by (key, bid) once, so each group reaches the kernel in the
-    bid order it pins."""
-    pdf = pdf.sort_values([key, "bid"])
+    the concatenated rows, or ``[]`` when there are none."""
     out = [kernel(g, near.get(k, road_segs)) for k, g in pdf.groupby(key, sort=True, dropna=False)]
     return pd.concat(out, ignore_index=True) if out else []
 
@@ -742,6 +737,12 @@ def mst_cluster_cells(
 _SINGLE_MIN_AREA = 300.0
 
 
+MST_CELLS_INPUT_SCHEMA = (
+    "bid long, rings array<array<array<double>>>, cx double, cy double, "
+    "area double, part string, grp string"
+)
+
+
 def _mst_cells_input(buildings: DataFrame) -> DataFrame:
     """Every building keyed by assign_partitions_df as
     mst_cluster_cells' kernel reads it: (bid, rings, cx, cy, area, part,
@@ -760,7 +761,7 @@ def _mst_cells_kernel(coverage_thresh: float, cell_size: float):
     MST_CELLS_SCHEMA."""
 
     def kernel(pdf: pd.DataFrame, segs: "np.ndarray | None") -> pd.DataFrame:
-        pdf = _by_bid(pdf)
+        pdf = pdf.sort_values("bid").reset_index(drop=True)
         # a singleton group has one building: the kernel keeps its bid
         cid = _mst_cluster_kernel(pdf, coverage_thresh, 120.0, segs)["cluster_id"]
         cxy = _buffer_cells_np(pdf["rings"], 25.0, cell_size, labels=cid)
@@ -1310,8 +1311,9 @@ def _sorted_segs_np(pdf: pd.DataFrame, with_len: bool = True) -> np.ndarray:
     cols = ["x1", "y1", "x2", "y2"] + (["L"] if with_len else [])
     if not len(pdf):
         return np.empty((0, len(cols)))
-    arr = pdf[cols].to_numpy(np.float64)
-    return arr[np.lexsort(arr[:, 3::-1].T)]
+    return pdf.sort_values(["x1", "y1", "x2", "y2"]).reset_index(drop=True)[cols].to_numpy(
+        np.float64
+    )
 
 
 def _road_segments_np(roads: "pd.DataFrame | pa.Table") -> np.ndarray:
@@ -1635,21 +1637,18 @@ def full_delineation(
 
     1. synth.buildings_pdf builds the scene once, on the driver, and
        the filter runs there (config.filter_mask, the pandas twin of
-       the Spark predicate).  Up to ``cap`` filtered buildings (default
-       DRIVER_KERNEL_CAP) the density partitions come from
+       the Spark predicate); the density partitions come from
        _density_partitions_np and every building is keyed by its
-       density cell in pandas (_keyed_buildings_np), so no Spark job
-       runs.  Beyond it the filtered frame becomes one driver-built
-       table (ops.local_df): density_partitions_df labels its dense
-       cells with ops.cell_components_df and assign_partitions_df keys
-       every building by broadcast join;
+       density cell in pandas (_keyed_buildings_np), with no Spark job;
     2. mst_cluster_cells' kernel clusters each partition, buffers every
        cluster to cells and makes the AddSinglBdg singletons, one call
-       per group.  At the driver placement it runs on the driver over
-       the keyed rows (the partitioned ones and those above 300 m²),
-       with each partition's road segments cut from synth.roads_pdf by
-       _near_segments.  Beyond ``cap`` buildings, or when more than
-       ``cap`` road segments reach the partitions, it runs in one
+       per group, over the keyed rows (the partitioned ones and those
+       above 300 m²).  Up to ``cap`` filtered buildings (default
+       DRIVER_KERNEL_CAP) it runs on the driver, with each partition's
+       road segments cut from synth.roads_pdf by _near_segments.
+       Beyond ``cap`` buildings, or when more than ``cap`` road
+       segments reach the partitions, the keyed rows become one
+       driver-built table (ops.local_df) and the kernel runs in one
        grouped Python stage, cogrouped with each partition's roads;
     3. PatchRemove, then [EdgeCatch]: after the driver kernel (without
        EdgeCatch) _patch_remove_np on the driver; otherwise the JVM
@@ -1669,10 +1668,9 @@ def full_delineation(
       stats join, its ``left_semi`` join and the singletons'
       pass-through read without recomputation, and the stitched cells
       are fetched once by _close_on_driver;
-    - grouped placement: the dense-cell fetch of
-      ops.cell_components_df, an eager ``localCheckpoint`` of the
-      kernel's output, for the same three readers, and the
-      stitched-cells fetch of _close_on_driver.
+    - grouped placement: an eager ``localCheckpoint`` of the kernel's
+      output, for the same three readers, and the stitched-cells fetch
+      of _close_on_driver.
     """
     from . import synth
 
@@ -1680,10 +1678,10 @@ def full_delineation(
     lines = synth.roads_pdf()[["rid", "line"]] if use_roads else None
     edge_catching = use_edge_catch and use_roads
     kernel = _mst_cells_kernel(coverage_thresh, cell_size)
+    keyed = _keyed_buildings_np(b)
+    kernel_rows = keyed[keyed["part"].notna() | (keyed["area"] > _SINGLE_MIN_AREA)]
     rows = None
     if len(b) <= cap:
-        keyed = _keyed_buildings_np(b)
-        kernel_rows = keyed[keyed["part"].notna() | (keyed["area"] > _SINGLE_MIN_AREA)]
         near = {} if lines is None else _near_segments(kernel_rows, lines, cap)
         if near is not None:
             rows = _run_groups(kernel_rows, "grp", kernel, near)
@@ -1698,16 +1696,7 @@ def full_delineation(
     if rows is not None:
         clustered = ops.local_df(spark, rows, MST_CELLS_SCHEMA)
     else:
-        cent_pts = b_df.select("bid", F.col("cx").alias("x"), F.col("cy").alias("y"))
-        parts = density_partitions_df(
-            cent_pts.withColumn("image_id", F.col("bid").cast("string")), 150.0, 300.0, 1e-5
-        )
-        keyed_df = assign_partitions_df(
-            b_df.withColumn("x", F.col("cx")).withColumn("y", F.col("cy")), parts, 150.0
-        )
-        prepared = _mst_cells_input(keyed_df).filter(
-            F.col("part").isNotNull() | (F.col("area") > _SINGLE_MIN_AREA)
-        )
+        prepared = ops.local_df(spark, kernel_rows, MST_CELLS_INPUT_SCHEMA)
         clustered = _per_partition_grouped(
             prepared, "grp", roads, 1024.0, kernel, MST_CELLS_SCHEMA
         ).localCheckpoint(eager=True)
