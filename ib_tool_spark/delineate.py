@@ -338,10 +338,43 @@ def _mst_cluster_kernel(
     pdf: pd.DataFrame,
     coverage_thresh: float,
     max_edge: float,
-    road_segs: "np.ndarray | None" = None,
+    road_segs: "np.ndarray | dict | None" = None,
 ) -> pd.DataFrame:
-    """Greedy MST clustering of one partition's buildings —
-    the reference's MST_Clustering walk (IB-Tool2.py:1459-1646):
+    """Greedy MST clustering of every ``part`` group (partition) of
+    ``pdf`` in one call → (bid, cluster_id, part) rows, groups in part
+    order (ascending, nulls last, as pandas groupby orders them), bid
+    order within each: the rows one call per group gives.
+    ``road_segs`` is one (M, 5) road-segment array for every group, a
+    {part: array} dict (a group it does not name gets none), or
+    ``None``.  The clustering is _mst_cluster_ids'."""
+    pdf, grp, keys = _by_group(pdf, "part")
+    cid = _mst_cluster_ids(pdf, grp, keys, coverage_thresh, max_edge, road_segs)
+    return pd.DataFrame(
+        {"bid": pdf["bid"].to_numpy(np.int64), "cluster_id": cid, "part": pdf["part"].to_numpy()}
+    )
+
+
+def _by_group(pdf: pd.DataFrame, key: str) -> "tuple[pd.DataFrame, np.ndarray, list]":
+    """``pdf`` sorted once by (``key``, bid), its keys in pandas groupby
+    order (ascending, nulls last), with each row's group number and the
+    key of each group number (``None`` for the null key)."""
+    codes, keys = pd.factorize(pdf[key], sort=True)
+    codes = np.where(codes < 0, len(keys), codes)
+    order = np.lexsort((pdf["bid"].to_numpy(np.int64), codes))
+    return pdf.iloc[order].reset_index(drop=True), codes[order], [*keys, None]
+
+
+def _mst_cluster_ids(
+    pdf: pd.DataFrame,
+    grp: np.ndarray,
+    keys: list,
+    coverage_thresh: float,
+    max_edge: float,
+    road_segs: "np.ndarray | dict | None",
+) -> np.ndarray:
+    """Cluster id of every row of ``pdf`` (sorted by group number
+    ``grp``, then bid, as _by_group leaves it), each group clustered on
+    its own — the reference's MST_Clustering walk (IB-Tool2.py:1459-1646):
 
     - MST edges (Kruskal over the road-pruned Delaunay graph, weights =
       min building-to-building vertex distance) walked shortest-first;
@@ -356,48 +389,61 @@ def _mst_cluster_kernel(
       rejection the bare pair is retried as a fresh 2-group, which can
       reassign an already-grouped footprint (last assignment wins).
 
-    Deterministic: edges ordered by (weight, src bid, dst bid) — the
-    reference's tie order is its arcpy FID order, which has no
-    equivalent here, so ties are pinned explicitly.  cluster_id =
-    min bid of the (final) group; ungrouped buildings stay singletons.
-    """
-    # applyInPandas gives no within-group row order; node indices and all
-    # edge tie-breaks derive from row position, so pin them to bid order
-    # or the output flips run-to-run (10/10 permutations differed).
-    pdf = pdf.sort_values("bid").reset_index(drop=True)
-    n = len(pdf)
-    part = pdf["part"].iloc[0] if n else ""
-    bids = pdf["bid"].to_numpy(dtype=np.int64)
-    if n == 1:
-        return pd.DataFrame({"bid": bids, "cluster_id": bids, "part": [part]})
-    cents = np.stack([pdf["cx"].to_numpy(), pdf["cy"].to_numpy()], axis=1)
-    # Arrow delivers nested arrays as object arrays; vstack normalizes
-    rings = [np.vstack([np.asarray(v, dtype=np.float64) for v in r[0]]) for r in pdf["rings"]]
-    areas = pdf["area"].to_numpy(dtype=np.float64)
+    Deterministic: node indices follow bid order within a group and
+    edges are ordered by (weight, src, dst) — the reference's tie order
+    is its arcpy FID order, which has no equivalent here, so ties are
+    pinned explicitly.  cluster_id = min bid of the (final) group;
+    ungrouped buildings stay singletons.
 
-    d_edges = geom.delaunay_edges(cents)
-    if road_segs is not None and d_edges.shape[0]:
-        # X3: edges crossing (non-dead-end) roads never merge clusters
-        d_edges = prune_edges_by_roads(cents, d_edges, road_segs)
-    if d_edges.shape[0] == 0:
-        return pd.DataFrame({"bid": bids, "cluster_id": bids, "part": part})
-    # min vertex-to-vertex distance per edge (IB-Tool2.py:1382-94)
-    w = np.array(
-        [geom.min_vertex_distance(rings[a], rings[b]) for a, b in d_edges], dtype=np.float64
+    All groups run together: one lock-step Delaunay
+    (geom.delaunay_edges_batch), one weight pass, one Kruskal and one
+    walk over every group's MST edges.  Groups share no node, so each
+    group's picks and accept tests are those of a call over it alone.
+    A group of one row keeps its bid without any of it."""
+    bids = pdf["bid"].to_numpy(np.int64)
+    cid = bids.copy()
+    rows = np.flatnonzero(np.bincount(grp)[grp] > 1)
+    if not rows.size:
+        return cid
+    g = grp[rows]
+    cents = np.column_stack(
+        [pdf["cx"].to_numpy(np.float64)[rows], pdf["cy"].to_numpy(np.float64)[rows]]
     )
+    edges = geom.delaunay_edges_batch(cents, g)
+    if isinstance(road_segs, dict):
+        # X3: edges crossing (non-dead-end) roads never merge clusters;
+        # edges come sorted by group, so each group's run is one slice
+        def pruned(e: np.ndarray) -> np.ndarray:
+            segs = road_segs.get(keys[g[e[0, 0]]]) if e.shape[0] else None
+            return e if segs is None else prune_edges_by_roads(cents, e, segs)
+
+        runs = np.split(edges, np.flatnonzero(np.diff(g[edges[:, 0]])) + 1)
+        edges = np.concatenate([pruned(e) for e in runs])
+    elif road_segs is not None:
+        edges = prune_edges_by_roads(cents, edges, road_segs)
+
+    # Arrow delivers nested arrays as object arrays; coerce_ring stacks them
+    outer = [geom.coerce_ring(r[0]) for r in pdf["rings"].to_numpy()[rows]]
+    n_v = np.array([len(r) for r in outer])
+    flat = np.concatenate(outer)
+    # min vertex-to-vertex distance per edge (IB-Tool2.py:1382-94)
+    w = geom.min_vertex_distances(flat, n_v, edges[:, 0], edges[:, 1])
     keep = w <= max_edge
-    d_edges, w = d_edges[keep], w[keep]
-    if d_edges.shape[0] == 0:
-        return pd.DataFrame({"bid": bids, "cluster_id": bids, "part": part})
-    ewd = np.column_stack([d_edges.astype(np.float64), w])
-    mst_idx = geom.kruskal_mst(n, ewd)
-    mst = ewd[mst_idx]
+    edges, w = edges[keep], w[keep]
+    if edges.shape[0] == 0:
+        return cid
+    ewd = np.column_stack([edges.astype(np.float64), w])
+    mst = ewd[geom.kruskal_mst(rows.size, ewd)]
     order = np.lexsort((mst[:, 1], mst[:, 0], mst[:, 2]))
 
-    segs_by_i = [geom.ring_segments(r) for r in rings]
-    # main_angle_rect's rounded angles are per segment: compute each
-    # footprint's once, not per candidate group
-    ang_by_i = [np.round(geom.segment_angles_deg(sg), 1) for sg in segs_by_i]
+    # main_angle_rect's rounded angles are per segment: compute every
+    # footprint's segments and angles in one pass, not per candidate group
+    segs_flat = geom.rings_segments(flat, n_v)
+    ang_flat = np.round(geom.segment_angles_deg(segs_flat), 1)
+    bounds = np.cumsum(n_v)[:-1]
+    segs_by_i = np.split(segs_flat, bounds)
+    ang_by_i = np.split(ang_flat, bounds)
+    areas = pdf["area"].to_numpy(np.float64)[rows]
     member_group: dict[int, int] = {}
     # per group, in member order: stacked segments, their angles and the
     # running footprint-area sum
@@ -446,34 +492,32 @@ def _mst_cluster_kernel(
 
     # final assignment: member_group (last write wins, like the
     # reference's dict); cluster id = min bid over the group's members
-    cluster_ids = bids.copy()
-    by_group: dict[int, list[int]] = {}
-    for i, g in member_group.items():
-        by_group.setdefault(g, []).append(i)
-    for g, members in by_group.items():
-        cid = int(bids[np.asarray(members)].min())
-        for i in members:
-            cluster_ids[i] = cid
-    return pd.DataFrame({"bid": bids, "cluster_id": cluster_ids, "part": part})
+    if member_group:
+        node = np.fromiter(member_group.keys(), dtype=np.int64, count=len(member_group))
+        label = np.fromiter(member_group.values(), dtype=np.int64, count=len(member_group))
+        low = np.full(gnum, np.iinfo(np.int64).max)
+        np.minimum.at(low, label, bids[rows[node]])
+        cid[rows[node]] = low[label]
+    return cid
 
 
 # Kernel input rows (buildings) up to which _per_partition runs its
 # kernel on the driver: starting the Python workers of a grouped stage
-# costs more than a small scene's kernel, while a large one runs faster
-# on the workers' cores.  full_delineation, one fresh session per cell
-# (4 cores), cold / warm seconds, driver vs grouped placement:
+# costs more than a small scene's kernel, while a large one may run
+# faster on the workers' cores.  full_delineation(...).collect() with
+# the batched kernel, one fresh session per cell (4 cores), cold / warm,
+# warm seconds; the driver cells ran with the cap lifted:
 #
-#   per_cluster  kernel rows  driver            grouped
-#    30           1,653        9.4 / 3.4, 3.2   14.5 / 4.6, 3.6
-#   120           6,533       16.1 / 6.3, 6.1   16.4 / 7.2, 6.0
-#   480          25,811       26.0 / 17.4, 18.9 21.0 / 12.3, 11.2
+#   per_cluster  kernel rows  driver             grouped (cap=0)
+#    30           1,653        3.99 / 0.64, 0.64  12.17 / 3.28, 3.37
+#   120           6,533        6.58 / 2.89, 2.81  14.00 / 5.38, 4.22
+#   480          25,811       11.53 / 6.58, 6.70  17.52 / 7.77, 7.50
 #
-# The driver wins at 1,653 rows, draws at 6,533 and loses at 25,811;
-# the cap sits just above the draw (PLANS.md, "full_delineation").
-# The table predates full_delineation's numpy front-end: its driver
-# placement still fetched the keyed buildings and the road lines from
-# Spark.  The crossover of the current placement is not re-measured,
-# and no benchmark workload runs above the cap.
+# Driver peak RSS (the Python process) 174, 226 and 302 MB.  The driver
+# now wins cold and warm at every size measured, so the table shows no
+# crossover to place the cap at; it stays where the one-call-per-group
+# kernel drew (6,533 rows, PLANS.md "full_delineation"), and no
+# benchmark workload runs above it.
 DRIVER_KERNEL_CAP = 8_192
 
 
@@ -503,7 +547,7 @@ def mst_cluster(
     cols = ["bid", "rings", "cx", "cy", "area", part_col]
     prepared = buildings.select(*cols).withColumnRenamed(part_col, "part")
 
-    def kernel(pdf: pd.DataFrame, segs: "np.ndarray | None") -> pd.DataFrame:
+    def kernel(pdf: pd.DataFrame, segs: "np.ndarray | dict | None") -> pd.DataFrame:
         return _mst_cluster_kernel(pdf, coverage_thresh, max_edge, segs)
 
     return _per_partition(prepared, "part", roads, road_cell, kernel, CLUSTER_SCHEMA, cap)
@@ -518,10 +562,10 @@ def _per_partition(
     schema: str,
     cap: int,
 ) -> DataFrame:
-    """Run ``kernel(pdf, road_segs)`` once per ``key`` group of
-    ``prepared`` (bid, rings, cx, cy, area, part, …), where
-    ``road_segs`` is the (M, 5) road-segment array near the group's
-    partition or ``None``.
+    """Run ``kernel(pdf, segs)`` over the ``key`` groups of ``prepared``
+    (bid, rings, cx, cy, area, part, …): the kernel clusters every group
+    of the frame it is given on its own, with ``segs`` the (M, 5) road
+    segments for every group, a {key: segments} dict, or ``None``.
 
     Spark ``roads`` give each group the segments whose bbox overlaps
     its partition's centroid bbox (pad 0: pruning only tests crossings
@@ -534,7 +578,7 @@ def _per_partition(
     Two placements, split at ``cap`` prepared rows:
 
     - at most ``cap``: one bounded Arrow fetch (ops.collect_bounded),
-      the kernel runs per group on the driver (_kernel_on_driver) and
+      one kernel call over all groups on the driver (_kernel_on_driver) and
       the rows come back as a ``LocalTableScan`` (ops.local_df), so no
       Python worker starts;
     - otherwise, or when the roads near the buildings exceed ``cap``,
@@ -543,37 +587,22 @@ def _per_partition(
     Both give the same rows."""
     table = ops.collect_bounded(prepared, cap)
     if table is not None:
-        rows = _kernel_on_driver(table.to_pandas(), key, roads, kernel, cap)
+        rows = _kernel_on_driver(table.to_pandas(), roads, kernel, cap)
         if rows is not None:
             return ops.local_df(prepared.sparkSession, rows, schema)
     return _per_partition_grouped(prepared, key, roads, road_cell, kernel, schema)
 
 
 def _kernel_on_driver(
-    pdf: pd.DataFrame, key: str, roads: "pd.DataFrame | DataFrame | None", kernel, cap: int
-) -> "pd.DataFrame | list | None":
+    pdf: pd.DataFrame, roads: "pd.DataFrame | DataFrame | None", kernel, cap: int
+) -> "pd.DataFrame | None":
     """_per_partition's driver placement over the fetched rows: the
-    kernel's rows of every ``key`` group (``[]`` when there are none),
-    or ``None`` when the Spark roads near the buildings exceed ``cap``
-    (_part_road_segments)."""
+    kernel's rows of every group, or ``None`` when the Spark roads near
+    the buildings exceed ``cap`` (_part_road_segments)."""
     if isinstance(roads, DataFrame):
-        near, road_segs = _part_road_segments(pdf, roads, cap), None
-        if near is None:
-            return None
-    else:
-        near = {}
-        road_segs = _road_segments_np(roads) if roads is not None else None
-    return _run_groups(pdf, key, kernel, near, road_segs)
-
-
-def _run_groups(
-    pdf: pd.DataFrame, key: str, kernel, near: dict, road_segs=None
-) -> "pd.DataFrame | list":
-    """``kernel(group, segments)`` over every ``key`` group of ``pdf``
-    in key order, where ``segments`` is ``near[key]`` or ``road_segs``;
-    the concatenated rows, or ``[]`` when there are none."""
-    out = [kernel(g, near.get(k, road_segs)) for k, g in pdf.groupby(key, sort=True, dropna=False)]
-    return pd.concat(out, ignore_index=True) if out else []
+        near = _part_road_segments(pdf, roads, cap)
+        return None if near is None else kernel(pdf, near)
+    return kernel(pdf, _road_segments_np(roads) if roads is not None else None)
 
 
 def _per_partition_grouped(
@@ -677,19 +706,18 @@ def _near_segments(pdf: pd.DataFrame, lines: "pd.DataFrame | pa.Table", cap: int
     near = (lo[:, 0] <= x1) & (hi[:, 0] >= x0) & (lo[:, 1] <= y1) & (hi[:, 1] >= y0)
     if near.sum() > cap:
         return None
-    cols = ["x1", "y1", "x2", "y2", "L"]
     keep = near & ~pd.DataFrame(segs).duplicated().to_numpy()
-    segs, lo, hi = segs[keep], lo[keep], hi[keep]
+    segs = segs[keep]
+    # one stable sort in _sorted_segs_np's (x1, y1, x2, y2) order; each
+    # partition's hits are cut from it in that order
+    segs = segs[np.lexsort((segs[:, 3], segs[:, 2], segs[:, 1], segs[:, 0]))]
+    lo, hi = np.minimum(segs[:, :2], segs[:, 2:4]), np.maximum(segs[:, :2], segs[:, 2:4])
     out = {}
-    for part, b in bbox.iterrows():
-        hit = (
-            (lo[:, 0] <= b["cx", "max"])
-            & (hi[:, 0] >= b["cx", "min"])
-            & (lo[:, 1] <= b["cy", "max"])
-            & (hi[:, 1] >= b["cy", "min"])
-        )
+    cols = [bbox["cx", "min"], bbox["cx", "max"], bbox["cy", "min"], bbox["cy", "max"]]
+    for part, bx0, bx1, by0, by1 in zip(bbox.index, *(c.to_numpy() for c in cols)):
+        hit = (lo[:, 0] <= bx1) & (hi[:, 0] >= bx0) & (lo[:, 1] <= by1) & (hi[:, 1] >= by0)
         if hit.any():
-            out[part] = _sorted_segs_np(pd.DataFrame(segs[hit], columns=cols))
+            out[part] = segs[hit]
     return out
 
 
@@ -757,22 +785,25 @@ def _mst_cells_input(buildings: DataFrame) -> DataFrame:
 
 
 def _mst_cells_kernel(coverage_thresh: float, cell_size: float):
-    """mst_cluster_cells' per-group kernel (pdf, road_segs) → rows of
-    MST_CELLS_SCHEMA."""
+    """mst_cluster_cells' kernel (pdf, road_segs) → rows of
+    MST_CELLS_SCHEMA for every ``grp`` group of ``pdf`` (``road_segs``
+    as in _mst_cluster_kernel), in the order one call per group gives
+    them: groups in key order, each group's rows sorted by (cluster_id,
+    gx, gy)."""
 
-    def kernel(pdf: pd.DataFrame, segs: "np.ndarray | None") -> pd.DataFrame:
-        pdf = pdf.sort_values("bid").reset_index(drop=True)
-        # a singleton group has one building: the kernel keeps its bid
-        cid = _mst_cluster_kernel(pdf, coverage_thresh, 120.0, segs)["cluster_id"]
+    def kernel(pdf: pd.DataFrame, road_segs: "np.ndarray | dict | None") -> pd.DataFrame:
+        pdf, grp, keys = _by_group(pdf, "grp")
+        # an AddSinglBdg singleton is a group of one: it keeps its bid
+        cid = _mst_cluster_ids(pdf, grp, keys, coverage_thresh, 120.0, road_segs)
+        # one buffer pass over every group's clusters: cluster ids are
+        # bids, so no two groups share one
         cxy = _buffer_cells_np(pdf["rings"], 25.0, cell_size, labels=cid)
-        return pd.DataFrame(
-            {
-                "gx": cxy[:, 1],
-                "gy": cxy[:, 2],
-                "cluster_id": cxy[:, 0],
-                "single": bool(pdf["part"].isna().iloc[0]),
-            }
-        )
+        labels, first = np.unique(cid, return_index=True)
+        at = first[np.searchsorted(labels, cxy[:, 0])]  # a row of each cell's cluster
+        by_grp = np.argsort(grp[at], kind="stable")
+        cxy, at = cxy[by_grp], at[by_grp]
+        single = pdf["part"].isna().to_numpy()[at]
+        return pd.DataFrame({"gx": cxy[:, 1], "gy": cxy[:, 2], "cluster_id": cxy[:, 0], "single": single})
 
     return kernel
 
@@ -1641,8 +1672,8 @@ def full_delineation(
        _density_partitions_np and every building is keyed by its
        density cell in pandas (_keyed_buildings_np), with no Spark job;
     2. mst_cluster_cells' kernel clusters each partition, buffers every
-       cluster to cells and makes the AddSinglBdg singletons, one call
-       per group, over the keyed rows (the partitioned ones and those
+       cluster to cells and makes the AddSinglBdg singletons, in one
+       call over all the keyed rows (the partitioned ones and those
        above 300 m²).  Up to ``cap`` filtered buildings (default
        DRIVER_KERNEL_CAP) it runs on the driver, with each partition's
        road segments cut from synth.roads_pdf by _near_segments.
@@ -1684,7 +1715,7 @@ def full_delineation(
     if len(b) <= cap:
         near = {} if lines is None else _near_segments(kernel_rows, lines, cap)
         if near is not None:
-            rows = _run_groups(kernel_rows, "grp", kernel, near)
+            rows = kernel(kernel_rows, near)
     if rows is not None and not edge_catching:
         counts = _finish_on_driver(spark, rows, b, cell_size, min_bdg_count)
         return _with_area(counts, cell_size)
@@ -1751,17 +1782,15 @@ def _keyed_buildings_np(b: pd.DataFrame) -> pd.DataFrame:
 
 
 def _finish_on_driver(
-    spark, rows, buildings: pd.DataFrame, cell_size: float, min_bdg_count: int
+    spark, rows: pd.DataFrame, buildings: pd.DataFrame, cell_size: float, min_bdg_count: int
 ) -> DataFrame:
     """full_delineation's stages 3-4 over the driver kernel's rows
-    (MST_CELLS_SCHEMA columns, or ``[]``): PatchRemove
-    (_patch_remove_np over every filtered building), the singletons'
-    union, the distinct cells, GapFix and HoleClose (_close_np);
-    (boundary_id, n_cells) as one driver-built table."""
-    cols = ["gx", "gy", "cluster_id"]
-    rows = pd.DataFrame(rows, columns=cols + ["single"])
+    (MST_CELLS_SCHEMA columns): PatchRemove (_patch_remove_np over every
+    filtered building), the singletons' union, the distinct cells,
+    GapFix and HoleClose (_close_np); (boundary_id, n_cells) as one
+    driver-built table."""
     single = rows["single"].to_numpy(bool)
-    main = rows[cols].to_numpy(np.int64)[~single]
+    main = rows[["gx", "gy", "cluster_id"]].to_numpy(np.int64)[~single]
     kept = main[_patch_remove_np(main, buildings, cell_size, min_bdg_count, min_patch_cells=4)]
     xy = np.concatenate([kept[:, :2], rows.loc[single, ["gx", "gy"]].to_numpy(np.int64)])
     return _boundary_counts(spark, _close_np(np.unique(xy, axis=0), 64))

@@ -398,108 +398,159 @@ def kruskal_mst(n_nodes: int, edges: np.ndarray) -> np.ndarray:
 
 
 def delaunay_edges(pts: np.ndarray) -> np.ndarray:
-    """Delaunay edge list via incremental Bowyer–Watson → (E, 2) int64.
+    """Delaunay edge list via incremental Bowyer–Watson → (E, 2) int64,
+    sorted: delaunay_edges_batch over one group.
 
     Per-partition scope only (the reference likewise triangulates one
-    settlement partition at a time — IB-Tool2.py:1259-1303); inputs are
-    a few thousand points, so O(n·t) incremental insertion is fine.
+    settlement partition at a time — IB-Tool2.py:1259-1303).
     """
-    n = pts.shape[0]
-    if n < 2:
-        return np.empty((0, 2), dtype=np.int64)
-    if n == 2:
-        return np.array([[0, 1]], dtype=np.int64)
-    # super-triangle
-    cmin = pts.min(axis=0)
-    cmax = pts.max(axis=0)
-    d = max(float(np.max(cmax - cmin)), 1.0) * 10.0
-    mid = (cmin + cmax) / 2.0
-    sp = np.array(
-        [[mid[0] - 2 * d, mid[1] - d], [mid[0] + 2 * d, mid[1] - d], [mid[0], mid[1] + 2 * d]]
-    )
-    allp = np.vstack([pts, sp])
+    pts = np.asarray(pts, dtype=np.float64)
+    return delaunay_edges_batch(pts, np.zeros(pts.shape[0], dtype=np.int64))
 
-    # triangle store with precomputed circumcircles: the per-point
-    # bad-triangle scan is ONE vectorized distance test over all alive
-    # triangles (VERDICT round-1 wrong#7 replaced a scalar-Python
-    # circumcircle test per triangle per point)
-    cap = 16
-    tv = np.empty((cap, 3), dtype=np.int64)  # vertex indices
-    tc = np.empty((cap, 2), dtype=np.float64)  # circumcenters
-    tr2 = np.empty(cap, dtype=np.float64)  # squared radii
-    alive = np.zeros(cap, dtype=bool)
+
+def delaunay_edges_batch(pts: np.ndarray, group: np.ndarray) -> np.ndarray:
+    """Delaunay edges of every ``group`` of ``pts`` at once → (E, 2)
+    int64 indices into ``pts``, sorted by (group, a, b) with a < b.
+
+    Each group is triangulated on its own, with its points in ``pts``
+    order: a group of 2 gives its one edge, a group of 3 or more runs
+    incremental Bowyer–Watson inside its own super-triangle.  The
+    groups advance in lock-step (_bowyer_watson_lockstep), so the
+    Python steps number the largest group, not all points, and every
+    group's edges are those a triangulation of its points alone
+    gives."""
+    pts = np.asarray(pts, dtype=np.float64)
+    group = np.asarray(group)
+    order = np.argsort(group, kind="stable")
+    g = group[order]
+    starts = np.flatnonzero(np.r_[True, g[1:] != g[:-1]]) if g.size else np.empty(0, np.int64)
+    sizes = np.diff(np.r_[starts, g.size])
+    pairs = starts[sizes == 2]
+    edges = np.concatenate(
+        [
+            np.column_stack([pairs, pairs + 1]),
+            _bowyer_watson_lockstep(pts[order], starts[sizes > 2], sizes[sizes > 2]),
+        ]
+    ).astype(np.int64)
+    # sorted positions keep each group's point order, so (a, b) stays
+    # ascending through ``order``; sorted by (a, b) here is by group first
+    edges = edges[np.lexsort((edges[:, 1], edges[:, 0]))]
+    return order[edges]
+
+
+def _circumcircles(px: np.ndarray, py: np.ndarray, tv: np.ndarray):
+    """(centre x, centre y, squared radius) of each triangle ``tv``
+    (rows of vertex indices into the coordinates ``px``, ``py``), from
+    its vertices in row order.  A degenerate (collinear) triangle gets
+    radius inf and centre 0, so every later point finds it bad and
+    retriangulates its cavity."""
+    ax, bx, cx = px[tv[:, 0]], px[tv[:, 1]], px[tv[:, 2]]
+    ay, by, cy = py[tv[:, 0]], py[tv[:, 1]], py[tv[:, 2]]
+    dd = 2.0 * (ax * (by - cy) + bx * (cy - ay) + cx * (ay - by))
+    a2, b2, c2 = ax * ax + ay * ay, bx * bx + by * by, cx * cx + cy * cy
+    with np.errstate(divide="ignore", invalid="ignore"):
+        ux = (a2 * (by - cy) + b2 * (cy - ay) + c2 * (ay - by)) / dd
+        uy = (a2 * (cx - bx) + b2 * (ax - cx) + c2 * (bx - ax)) / dd
+        r2 = (ax - ux) ** 2 + (ay - uy) ** 2
+    bad = ~np.isfinite(r2) | (dd == 0.0)
+    return np.where(bad, 0.0, ux), np.where(bad, 0.0, uy), np.where(bad, np.inf, r2)
+
+
+def _bowyer_watson_lockstep(pts: np.ndarray, starts: np.ndarray, sizes: np.ndarray) -> np.ndarray:
+    """Bowyer–Watson over groups of at least 3 points, group j being
+    ``pts[starts[j] : starts[j] + sizes[j]]`` → (E, 2) edges (a < b,
+    indices into ``pts``), unordered.
+
+    Step k inserts the k-th point of every group still growing: one
+    vectorised in-circumcircle test over all groups' live triangles,
+    each against its own group's point; each cavity's boundary is the
+    edges its bad triangles share with no other (the keys are global
+    vertex indices, so groups never collide); each boundary edge (a, b)
+    becomes the triangle (a, b, point), whose circumcircle is computed
+    from the vertices in that order.  Group j's super-triangle takes
+    the vertex indices n + 3j … n + 3j + 2, above every point, so edge
+    keys and vertex orders are those of a triangulation of the group
+    alone and every circumcircle float is the same."""
+    n, G = pts.shape[0], starts.shape[0]
+    if G == 0:
+        return np.empty((0, 2), dtype=np.int64)
+    first = np.cumsum(sizes) - sizes
+    members = np.repeat(starts - first, sizes) + np.arange(int(sizes.sum()))
+    sub = pts[members]
+    cmin = np.minimum.reduceat(sub, first, axis=0)
+    cmax = np.maximum.reduceat(sub, first, axis=0)
+    d = np.maximum(np.max(cmax - cmin, axis=1), 1.0) * 10.0
+    mid = (cmin + cmax) / 2.0
+    sp = np.stack(
+        [
+            np.column_stack([mid[:, 0] - 2 * d, mid[:, 1] - d]),
+            np.column_stack([mid[:, 0] + 2 * d, mid[:, 1] - d]),
+            np.column_stack([mid[:, 0], mid[:, 1] + 2 * d]),
+        ],
+        axis=1,
+    ).reshape(-1, 2)
+    allp = np.vstack([pts, sp])
+    vq = np.full(allp.shape[0], -1, dtype=np.int64)  # vertex → its group's first point
+    vq[members] = np.repeat(starts, sizes)
+    vq[n:] = np.repeat(starts, 3)
+    m = allp.shape[0]
+    px, py = allp[:, 0].copy(), allp[:, 1].copy()
+
+    # triangle store: vertices, group's first point, circumcircle; a dead
+    # triangle's squared radius is -inf, so no point ever finds it bad
+    tv, tq, tc = np.empty((0, 3), dtype=np.int64), np.empty(0, dtype=np.int64), np.empty((3, 0))
     ntri = 0
 
-    def _push(tris_new: list[tuple[int, int, int]]):
-        nonlocal cap, tv, tc, tr2, alive, ntri
-        m = len(tris_new)
-        while ntri + m > cap:
-            cap *= 2
-            tv = np.resize(tv, (cap, 3))
-            tc = np.resize(tc, (cap, 2))
-            tr2 = np.resize(tr2, cap)
-            alive = np.resize(alive, cap)
-            alive[ntri:] = False
-        idx = np.asarray(tris_new, dtype=np.int64)
-        a = allp[idx[:, 0]]
-        b = allp[idx[:, 1]]
-        c = allp[idx[:, 2]]
-        dd = 2.0 * (
-            a[:, 0] * (b[:, 1] - c[:, 1])
-            + b[:, 0] * (c[:, 1] - a[:, 1])
-            + c[:, 0] * (a[:, 1] - b[:, 1])
-        )
-        a2 = (a * a).sum(axis=1)
-        b2 = (b * b).sum(axis=1)
-        c2 = (c * c).sum(axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            ux = (a2 * (b[:, 1] - c[:, 1]) + b2 * (c[:, 1] - a[:, 1]) + c2 * (a[:, 1] - b[:, 1])) / dd
-            uy = (a2 * (c[:, 0] - b[:, 0]) + b2 * (a[:, 0] - c[:, 0]) + c2 * (b[:, 0] - a[:, 0])) / dd
-        r2 = (a[:, 0] - ux) ** 2 + (a[:, 1] - uy) ** 2
-        # degenerate (collinear) triangle: treat as always-bad so the
-        # next insertion retriangulates its cavity
-        bad_tri = ~np.isfinite(r2) | (dd == 0.0)
-        r2 = np.where(bad_tri, np.inf, r2)
-        ux = np.where(bad_tri, 0.0, ux)
-        uy = np.where(bad_tri, 0.0, uy)
-        sl = slice(ntri, ntri + m)
-        tv[sl] = idx
-        tc[sl, 0] = ux
-        tc[sl, 1] = uy
-        tr2[sl] = r2
-        alive[sl] = True
-        ntri += m
+    def push(new: np.ndarray, q: np.ndarray) -> None:
+        nonlocal ntri, tv, tq, tc
+        if ntri + new.shape[0] > tq.shape[0]:
+            grow = ntri + 2 * new.shape[0]
+            tv = np.concatenate([tv[:ntri], np.empty((grow, 3), dtype=np.int64)])
+            tq = np.concatenate([tq[:ntri], np.empty(grow, dtype=np.int64)])
+            tc = np.concatenate([tc[:, :ntri], np.empty((3, grow))], axis=1)
+        sl = slice(ntri, ntri + new.shape[0])
+        tv[sl], tq[sl] = new, q
+        tc[0, sl], tc[1, sl], tc[2, sl] = _circumcircles(px, py, new)
+        ntri += new.shape[0]
 
-    _push([(n, n + 1, n + 2)])
-
-    for i in range(n):
-        px, py = allp[i]
-        dx = tc[:ntri, 0] - px
-        dy = tc[:ntri, 1] - py
-        bad_mask = alive[:ntri] & (dx * dx + dy * dy < tr2[:ntri])
-        bad_idx = np.nonzero(bad_mask)[0]
-        if bad_idx.shape[0] == 0:
+    push(n + 3 * np.arange(G)[:, None] + np.arange(3)[None, :], starts)
+    done = []
+    nlive = G
+    finish = set(sizes.tolist())
+    for k in range(int(sizes.max())):
+        if k in finish or ntri > 4 * nlive + 64:
+            fin = sizes == k
+            # set complete groups' triangles aside, drop the dead ones
+            live = tc[2, :ntri] > -np.inf
+            out = np.isin(tq[:ntri], starts[fin])
+            done.append(tv[:ntri][live & out])
+            keep = np.flatnonzero(live & ~out)
+            ntri = nlive = keep.size
+            tv[:ntri], tq[:ntri], tc[:, :ntri] = tv[keep], tq[keep], tc[:, keep]
+        q = tq[:ntri] + k
+        dx = tc[0, :ntri] - px[q]
+        dy = tc[1, :ntri] - py[q]
+        bad = np.flatnonzero(dx * dx + dy * dy < tc[2, :ntri])
+        if not bad.size:
             continue
-        # boundary of the cavity = edges appearing exactly once
-        edge_count: dict[tuple[int, int], int] = {}
-        for ti in bad_idx:
-            t0, t1, t2_ = int(tv[ti, 0]), int(tv[ti, 1]), int(tv[ti, 2])
-            for e in ((t0, t1), (t1, t2_), (t2_, t0)):
-                key = (e[0], e[1]) if e[0] < e[1] else (e[1], e[0])
-                edge_count[key] = edge_count.get(key, 0) + 1
-        alive[bad_idx] = False
-        _push([(a, b, i) for (a, b), cnt in edge_count.items() if cnt == 1])
-
-    edges = set()
-    for ti in np.nonzero(alive[:ntri])[0]:
-        t = tv[ti]
-        if int(t.max()) >= n:
-            continue
-        for e in ((int(t[0]), int(t[1])), (int(t[1]), int(t[2])), (int(t[2]), int(t[0]))):
-            edges.add((min(e), max(e)))
-    if not edges:
-        return np.empty((0, 2), dtype=np.int64)
-    return np.array(sorted(edges), dtype=np.int64)
+        bt = np.sort(tv[bad], axis=1)
+        tc[2, bad] = -np.inf
+        key = np.concatenate([bt[:, 0] * m + bt[:, 1], bt[:, 1] * m + bt[:, 2], bt[:, 0] * m + bt[:, 2]])
+        key.sort()
+        # the cavity's boundary: edges of exactly one bad triangle
+        step = key[1:] != key[:-1]
+        once = np.ones(key.size, dtype=bool)
+        once[1:] = step
+        once[:-1] &= step
+        key = key[once]
+        a = key // m
+        q = vq[a]
+        push(np.column_stack([a, key - a * m, q + k]), q)
+        nlive += key.size - bad.size
+    tv = np.concatenate(done + [tv[:ntri][tc[2, :ntri] > -np.inf]])
+    tv = np.sort(tv[(tv < n).all(axis=1)], axis=1)
+    e = np.concatenate([tv[:, [0, 1]], tv[:, [1, 2]], tv[:, [0, 2]]])
+    return np.unique(e, axis=0) if e.shape[0] else np.empty((0, 2), dtype=np.int64)
 
 
 def _clip_halfplane(ring: np.ndarray, ax: float, ay: float, bx: float, by: float) -> np.ndarray:
@@ -734,11 +785,26 @@ def trace_cell_boundary(ix: np.ndarray, iy: np.ndarray) -> list[np.ndarray]:
     return rings
 
 
-def min_vertex_distance(a: np.ndarray, b: np.ndarray) -> float:
-    """Min pairwise distance between two vertex sets (the reference's
-    Delaunay edge weight, scipy.cdist(...).min() at IB-Tool2.py:1382-94)."""
-    d = a[:, None, :] - b[None, :, :]
-    return float(np.sqrt((d * d).sum(axis=2).min()))
+def min_vertex_distances(
+    verts: np.ndarray, n_v: np.ndarray, a: np.ndarray, b: np.ndarray, chunk: int = 1 << 14
+) -> np.ndarray:
+    """Min pairwise distance between vertex sets a[i] and b[i] for every
+    pair i (the reference's Delaunay edge weight,
+    scipy.cdist(...).min() at IB-Tool2.py:1382-94).  Set f is the
+    ``n_v[f]`` rows of ``verts`` (Σ n_v, 2) that follow the sets before
+    it.  One padded pass: each pair's (K, K) squared distances, with the
+    padding masked to inf, in chunks of at most ``chunk`` pairs."""
+    k = np.arange(n_v.max()) if n_v.size else np.arange(0)
+    valid = k[None, :] < n_v[:, None]
+    pad = np.zeros((n_v.size, k.size, 2))
+    pad[valid] = verts
+    out = np.empty(a.shape[0])
+    for s in range(0, a.shape[0], chunk):
+        pa, pb = a[s : s + chunk], b[s : s + chunk]
+        d = pad[pa][:, :, None, :] - pad[pb][:, None, :, :]
+        d2 = np.where(valid[pa][:, :, None] & valid[pb][:, None, :], (d * d).sum(axis=3), np.inf)
+        out[s : s + chunk] = np.sqrt(d2.min(axis=(1, 2)))
+    return out
 
 
 def rect_ring(cx: float, cy: float, w: float, h: float, ang: float) -> np.ndarray:
@@ -747,6 +813,15 @@ def rect_ring(cx: float, cy: float, w: float, h: float, ang: float) -> np.ndarra
     half = np.array([[-w / 2, -h / 2], [w / 2, -h / 2], [w / 2, h / 2], [-w / 2, h / 2]])
     rot = half @ np.array([[c, s], [-s, c]])
     return rot + np.array([cx, cy])
+
+
+def rect_rings(cx, cy, w, h, ang) -> np.ndarray:
+    """rect_ring of every element of the equal-length arrays → (N, 4, 2),
+    with the same per-ring products: one stacked matmul."""
+    c, s = np.cos(ang), np.sin(ang)
+    half = np.stack([[-w / 2, -h / 2], [w / 2, -h / 2], [w / 2, h / 2], [-w / 2, h / 2]])
+    rot = np.stack([[c, s], [-s, c]])
+    return half.transpose(2, 0, 1) @ rot.transpose(2, 0, 1) + np.stack([cx, cy], axis=1)[:, None, :]
 
 
 def cover_cells_with_edges(
@@ -957,7 +1032,17 @@ def ring_segments(ring: np.ndarray) -> np.ndarray:
     reference feeds CalcBoundingRect (HUtoLineXY, IB-Tool2.py:396-423).
     """
     a = np.asarray(ring, dtype=np.float64)
-    b = np.roll(a, -1, axis=0)
+    return rings_segments(a, np.array([a.shape[0]]))
+
+
+def rings_segments(verts: np.ndarray, n_v: np.ndarray) -> np.ndarray:
+    """ring_segments of many rings in one pass: ring f is the ``n_v[f]``
+    rows of ``verts`` (Σ n_v, 2) that follow the rings before it, and
+    its segments are the same rows of the (Σ n_v, 5) result."""
+    nxt = np.arange(1, verts.shape[0] + 1)
+    ends = np.cumsum(n_v)
+    nxt[ends[n_v > 0] - 1] = (ends - n_v)[n_v > 0]
+    a, b = verts, verts[nxt]
     seg_len = np.hypot(b[:, 0] - a[:, 0], b[:, 1] - a[:, 1])
     return np.column_stack([a, b, seg_len])
 

@@ -612,11 +612,13 @@ def buildings_pdf(scene: Scene | None = None, per_cluster: int = 40):
     codes from the reference's filter lists (IB-Tool2_Filter.txt)."""
     import pandas as pd
 
-    from .geom import rect_ring, ring_area, ring_centroid
+    from .geom import rect_rings
 
     scene = scene or default_scene()
-    rows = []
-    bid = 0
+    # the draws stay one building at a time: legacy randint rejection
+    # sampling makes how many draws a building takes depend on the data;
+    # the rings are built after, all at once
+    rects, fkts, ks = [], [], []
     for k in range(N_CLUSTERS):
         rng = np.random.RandomState(SCENE_SEED + 1000 + k)
         n_b = per_cluster + (k % 5) * (per_cluster // 8)
@@ -630,40 +632,52 @@ def buildings_pdf(scene: Scene | None = None, per_cluster: int = 40):
             w = rng.uniform(8, 30)
             h = rng.uniform(8, 30)
             ang = rng.uniform(0, np.pi)
-            ring = rect_ring(bx, by, w, h, ang)
-            fkt = POS_FKT[rng.randint(3)] if rng.uniform() > 0.1 else NEG_FKT[rng.randint(2)]
-            rows.append((bid, ring, fkt, k))
-            bid += 1
+            rects.append((bx, by, w, h, ang))
+            fkts.append(POS_FKT[rng.randint(3)] if rng.uniform() > 0.1 else NEG_FKT[rng.randint(2)])
         # large detached buildings outside the dense core
         for j in range(2):
             ang = rng.uniform(0, 2 * np.pi)
             bx = cx + np.cos(ang) * rad * 1.15
             by = cy + np.sin(ang) * rad * 1.15
-            ring = rect_ring(bx, by, 25.0, 15.0, rng.uniform(0, np.pi))
-            rows.append((bid, ring, POS_FKT[0], k))
-            bid += 1
+            rects.append((bx, by, 25.0, 15.0, rng.uniform(0, np.pi)))
+            fkts.append(POS_FKT[0])
         # small sheds (below the reference's 35 m² floor)
         for j in range(3):
             bx = cx + rng.normal() * 110.0
             by = cy + rng.normal() * 110.0
-            ring = rect_ring(bx, by, 5.0, 5.0, 0.0)
-            rows.append((bid, ring, POS_FKT[0], k))
-            bid += 1
-    out = []
-    for bid_, ring, fkt, k in rows:
-        cxc, cyc = ring_centroid(ring)
-        out.append(
-            {
-                "bid": bid_,
-                "rings": [ring.tolist()],
-                "cx": cxc,
-                "cy": cyc,
-                "area": abs(ring_area(ring)),
-                "fkt": fkt,
-                "true_cluster": k,
-            }
-        )
-    return pd.DataFrame(out)
+            rects.append((bx, by, 5.0, 5.0, 0.0))
+            fkts.append(POS_FKT[0])
+        ks.append(np.full(n_b + 5, k, dtype=np.int64))
+    r = rect_rings(*np.array(rects).T)
+    cxc, cyc, area = _rect_centroids_areas(r)
+    return pd.DataFrame(
+        {
+            "bid": np.arange(r.shape[0], dtype=np.int64),
+            "rings": [[v] for v in r.tolist()],
+            "cx": cxc,
+            "cy": cyc,
+            "area": area,
+            "fkt": fkts,
+            "true_cluster": np.concatenate(ks),
+        }
+    )
+
+
+def _rect_centroids_areas(r: np.ndarray) -> "tuple[np.ndarray, np.ndarray, np.ndarray]":
+    """geom.ring_centroid and abs(geom.ring_area) of every ring of
+    ``r`` (N, K, 2) in one pass.  For K < 8 numpy's row sums add in the
+    order of its 1-D sums, so each value equals the per-ring one bit
+    for bit."""
+    x, y = r[:, :, 0], r[:, :, 1]
+    xn, yn = np.roll(x, -1, axis=1), np.roll(y, -1, axis=1)
+    cross = x * yn - xn * y
+    s = cross.sum(axis=1)
+    a = s / 2.0
+    flat = np.abs(a) < 1e-12
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cx = np.where(flat, x.mean(axis=1), ((x + xn) * cross).sum(axis=1) / (6.0 * a))
+        cy = np.where(flat, y.mean(axis=1), ((y + yn) * cross).sum(axis=1) / (6.0 * a))
+    return cx, cy, np.abs(0.5 * s)
 
 
 BUILDINGS_SCHEMA = (

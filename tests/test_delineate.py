@@ -212,6 +212,138 @@ def test_mst_cluster_kernel_row_order_invariant():
         pd.testing.assert_frame_equal(base, got)
 
 
+def _kernel_rows(per_cluster: int) -> pd.DataFrame:
+    keyed = delineate._keyed_buildings_np(
+        delineate._filtered_buildings(synth.buildings_pdf(per_cluster=per_cluster))
+    )
+    return keyed[keyed["part"].notna() | (keyed["area"] > delineate._SINGLE_MIN_AREA)]
+
+
+@pytest.mark.parametrize("per_cluster", [12, 20, 30, 120])
+def test_batched_kernel_matches_per_group(per_cluster):
+    # one call over every group gives the frame of one call per group,
+    # concatenated in key order: with each partition's roads and without
+    rows = _kernel_rows(per_cluster)
+    near = delineate._near_segments(rows, synth.roads_pdf()[["rid", "line"]], 10**9)
+    assert rows["part"].isna().any() and len(near) > 1
+    cells = delineate._mst_cells_kernel(12.0, 16.0)
+    for roads in (near, {}):
+        want = pd.concat(
+            [cells(g, roads.get(k)) for k, g in rows.groupby("grp", sort=True)], ignore_index=True
+        )
+        pd.testing.assert_frame_equal(cells(rows, roads), want)
+        # keyed by part: the null-part rows are one group, clustered together
+        want = pd.concat(
+            [
+                delineate._mst_cluster_kernel(g, 12.0, 120.0, roads.get(k))
+                for k, g in rows.groupby("part", sort=True, dropna=False)
+            ],
+            ignore_index=True,
+        )
+        got = delineate._mst_cluster_kernel(rows, 12.0, 120.0, roads)
+        pd.testing.assert_frame_equal(got, want)
+        assert (got["cluster_id"] != got["bid"]).any()
+    empty = cells(rows.iloc[:0], near)
+    assert list(empty.columns) == ["gx", "gy", "cluster_id", "single"] and empty.empty
+
+
+def _buildings_per_footprint(per_cluster: int) -> pd.DataFrame:
+    """synth.buildings_pdf built one footprint at a time with geom's
+    per-ring helpers."""
+    scene = synth.default_scene()
+    out = []
+    for k in range(synth.N_CLUSTERS):
+        rng = np.random.RandomState(synth.SCENE_SEED + 1000 + k)
+        cx, cy, rad = scene.cx[k], scene.cy[k], scene.rad[k]
+        rects = []
+        for _ in range(per_cluster + (k % 5) * (per_cluster // 8)):
+            bx, by = cx + rng.normal() * 110.0, cy + rng.normal() * 110.0
+            w, h, ang = rng.uniform(8, 30), rng.uniform(8, 30), rng.uniform(0, np.pi)
+            fkt = (
+                synth.POS_FKT[rng.randint(3)]
+                if rng.uniform() > 0.1
+                else synth.NEG_FKT[rng.randint(2)]
+            )
+            rects.append((geom.rect_ring(bx, by, w, h, ang), fkt))
+        for _ in range(2):
+            ang = rng.uniform(0, 2 * np.pi)
+            bx, by = cx + np.cos(ang) * rad * 1.15, cy + np.sin(ang) * rad * 1.15
+            rects.append((geom.rect_ring(bx, by, 25.0, 15.0, rng.uniform(0, np.pi)), synth.POS_FKT[0]))
+        for _ in range(3):
+            bx, by = cx + rng.normal() * 110.0, cy + rng.normal() * 110.0
+            rects.append((geom.rect_ring(bx, by, 5.0, 5.0, 0.0), synth.POS_FKT[0]))
+        for ring, fkt in rects:
+            cxc, cyc = geom.ring_centroid(ring)
+            out.append(
+                {
+                    "bid": len(out),
+                    "rings": [ring.tolist()],
+                    "cx": cxc,
+                    "cy": cyc,
+                    "area": abs(geom.ring_area(ring)),
+                    "fkt": fkt,
+                    "true_cluster": k,
+                }
+            )
+    return pd.DataFrame(out)
+
+
+@pytest.mark.parametrize("per_cluster", [12, 20, 30, 120])
+def test_buildings_pdf_matches_per_footprint(per_cluster):
+    want = _buildings_per_footprint(per_cluster)
+    got = synth.buildings_pdf(per_cluster=per_cluster)
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    assert got["rings"].tolist() == want["rings"].tolist()
+
+
+def test_near_segments_match_sorted_segs():
+    # each partition's segments are _sorted_segs_np of its hits; two roads
+    # share the segment (0,0)-(10,0) with different road lengths L, and
+    # ties in (x1, y1, x2, y2) keep the roads' row order
+    lines = pd.DataFrame(
+        {
+            "rid": [7, 3, 9, 4],
+            "line": [
+                [[0.0, 0.0], [10.0, 0.0]],
+                [[0.0, 0.0], [10.0, 0.0], [10.0, 50.0]],
+                [[-5.0, 20.0], [30.0, -4.0], [31.0, 60.0]],
+                [[40.0, 40.0], [-3.0, 12.0]],
+            ],
+        }
+    )
+    pdf = pd.DataFrame(
+        {
+            "cx": [1.0, 9.0, 5.0, 28.0, 35.0],
+            "cy": [-1.0, 3.0, 30.0, 1.0, 45.0],
+            "part": ["A", "A", "B", "C", None],
+        }
+    )
+    cases = [(pdf, lines), (_kernel_rows(30), synth.roads_pdf()[["rid", "line"]])]
+    for pdf, lines in cases:
+        got = delineate._near_segments(pdf, lines, 10**9)
+        segs = delineate._road_segments_np(lines)
+        segs = segs[~pd.DataFrame(segs).duplicated().to_numpy()]
+        lo, hi = np.minimum(segs[:, :2], segs[:, 2:4]), np.maximum(segs[:, :2], segs[:, 2:4])
+        want = {}
+        for part, b in pdf[pdf["part"].notna()].groupby("part"):
+            hit = (
+                (lo[:, 0] <= b["cx"].max())
+                & (hi[:, 0] >= b["cx"].min())
+                & (lo[:, 1] <= b["cy"].max())
+                & (hi[:, 1] >= b["cy"].min())
+            )
+            if hit.any():
+                want[part] = delineate._sorted_segs_np(
+                    pd.DataFrame(segs[hit], columns=["x1", "y1", "x2", "y2", "L"])
+                )
+        assert got.keys() == want.keys()
+        for part in want:
+            np.testing.assert_array_equal(got[part], want[part])
+    a = delineate._near_segments(*cases[0], 10**9)["A"]
+    tie = a[(a[:, 0] == 0.0) & (a[:, 1] == 0.0) & (a[:, 2] == 10.0) & (a[:, 3] == 0.0)]
+    np.testing.assert_array_equal(tie[:, 4], [10.0, 60.0])
+
+
 def test_mst_cluster_on_synth_buildings(spark, buildings):
     parts = buildings.withColumn("part", F.concat(F.lit("P"), F.col("true_cluster")))
     out = delineate.mst_cluster(parts).toPandas()

@@ -155,6 +155,113 @@ def test_delaunay_square_and_mst_subset():
         assert (a, b) in de
 
 
+def _delaunay_edges_scalar(pts: np.ndarray) -> np.ndarray:
+    """Reference: Bowyer–Watson one point at a time, with a Python dict
+    for each cavity's boundary, the same super-triangle and the same
+    circumcircle floats (geom._circumcircles) as delaunay_edges_batch."""
+    n = pts.shape[0]
+    if n < 2:
+        return np.empty((0, 2), dtype=np.int64)
+    if n == 2:
+        return np.array([[0, 1]], dtype=np.int64)
+    cmin, cmax = pts.min(axis=0), pts.max(axis=0)
+    d = max(float(np.max(cmax - cmin)), 1.0) * 10.0
+    mid = (cmin + cmax) / 2.0
+    sp = [[mid[0] - 2 * d, mid[1] - d], [mid[0] + 2 * d, mid[1] - d], [mid[0], mid[1] + 2 * d]]
+    allp = np.vstack([pts, sp])
+    tris = {}
+
+    def push(tv):
+        tv = np.asarray(tv, dtype=np.int64)
+        for t, c in zip(map(tuple, tv), zip(*geom._circumcircles(allp[:, 0], allp[:, 1], tv))):
+            tris[t] = c
+
+    push([(n, n + 1, n + 2)])
+    for i in range(n):
+        px, py = allp[i]
+        bad = [t for t, (ux, uy, r2) in tris.items() if (ux - px) * (ux - px) + (uy - py) * (uy - py) < r2]
+        count = {}
+        for t in bad:
+            del tris[t]
+            for a, b in ((t[0], t[1]), (t[1], t[2]), (t[2], t[0])):
+                key = (min(a, b), max(a, b))
+                count[key] = count.get(key, 0) + 1
+        if bad:
+            push([(a, b, i) for (a, b), c in count.items() if c == 1])
+    edges = {
+        (min(a, b), max(a, b))
+        for t in tris
+        if max(t) < n
+        for a, b in ((t[0], t[1]), (t[1], t[2]), (t[2], t[0]))
+    }
+    return np.array(sorted(edges), dtype=np.int64).reshape(-1, 2)
+
+
+def _delaunay_sets() -> list:
+    rng = np.random.default_rng(11)
+    lattice = np.array([[i, j] for i in range(5) for j in range(5)], dtype=float)
+    return [
+        rng.uniform(0, 100, (1, 2)),
+        rng.uniform(0, 100, (2, 2)),
+        rng.uniform(0, 100, (3, 2)),
+        rng.uniform(0, 100, (57, 2)),
+        np.array([[0.0, 0.0], [0.0, 0.0], [1.0, 1.0], [2.0, 2.0], [3.0, 3.0], [1.0, 0.0]]),
+        np.array([[float(i), 0.0] for i in range(7)]),  # collinear run
+        lattice,  # cocircular quadruples everywhere
+        np.round(rng.uniform(0, 6, (40, 2))),  # duplicates on a lattice
+        np.array([[3.0, 3.0], [3.0, 3.0], [3.0, 3.0]]),
+    ]
+
+
+def test_delaunay_edges_match_scalar_reference():
+    for pts in _delaunay_sets():
+        want = _delaunay_edges_scalar(pts)
+        np.testing.assert_array_equal(geom.delaunay_edges(pts), want)
+
+
+def test_delaunay_edges_batch_matches_per_group():
+    sets = _delaunay_sets()
+    n = np.array([len(s) for s in sets])
+    first = np.cumsum(n) - n
+    pts = np.concatenate(sets)
+    # contiguous groups: each group's edges are the per-group call's,
+    # offset by the group's first row
+    got = geom.delaunay_edges_batch(pts, np.repeat(np.arange(len(sets)), n))
+    parts = [geom.delaunay_edges(s) + f for s, f in zip(sets, first)]
+    np.testing.assert_array_equal(got, np.concatenate(parts))
+    # interleaved rows under shuffled labels: each group is triangulated
+    # in its rows' order, and the edges come sorted by group
+    rng = np.random.default_rng(5)
+    perm = rng.permutation(len(pts))
+    p, g = pts[perm], np.repeat(rng.permutation(len(sets)), n)[perm]
+    got = geom.delaunay_edges_batch(p, g)
+    g_of = g[got[:, 0]]
+    assert (g[got[:, 1]] == g_of).all() and (np.diff(g_of) >= 0).all()
+    for lab in np.unique(g):
+        idx = np.flatnonzero(g == lab)
+        mine = np.searchsorted(idx, got[g_of == lab])
+        np.testing.assert_array_equal(mine, geom.delaunay_edges(p[idx]))
+    assert geom.delaunay_edges_batch(np.empty((0, 2)), np.empty(0, dtype=np.int64)).shape == (0, 2)
+
+
+def test_padded_ring_passes_match_per_ring():
+    # rings of 3-7 vertices, so the padded passes mask real padding
+    rng = np.random.default_rng(17)
+    rings = [rng.uniform(-50, 50, (int(k), 2)) for k in rng.integers(3, 8, 40)]
+    n_v = np.array([len(r) for r in rings])
+    flat = np.concatenate(rings)
+    segs = geom.rings_segments(flat, n_v)
+    for r, s in zip(rings, np.split(segs, np.cumsum(n_v)[:-1])):
+        b = np.roll(r, -1, axis=0)
+        want = np.column_stack([r, b, np.hypot(b[:, 0] - r[:, 0], b[:, 1] - r[:, 1])])
+        np.testing.assert_array_equal(s, want)
+    a, b = rng.integers(0, len(rings), (2, 300))
+    got = geom.min_vertex_distances(flat, n_v, a, b, chunk=64)
+    for i, j, w in zip(a, b, got):
+        d = rings[i][:, None, :] - rings[j][None, :, :]
+        assert w == float(np.sqrt((d * d).sum(axis=2).min()))
+
+
 def test_clip_ring_rect():
     tri = np.array([[0.0, 0.0], [10.0, 0.0], [0.0, 10.0]])
     # window covering the lower-left corner

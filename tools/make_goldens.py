@@ -60,16 +60,12 @@ def main() -> None:
     knn.to_csv(os.path.join(OUT, "expected_knn_assign.csv"), index=False)
 
     # expected_cluster_assign(bid, cluster_id) — single-node run of the
-    # same kernel (no Spark): per true_cluster partition
+    # same kernel (no Spark), one call over every true_cluster partition
     b = synth.buildings_pdf(per_cluster=15)
     from ib_tool_spark.delineate import _mst_cluster_kernel
 
-    parts = []
-    for k, grp in b.groupby("true_cluster"):
-        pdf = grp.rename(columns={"true_cluster": "part"}).copy()
-        pdf["part"] = f"P{k}"
-        parts.append(_mst_cluster_kernel(pdf.reset_index(drop=True), 12.0, 120.0))
-    ca = pd.concat(parts, ignore_index=True).sort_values("bid")[["bid", "cluster_id"]]
+    pdf = b.assign(part="P" + b["true_cluster"].astype(str))
+    ca = _mst_cluster_kernel(pdf, 12.0, 120.0).sort_values("bid")[["bid", "cluster_id"]]
     ca.to_csv(os.path.join(OUT, "expected_cluster_assign.csv"), index=False)
 
     print("goldens written:", sorted(os.listdir(OUT)))
