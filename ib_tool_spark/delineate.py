@@ -501,23 +501,27 @@ def _mst_cluster_ids(
     return cid
 
 
-# Kernel input rows (buildings) up to which _per_partition runs its
-# kernel on the driver: starting the Python workers of a grouped stage
-# costs more than a small scene's kernel, while a large one may run
-# faster on the workers' cores.  full_delineation(...).collect() with
-# the batched kernel, one fresh session per cell (4 cores), cold / warm,
-# warm seconds; the driver cells ran with the cap lifted:
+# Kernel input rows (buildings) up to which mst_cluster (_per_partition)
+# runs its kernel on the driver rather than in a grouped Python stage.
+# Its input is Spark-resident (the geo_mst_clusters and
+# geo_cluster_boundaries extras reach the grouped stage at 12k-119k
+# buildings), so above the cap the rows are never fetched.  The value
+# is where the one-call-per-group kernel drew it (6,533 rows measured,
+# PLANS.md "full_delineation").
 #
-#   per_cluster  kernel rows  driver             grouped (cap=0)
+# full_delineation has no such bound: it builds its scene on the driver
+# (synth.buildings_pdf) before clustering, so a grouped stage would only
+# ship a driver-held frame to Python workers.  Its collect() with the
+# batched kernel, one fresh session per cell (4 cores), cold / warm,
+# warm seconds, when it still had a grouped placement:
+#
+#   per_cluster  kernel rows  driver             grouped
 #    30           1,653        3.99 / 0.64, 0.64  12.17 / 3.28, 3.37
 #   120           6,533        6.58 / 2.89, 2.81  14.00 / 5.38, 4.22
 #   480          25,811       11.53 / 6.58, 6.70  17.52 / 7.77, 7.50
 #
-# Driver peak RSS (the Python process) 174, 226 and 302 MB.  The driver
-# now wins cold and warm at every size measured, so the table shows no
-# crossover to place the cap at; it stays where the one-call-per-group
-# kernel drew (6,533 rows, PLANS.md "full_delineation"), and no
-# benchmark workload runs above it.
+# Driver peak RSS (the Python process) 174, 226 and 302 MB.  A scene
+# held in Spark is clustered by mst_cluster instead.
 DRIVER_KERNEL_CAP = 8_192
 
 
@@ -550,28 +554,26 @@ def mst_cluster(
     def kernel(pdf: pd.DataFrame, segs: "np.ndarray | dict | None") -> pd.DataFrame:
         return _mst_cluster_kernel(pdf, coverage_thresh, max_edge, segs)
 
-    return _per_partition(prepared, "part", roads, road_cell, kernel, CLUSTER_SCHEMA, cap)
+    return _per_partition(prepared, roads, road_cell, kernel, cap)
 
 
 def _per_partition(
     prepared: DataFrame,
-    key: str,
     roads: "pd.DataFrame | DataFrame | None",
     road_cell: float,
     kernel,
-    schema: str,
     cap: int,
 ) -> DataFrame:
-    """Run ``kernel(pdf, segs)`` over the ``key`` groups of ``prepared``
-    (bid, rings, cx, cy, area, part, …): the kernel clusters every group
-    of the frame it is given on its own, with ``segs`` the (M, 5) road
-    segments for every group, a {key: segments} dict, or ``None``.
+    """Run ``kernel(pdf, segs)`` over the ``part`` groups of ``prepared``
+    (bid, rings, cx, cy, area, part) → rows of CLUSTER_SCHEMA: the
+    kernel clusters every group of the frame it is given on its own,
+    with ``segs`` the (M, 5) road segments for every group, a
+    {part: segments} dict, or ``None``.
 
     Spark ``roads`` give each group the segments whose bbox overlaps
     its partition's centroid bbox (pad 0: pruning only tests crossings
     against centroid-to-centroid edges, which live inside it), in
-    _sorted_segs_np order; a group whose key names no partition (null
-    ``part``, AddSinglBdg's ``single_<bid>``) gets none.  Pandas
+    _sorted_segs_np order; the null ``part`` group gets none.  Pandas
     ``roads`` (small scenes) give every group all segments; ``None``
     gives none.
 
@@ -589,8 +591,8 @@ def _per_partition(
     if table is not None:
         rows = _kernel_on_driver(table.to_pandas(), roads, kernel, cap)
         if rows is not None:
-            return ops.local_df(prepared.sparkSession, rows, schema)
-    return _per_partition_grouped(prepared, key, roads, road_cell, kernel, schema)
+            return ops.local_df(prepared.sparkSession, rows, CLUSTER_SCHEMA)
+    return _per_partition_grouped(prepared, roads, road_cell, kernel)
 
 
 def _kernel_on_driver(
@@ -607,11 +609,9 @@ def _kernel_on_driver(
 
 def _per_partition_grouped(
     prepared: DataFrame,
-    key: str,
     roads: "pd.DataFrame | DataFrame | None",
     road_cell: float,
     kernel,
-    schema: str,
 ) -> DataFrame:
     """_per_partition's grouped placement: a grouped ``applyInPandas``,
     with Spark roads a cogroup whose segments are subset by a
@@ -623,7 +623,7 @@ def _per_partition_grouped(
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
             return kernel(pdf, road_segs)
 
-        return _spread(prepared, key).groupBy(key).applyInPandas(run, schema)
+        return _spread(prepared, "part").groupBy("part").applyInPandas(run, CLUSTER_SCHEMA)
 
     # fresh key attribute (`kpart`) so the cogroup's two sides don't
     # share lineage (Spark flags the self-referencing join as ambiguous)
@@ -640,7 +640,7 @@ def _per_partition_grouped(
     )
     roadsub = _segments_for_keys(
         keys_bbox, road_segments_df(roads), "kpart", pad=0.0, cell=road_cell
-    ).select(F.col("kpart").alias(key), "x1", "y1", "x2", "y2", "L")
+    ).select(F.col("kpart").alias("part"), "x1", "y1", "x2", "y2", "L")
 
     def run_cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if not len(left):
@@ -649,9 +649,9 @@ def _per_partition_grouped(
         return kernel(left, segs if segs.shape[0] else None)
 
     return (
-        _spread(prepared, key).groupBy(key)
-        .cogroup(_spread(roadsub, key).groupBy(key))
-        .applyInPandas(run_cg, schema)
+        _spread(prepared, "part").groupBy("part")
+        .cogroup(_spread(roadsub, "part").groupBy("part"))
+        .applyInPandas(run_cg, CLUSTER_SCHEMA)
     )
 
 
@@ -670,7 +670,8 @@ def _part_bboxes(pdf: pd.DataFrame) -> "tuple[pd.DataFrame, tuple] | None":
 def _part_road_segments(pdf: pd.DataFrame, roads: DataFrame, cap: int) -> "dict | None":
     """_near_segments over Spark ``roads``: one bounded fetch of the
     raw (rid, line) rows whose bbox reaches the partitions' joint
-    centroid bbox, or ``None`` when more than ``cap`` lines reach it."""
+    centroid bbox, or ``None`` when more than ``cap`` lines, or more
+    than ``cap`` of their segments, reach it."""
     boxes = _part_bboxes(pdf)
     if boxes is None:
         return {}
@@ -684,128 +685,82 @@ def _part_road_segments(pdf: pd.DataFrame, roads: DataFrame, cap: int) -> "dict 
         & (F.array_max(ys) >= y0)
     )
     table = ops.collect_bounded(roads.select("rid", "line").filter(near_any), cap)
-    return None if table is None else _near_segments(pdf, table, cap)
+    if table is None:
+        return None
+    segs = _road_segments_np(table)
+    return None if _box_hits(segs, x0, x1, y0, y1).sum() > cap else _near_segments(pdf, segs)
 
 
-def _near_segments(pdf: pd.DataFrame, lines: "pd.DataFrame | pa.Table", cap: int) -> "dict | None":
-    """{part: (M, 5) road segments} for the driver placement: per
-    partition of ``pdf`` the distinct segments of the road ``lines``
-    (rid, line) whose bbox overlaps its centroid bbox, in
-    _sorted_segs_np order (what the cogroup's _segments_for_keys join
-    delivers; partitions with none are left out).
+def _box_hits(segs: np.ndarray, x0: float, x1: float, y0: float, y1: float) -> np.ndarray:
+    """Which (M, 4+) segments' bboxes overlap the box [x0, x1] × [y0, y1]."""
+    lo, hi = np.minimum(segs[:, :2], segs[:, 2:4]), np.maximum(segs[:, :2], segs[:, 2:4])
+    return (lo[:, 0] <= x1) & (hi[:, 0] >= x0) & (lo[:, 1] <= y1) & (hi[:, 1] >= y0)
 
-    Whole lines are exploded by _road_segments_np, so ``L`` is each
-    road's full length.  ``None`` when more than ``cap`` segments reach
-    the partitions' joint centroid bbox."""
+
+def _near_segments(pdf: pd.DataFrame, segs: np.ndarray) -> dict:
+    """{part: (M, 5) road segments} for the driver kernels: per
+    partition of ``pdf`` the distinct rows of ``segs`` (whole road lines
+    exploded by _road_segments_np, so ``L`` is each road's full length)
+    whose bbox overlaps its centroid bbox, in _sorted_segs_np order
+    (what the cogroup's _segments_for_keys join delivers; partitions
+    with none are left out)."""
     boxes = _part_bboxes(pdf)
     if boxes is None:
         return {}
-    bbox, (x0, x1, y0, y1) = boxes
-    segs = _road_segments_np(lines)
-    lo, hi = np.minimum(segs[:, :2], segs[:, 2:4]), np.maximum(segs[:, :2], segs[:, 2:4])
-    near = (lo[:, 0] <= x1) & (hi[:, 0] >= x0) & (lo[:, 1] <= y1) & (hi[:, 1] >= y0)
-    if near.sum() > cap:
-        return None
-    keep = near & ~pd.DataFrame(segs).duplicated().to_numpy()
-    segs = segs[keep]
+    bbox, joint = boxes
+    segs = segs[_box_hits(segs, *joint) & ~pd.DataFrame(segs).duplicated().to_numpy()]
     # one stable sort in _sorted_segs_np's (x1, y1, x2, y2) order; each
     # partition's hits are cut from it in that order
     segs = segs[np.lexsort((segs[:, 3], segs[:, 2], segs[:, 1], segs[:, 0]))]
-    lo, hi = np.minimum(segs[:, :2], segs[:, 2:4]), np.maximum(segs[:, :2], segs[:, 2:4])
     out = {}
     cols = [bbox["cx", "min"], bbox["cx", "max"], bbox["cy", "min"], bbox["cy", "max"]]
     for part, bx0, bx1, by0, by1 in zip(bbox.index, *(c.to_numpy() for c in cols)):
-        hit = (lo[:, 0] <= bx1) & (hi[:, 0] >= bx0) & (lo[:, 1] <= by1) & (hi[:, 1] >= by0)
+        hit = _box_hits(segs, bx0, bx1, by0, by1)
         if hit.any():
             out[part] = segs[hit]
     return out
-
-
-MST_CELLS_SCHEMA = "gx long, gy long, cluster_id long, single boolean"
-
-
-def mst_cluster_cells(
-    buildings: DataFrame,
-    coverage_thresh: float = 12.0,
-    roads: "pd.DataFrame | DataFrame | None" = None,
-    cell_size: float = 8.0,
-    cap: int = DRIVER_KERNEL_CAP,
-) -> DataFrame:
-    """MST clustering, AddSinglBdg and the buffered dissolve in ONE
-    per-group kernel call, as the reference runs one partition's chain
-    in one process (IB-Tool2.py:2401-2517): on the driver up to ``cap``
-    buildings (default DRIVER_KERNEL_CAP), otherwise one grouped Python
-    stage (_per_partition).
-
-    Input: buildings keyed by assign_partitions_df (``part_name`` null
-    outside every dense partition).  Output (gx, gy, cluster_id, single):
-
-    - each partition's buildings are clustered by _mst_cluster_kernel
-      (``roads`` and ``coverage_thresh`` as in mst_cluster, its default
-      120 m edge cap) and every cluster's 25 m buffered footprints
-      become its cells — the rows of
-      ``cluster_cells(b.join(mst_cluster(…)), 25.0, cell_size)``, with
-      single = false;
-    - AddSinglBdg (IB-Tool2.py:1649-1702): every unpartitioned building
-      of more than 300 m² is its own cluster (cluster_id = bid), with
-      single = true.  Each is its own group, keyed by its bid, so the
-      singletons spread over tasks like partitions do.
-
-    PatchRemove is left to the caller: its counts join every building by
-    centroid cell, across clusters and partitions, so no group sees
-    them."""
-    prepared = _mst_cells_input(buildings).filter(
-        F.col("part").isNotNull() | (F.col("area") > _SINGLE_MIN_AREA)
-    )
-    kernel = _mst_cells_kernel(coverage_thresh, cell_size)
-    return _per_partition(prepared, "grp", roads, 1024.0, kernel, MST_CELLS_SCHEMA, cap)
 
 
 # AddSinglBdg keeps an unpartitioned building above this footprint (m²)
 _SINGLE_MIN_AREA = 300.0
 
 
-MST_CELLS_INPUT_SCHEMA = (
-    "bid long, rings array<array<array<double>>>, cx double, cy double, "
-    "area double, part string, grp string"
-)
+def _mst_cells_kernel(
+    pdf: pd.DataFrame,
+    road_segs: "np.ndarray | dict | None",
+    coverage_thresh: float,
+    cell_size: float,
+) -> pd.DataFrame:
+    """MST clustering, AddSinglBdg and the buffered dissolve in one call
+    over every ``grp`` group of ``pdf`` (_keyed_buildings_np's rows), as
+    the reference runs one partition's chain in one process
+    (IB-Tool2.py:2401-2517).  Rows (gx, gy, cluster_id, single), groups
+    in key order, each group's rows sorted by (cluster_id, gx, gy):
 
+    - each partition's buildings are clustered by _mst_cluster_ids
+      (``road_segs`` as in _mst_cluster_kernel, a 120 m edge cap) and
+      every cluster's 25 m buffered footprints become its cells — the
+      rows of ``cluster_cells(b.join(mst_cluster(…)), 25.0, cell_size)``,
+      with single = false;
+    - AddSinglBdg (IB-Tool2.py:1649-1702): a ``single_<bid>`` group (an
+      unpartitioned building, above _SINGLE_MIN_AREA in
+      full_delineation) is its own cluster (cluster_id = bid), with
+      single = true.
 
-def _mst_cells_input(buildings: DataFrame) -> DataFrame:
-    """Every building keyed by assign_partitions_df as
-    mst_cluster_cells' kernel reads it: (bid, rings, cx, cy, area, part,
-    grp), where ``grp`` is the partition or ``single_<bid>``.  The
-    kernel's rows are those with a partition or an area above
-    _SINGLE_MIN_AREA."""
-    return buildings.select(
-        "bid", "rings", "cx", "cy", "area", F.col("part_name").alias("part")
-    ).withColumn(
-        "grp", F.coalesce("part", F.concat(F.lit("single_"), F.col("bid").cast("string")))
-    )
-
-
-def _mst_cells_kernel(coverage_thresh: float, cell_size: float):
-    """mst_cluster_cells' kernel (pdf, road_segs) → rows of
-    MST_CELLS_SCHEMA for every ``grp`` group of ``pdf`` (``road_segs``
-    as in _mst_cluster_kernel), in the order one call per group gives
-    them: groups in key order, each group's rows sorted by (cluster_id,
-    gx, gy)."""
-
-    def kernel(pdf: pd.DataFrame, road_segs: "np.ndarray | dict | None") -> pd.DataFrame:
-        pdf, grp, keys = _by_group(pdf, "grp")
-        # an AddSinglBdg singleton is a group of one: it keeps its bid
-        cid = _mst_cluster_ids(pdf, grp, keys, coverage_thresh, 120.0, road_segs)
-        # one buffer pass over every group's clusters: cluster ids are
-        # bids, so no two groups share one
-        cxy = _buffer_cells_np(pdf["rings"], 25.0, cell_size, labels=cid)
-        labels, first = np.unique(cid, return_index=True)
-        at = first[np.searchsorted(labels, cxy[:, 0])]  # a row of each cell's cluster
-        by_grp = np.argsort(grp[at], kind="stable")
-        cxy, at = cxy[by_grp], at[by_grp]
-        single = pdf["part"].isna().to_numpy()[at]
-        return pd.DataFrame({"gx": cxy[:, 1], "gy": cxy[:, 2], "cluster_id": cxy[:, 0], "single": single})
-
-    return kernel
+    PatchRemove is left to the caller: its counts join every building by
+    centroid cell, across clusters and partitions."""
+    pdf, grp, keys = _by_group(pdf, "grp")
+    # an AddSinglBdg singleton is a group of one: it keeps its bid
+    cid = _mst_cluster_ids(pdf, grp, keys, coverage_thresh, 120.0, road_segs)
+    # one buffer pass over every group's clusters: cluster ids are
+    # bids, so no two groups share one
+    cxy = _buffer_cells_np(pdf["rings"], 25.0, cell_size, labels=cid)
+    labels, first = np.unique(cid, return_index=True)
+    at = first[np.searchsorted(labels, cxy[:, 0])]  # a row of each cell's cluster
+    by_grp = np.argsort(grp[at], kind="stable")
+    cxy, at = cxy[by_grp], at[by_grp]
+    single = pdf["part"].isna().to_numpy()[at]
+    return pd.DataFrame({"gx": cxy[:, 1], "gy": cxy[:, 2], "cluster_id": cxy[:, 0], "single": single})
 
 
 # ---------------------------------------------------------------------------
@@ -950,52 +905,8 @@ def footprint_density(
 
 
 # ---------------------------------------------------------------------------
-# Morphological refinement (HoleClose / GapClose — IB-Tool2.py:1704-1901)
+# HoleClose on the cell grid (IB-Tool2.py:1704-50)
 # ---------------------------------------------------------------------------
-
-
-def dilate_cells(cells: DataFrame, k: int = 1) -> DataFrame:
-    """Minkowski dilation of a cell set by a k-ring (the reference's
-    buffer step in its double-buffer closing trick)."""
-    offs = k_ring_offsets(k)
-    off_arr = F.array(
-        *[F.struct(F.lit(int(dx)).alias("dx"), F.lit(int(dy)).alias("dy")) for dx, dy in offs]
-    )
-    return (
-        cells.select("gx", "gy")
-        .withColumn("o", F.explode(off_arr))
-        .select((F.col("gx") + F.col("o.dx")).alias("gx"), (F.col("gy") + F.col("o.dy")).alias("gy"))
-        .distinct()
-    )
-
-
-def erode_cells(cells: DataFrame, k: int = 1) -> DataFrame:
-    """Erosion: keep cells whose whole k-ring is present.  Implemented
-    as a self-join count (a cell survives iff all (2k+1)² shifted
-    copies cover it) — one shuffle on the aggregated cell set."""
-    offs = k_ring_offsets(k)
-    need = offs.shape[0]
-    off_arr = F.array(
-        *[F.struct(F.lit(int(dx)).alias("dx"), F.lit(int(dy)).alias("dy")) for dx, dy in offs]
-    )
-    shifted = (
-        cells.select("gx", "gy")
-        .withColumn("o", F.explode(off_arr))
-        .select((F.col("gx") - F.col("o.dx")).alias("gx"), (F.col("gy") - F.col("o.dy")).alias("gy"))
-    )
-    counts = shifted.groupBy("gx", "gy").agg(F.count(F.lit(1)).alias("n"))
-    return (
-        counts.filter(F.col("n") == need)
-        .join(cells.select("gx", "gy"), ["gx", "gy"], "left_semi")
-        .select("gx", "gy")
-    )
-
-
-def morphological_close(cells: DataFrame, k: int = 1) -> DataFrame:
-    """Closing = dilate(k) then erode(k): bridges sub-2k gaps between
-    nearby boundary parts — the reference's GapClose double-buffer
-    (buffer out, buffer in; IB-Tool2.py:1849-1875) on the cell grid."""
-    return erode_cells(dilate_cells(cells, k), k)
 
 
 def _fill_holes_np(gx: np.ndarray, gy: np.ndarray, max_hole_cells: int) -> np.ndarray:
@@ -1037,55 +948,6 @@ def _fill_holes_np(gx: np.ndarray, gy: np.ndarray, max_hole_cells: int) -> np.nd
     return np.stack([fx + x0, fy + y0], axis=1).astype(np.int64)
 
 
-def hole_close(cells: DataFrame, max_hole_cells: int = 64) -> DataFrame:
-    """Fill enclosed holes smaller than the threshold (HoleClose,
-    IB-Tool2.py:1704-50: polygonize boundary → non-identical parts
-    < MaxHoleSize get merged in).
-
-    Cells are labeled by connected component and each component fills
-    its own holes (_label_and_close: on the driver up to
-    ops.DRIVER_LABEL_CAP distinct cells, distributed beyond; the
-    reference's HoleClose likewise operates per polygonized boundary
-    feature).  A cavity jointly enclosed by several disjoint components
-    is not a hole of any single polygon and stays open — matching the
-    per-feature reference semantics.
-    """
-    return _label_and_close(cells, max_hole_cells).select("gx", "gy")
-
-
-def _label_and_close(
-    cells: DataFrame, max_hole_cells: int = 64, cap: int = ops.DRIVER_LABEL_CAP
-) -> DataFrame:
-    """(gx, gy, boundary_id): the distinct cells labeled by 4-connected
-    component (GapFix's stitch: ``boundary_id`` is ops.cell_components_df's
-    ``comp``), each component with its holes of at most
-    ``max_hole_cells`` filled (HoleClose).
-
-    Two paths, split like ops.cell_components_df's at ``cap`` distinct
-    cells:
-
-    - at most ``cap``: _close_on_driver, returned as a
-      ``LocalTableScan`` (ops.local_df);
-    - otherwise: the super-cell labelling, then one grouped fill per
-      boundary_id (_close_grouped).
-
-    Both give the same frame, since a component's fill reads only its
-    own cells."""
-    distinct = ops._distinct_cells(cells)
-    closed = _close_on_driver(distinct, max_hole_cells, cap)
-    if closed is None:
-        return _close_grouped(distinct, max_hole_cells)
-    return ops.local_df(cells.sparkSession, closed.tolist(), "gx long, gy long, boundary_id long")
-
-
-def _close_on_driver(distinct: DataFrame, max_hole_cells: int, cap: int) -> "np.ndarray | None":
-    """_label_and_close's driver path over distinct (gx, gy) rows: one
-    bounded Arrow collect closed by _close_np, or ``None`` above ``cap``
-    cells."""
-    table = ops.collect_bounded(distinct, cap)
-    return None if table is None else _close_np(ops.int64_columns(table), max_hole_cells)
-
-
 def _close_np(xy: np.ndarray, max_hole_cells: int) -> np.ndarray:
     """GapFix and HoleClose over distinct (n, 2) int64 cells on the
     driver: geom.cell_components labels them and _fill_holes_np closes
@@ -1098,23 +960,6 @@ def _close_np(xy: np.ndarray, max_hole_cells: int) -> np.ndarray:
             filled = _fill_holes_np(xy[idx, 0], xy[idx, 1], max_hole_cells)
             out.append(np.column_stack([filled, np.full(len(filled), labels[idx[0]])]))
     return np.concatenate(out)
-
-
-def _close_grouped(distinct: DataFrame, max_hole_cells: int) -> DataFrame:
-    """_label_and_close's distributed path: the super-cell labelling,
-    then one grouped fill per boundary_id (_fill_holes_np)."""
-    labeled = ops._super_cell_components(distinct).withColumnRenamed("comp", "boundary_id")
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        bid = int(pdf["boundary_id"].iloc[0])
-        filled = _fill_holes_np(
-            pdf["gx"].to_numpy(np.int64), pdf["gy"].to_numpy(np.int64), max_hole_cells
-        )
-        return pd.DataFrame({"gx": filled[:, 0], "gy": filled[:, 1], "boundary_id": bid})
-
-    return _spread(labeled.select("gx", "gy", "boundary_id"), "boundary_id").groupBy("boundary_id").applyInPandas(
-        run, "gx long, gy long, boundary_id long"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1444,8 +1289,8 @@ def prune_edges_by_roads(
 
 
 # ---------------------------------------------------------------------------
-# Final refinement composites (PatchRemove / GapFix / EdgeCatch —
-# IB-Tool2.py:2197-2245, 2121-2195, 1903-2119)
+# Final refinement composites (PatchRemove / GapFix —
+# IB-Tool2.py:2197-2245, 2121-2195)
 # ---------------------------------------------------------------------------
 
 
@@ -1528,101 +1373,6 @@ def gap_fix(boundary_cells: DataFrame) -> DataFrame:
     return boundary_cells.join(labels, ["gx", "gy"], "inner")
 
 
-def _segment_cover_cells(x1, y1, x2, y2, cell_size) -> "tuple[np.ndarray, np.ndarray]":
-    """Cells whose center lies within cell_size of the segment."""
-    gx0 = int(np.floor((min(x1, x2) - cell_size) / cell_size))
-    gx1 = int(np.floor((max(x1, x2) + cell_size) / cell_size))
-    gy0 = int(np.floor((min(y1, y2) - cell_size) / cell_size))
-    gy1 = int(np.floor((max(y1, y2) + cell_size) / cell_size))
-    gxx, gyy = np.meshgrid(np.arange(gx0, gx1 + 1), np.arange(gy0, gy1 + 1))
-    gxx, gyy = gxx.ravel(), gyy.ravel()
-    _fx, _fy, d = geom.perp_foot(
-        (gxx + 0.5) * cell_size, (gyy + 0.5) * cell_size, x1, y1, x2, y2
-    )
-    near = d <= cell_size
-    return gxx[near], gyy[near]
-
-
-def road_cells_df(roads: DataFrame, cell_size: float) -> DataFrame:
-    """Distributed road rasterization: explode polylines to segments
-    (Column math), then cover each segment's cells in an Arrow-batched
-    kernel — work ∝ road length, parallel across segments; no driver
-    loop (round-2 built the cell set with a per-segment meshgrid on the
-    driver)."""
-    segs = road_segments_df(roads).select("x1", "y1", "x2", "y2")
-
-    def cover(it):
-        for pdf in it:
-            gxs, gys = [], []
-            for x1, y1, x2, y2 in pdf.to_numpy(np.float64):
-                gx, gy = _segment_cover_cells(x1, y1, x2, y2, cell_size)
-                gxs.append(gx)
-                gys.append(gy)
-            yield pd.DataFrame(
-                {
-                    "gx": np.concatenate(gxs) if gxs else np.empty(0, np.int64),
-                    "gy": np.concatenate(gys) if gys else np.empty(0, np.int64),
-                }
-            )
-
-    return segs.mapInPandas(cover, "gx long, gy long").distinct()
-
-
-def edge_catch(
-    boundary_cells: DataFrame,  # (gx, gy, cluster_id)
-    roads: "pd.DataFrame | DataFrame",  # polylines (rid, line)
-    cell_size: float,
-    max_dist: float = 70.0,
-) -> DataFrame:
-    """Snap boundaries outward to adjacent roads (EdgeCatch,
-    IB-Tool2.py:1903-2119, simplified to cell resolution): cells within
-    ``max_dist`` of the existing boundary whose center lies within one
-    cell of a road line get annexed — the boundary 'catches' the road
-    edge.  The reference's orthogonal snap-line construction reduces,
-    at cell resolution, to this annex-toward-the-road rule (documented
-    simplification).
-
-    A Spark ``roads`` DataFrame rasterizes distributively
-    (road_cells_df); a pandas one keeps the small-scene driver loop."""
-    k = int(np.ceil(max_dist / cell_size))
-    spark = boundary_cells.sparkSession
-
-    if not isinstance(roads, pd.DataFrame):
-        road_df = road_cells_df(roads, cell_size)
-    else:
-        segs = _road_segments_np(roads)[:, :4]
-        road_cells: set[tuple[int, int]] = set()
-        for x1, y1, x2, y2 in segs:
-            gx, gy = _segment_cover_cells(x1, y1, x2, y2, cell_size)
-            road_cells.update(zip(gx.tolist(), gy.tolist()))
-        if not road_cells:
-            return boundary_cells.select("gx", "gy", "cluster_id").distinct()
-        road_df = ops.local_df(spark, sorted(road_cells), "gx long, gy long")
-
-    # candidates: k-ring dilation per cluster minus the cluster's own
-    # cells — shuffle ∝ boundary cells × ring size, aggregated by
-    # distinct before the road join
-    offs = k_ring_offsets(k)
-    off_arr = F.array(
-        *[F.struct(F.lit(int(dx)).alias("dx"), F.lit(int(dy)).alias("dy")) for dx, dy in offs]
-    )
-    base = boundary_cells.select("gx", "gy", "cluster_id")
-    cand = (
-        base.withColumn("o", F.explode(off_arr))
-        .select(
-            (F.col("gx") + F.col("o.dx")).alias("gx"),
-            (F.col("gy") + F.col("o.dy")).alias("gy"),
-            "cluster_id",
-        )
-        .distinct()
-        .join(base, ["gx", "gy", "cluster_id"], "left_anti")
-    )
-    # no broadcast hint: a continent-scale road raster may not fit one
-    # executor — AQE still broadcasts it when it is small
-    annexed = cand.join(road_df, ["gx", "gy"], "left_semi")
-    return base.unionByName(annexed).distinct()
-
-
 # ---------------------------------------------------------------------------
 # Full delineation pipeline (the reference's main(), IB-Tool2.py:2248-2650)
 # ---------------------------------------------------------------------------
@@ -1652,8 +1402,6 @@ def full_delineation(
     coverage_thresh: float = 12.0,
     min_bdg_count: int = 5,
     use_roads: bool = True,
-    use_edge_catch: bool = False,
-    cap: int = DRIVER_KERNEL_CAP,
 ) -> DataFrame:
     """End-to-end settlement delineation over the synthetic scene —
     the reference's per-partition dataflow (IB-Tool2.py:2401-2517) plus
@@ -1661,97 +1409,42 @@ def full_delineation(
 
     buildings → InputHU_Filter (use-code + min-area filters) → density
     partitioning → MST clustering (road-crossing prune) + AddSinglBdg →
-    buffered dissolve to cells → PatchRemove → [EdgeCatch] → GapFix
-    stitch → HoleClose → per-boundary summary.
+    buffered dissolve to cells → PatchRemove → GapFix stitch →
+    HoleClose → per-boundary summary.
 
-    Stages:
+    Every stage runs on the driver, in numpy, and the result is one
+    driver-built table (ops.local_df), so no Spark job starts before the
+    caller's action and no Python worker starts at all:
 
-    1. synth.buildings_pdf builds the scene once, on the driver, and
-       the filter runs there (config.filter_mask, the pandas twin of
-       the Spark predicate); the density partitions come from
-       _density_partitions_np and every building is keyed by its
-       density cell in pandas (_keyed_buildings_np), with no Spark job;
-    2. mst_cluster_cells' kernel clusters each partition, buffers every
-       cluster to cells and makes the AddSinglBdg singletons, in one
-       call over all the keyed rows (the partitioned ones and those
-       above 300 m²).  Up to ``cap`` filtered buildings (default
-       DRIVER_KERNEL_CAP) it runs on the driver, with each partition's
-       road segments cut from synth.roads_pdf by _near_segments.
-       Beyond ``cap`` buildings, or when more than ``cap`` road
-       segments reach the partitions, the keyed rows become one
-       driver-built table (ops.local_df) and the kernel runs in one
-       grouped Python stage, cogrouped with each partition's roads;
-    3. PatchRemove, then [EdgeCatch]: after the driver kernel (without
-       EdgeCatch) _patch_remove_np on the driver; otherwise the JVM
-       joins of patch_remove and edge_catch;
-    4. GapFix and HoleClose: after the driver kernel (without EdgeCatch)
-       _close_np over the kernel's cells, so the whole finish runs on
-       the driver and the summary is one driver-built table; otherwise
-       as in _label_and_close, on the driver when the stitched cells
-       number at most ops.DRIVER_LABEL_CAP (the per-boundary counts are
-       then built there too), else through the super-cell labelling, a
-       grouped Python stage and a Spark aggregation.
+    1. synth.buildings_pdf builds the scene and the filter runs on it
+       (config.filter_mask, the pandas twin of the Spark predicate); the
+       density partitions come from _density_partitions_np and every
+       building is keyed by its density cell (_keyed_buildings_np);
+    2. _mst_cells_kernel clusters each partition, buffers every cluster
+       to cells and makes the AddSinglBdg singletons, in one call over
+       the partitioned buildings and those above 300 m², with each
+       partition's road segments cut from synth.roads_pdf by
+       _near_segments;
+    3. _finish_on_driver: PatchRemove (_patch_remove_np), then GapFix
+       and HoleClose (_close_np), counted per boundary.
 
-    Materialisation points:
-
-    - driver placement: none before the caller's action; with EdgeCatch
-      the kernel's cells become a driver-built table that PatchRemove's
-      stats join, its ``left_semi`` join and the singletons'
-      pass-through read without recomputation, and the stitched cells
-      are fetched once by _close_on_driver;
-    - grouped placement: an eager ``localCheckpoint`` of the kernel's
-      output, for the same three readers, and the stitched-cells fetch
-      of _close_on_driver.
+    There is no size bound and no grouped placement: the scene is built
+    on the driver before clustering, so a grouped stage would only ship
+    a driver-held frame to Python workers, and the driver won cold and
+    warm at every size measured (DRIVER_KERNEL_CAP's table, up to 25,811
+    kernel rows at 302 MB driver peak RSS).  Buildings held in Spark
+    are clustered by mst_cluster, which keeps a grouped placement.
     """
     from . import synth
 
     b = _filtered_buildings(synth.buildings_pdf(per_cluster=per_cluster))
-    lines = synth.roads_pdf()[["rid", "line"]] if use_roads else None
-    edge_catching = use_edge_catch and use_roads
-    kernel = _mst_cells_kernel(coverage_thresh, cell_size)
     keyed = _keyed_buildings_np(b)
-    kernel_rows = keyed[keyed["part"].notna() | (keyed["area"] > _SINGLE_MIN_AREA)]
-    rows = None
-    if len(b) <= cap:
-        near = {} if lines is None else _near_segments(kernel_rows, lines, cap)
-        if near is not None:
-            rows = kernel(kernel_rows, near)
-    if rows is not None and not edge_catching:
-        counts = _finish_on_driver(spark, rows, b, cell_size, min_bdg_count)
-        return _with_area(counts, cell_size)
-
-    b_df = ops.local_df(spark, b, synth.BUILDINGS_SCHEMA)
-    roads = None
-    if lines is not None:
-        roads = ops.local_df(spark, lines, "rid long, line array<array<double>>")
-    if rows is not None:
-        clustered = ops.local_df(spark, rows, MST_CELLS_SCHEMA)
-    else:
-        prepared = ops.local_df(spark, kernel_rows, MST_CELLS_INPUT_SCHEMA)
-        clustered = _per_partition_grouped(
-            prepared, "grp", roads, 1024.0, kernel, MST_CELLS_SCHEMA
-        ).localCheckpoint(eager=True)
-
-    # PatchRemove applies to the aggregated clusters; AddSinglBdg
-    # singletons bypass it (they are kept by construction, mirroring
-    # the reference's ordering where AddSinglBdg output joins the
-    # final merge after the density-based filters)
-    main = clustered.filter(~F.col("single")).select("gx", "gy", "cluster_id")
-    single = clustered.filter(F.col("single")).select("gx", "gy", "cluster_id")
-    cells = patch_remove(main, b_df, cell_size, min_bdg_count=min_bdg_count, min_patch_cells=4)
-    cells = cells.unionByName(single)
-    if edge_catching:
-        cells = edge_catch(cells, roads, cell_size)
-    # GapFix + HoleClose (_label_and_close), counted per boundary
-    distinct = ops._distinct_cells(cells)
-    closed = _close_on_driver(distinct, 64, ops.DRIVER_LABEL_CAP)
-    if closed is None:
-        counts = _close_grouped(distinct, 64).groupBy("boundary_id").agg(
-            F.count(F.lit(1)).alias("n_cells")
-        )
-    else:
-        counts = _boundary_counts(spark, closed)
-    return _with_area(counts, cell_size)
+    rows = keyed[keyed["part"].notna() | (keyed["area"] > _SINGLE_MIN_AREA)]
+    near = None
+    if use_roads:
+        near = _near_segments(rows, _road_segments_np(synth.roads_pdf()[["rid", "line"]]))
+    cells = _mst_cells_kernel(rows, near, coverage_thresh, cell_size)
+    return _with_area(_finish_on_driver(spark, cells, b, cell_size, min_bdg_count), cell_size)
 
 
 def _filtered_buildings(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1765,8 +1458,9 @@ def _filtered_buildings(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def _keyed_buildings_np(b: pd.DataFrame) -> pd.DataFrame:
-    """The driver twin of _mst_cells_input(assign_partitions_df(…)):
-    every building of ``b`` as (bid, rings, cx, cy, area, part, grp),
+    """assign_partitions_df over density_partitions_df on the driver,
+    keyed as _mst_cells_kernel reads it: every building of ``b`` as
+    (bid, rings, cx, cy, area, part, grp),
     ``part`` its density cell's partition from _density_partitions_np
     (null outside every one) and ``grp`` the partition or
     ``single_<bid>``."""
@@ -1784,21 +1478,15 @@ def _keyed_buildings_np(b: pd.DataFrame) -> pd.DataFrame:
 def _finish_on_driver(
     spark, rows: pd.DataFrame, buildings: pd.DataFrame, cell_size: float, min_bdg_count: int
 ) -> DataFrame:
-    """full_delineation's stages 3-4 over the driver kernel's rows
-    (MST_CELLS_SCHEMA columns): PatchRemove (_patch_remove_np over every
-    filtered building), the singletons' union, the distinct cells,
-    GapFix and HoleClose (_close_np); (boundary_id, n_cells) as one
-    driver-built table."""
+    """full_delineation's stage 3 over _mst_cells_kernel's rows:
+    PatchRemove (_patch_remove_np over every filtered building), the
+    singletons' union, the distinct cells, GapFix and HoleClose
+    (_close_np); (boundary_id, n_cells) as one driver-built table."""
     single = rows["single"].to_numpy(bool)
     main = rows[["gx", "gy", "cluster_id"]].to_numpy(np.int64)[~single]
     kept = main[_patch_remove_np(main, buildings, cell_size, min_bdg_count, min_patch_cells=4)]
     xy = np.concatenate([kept[:, :2], rows.loc[single, ["gx", "gy"]].to_numpy(np.int64)])
-    return _boundary_counts(spark, _close_np(np.unique(xy, axis=0), 64))
-
-
-def _boundary_counts(spark, closed: np.ndarray) -> DataFrame:
-    """(boundary_id, n_cells) of _close_np's rows, as a driver-built table."""
-    ids, n = np.unique(closed[:, 2], return_counts=True)
+    ids, n = np.unique(_close_np(np.unique(xy, axis=0), 64)[:, 2], return_counts=True)
     return ops.local_df(
         spark, pd.DataFrame({"boundary_id": ids, "n_cells": n}), "boundary_id long, n_cells long"
     )
@@ -1969,10 +1657,8 @@ def blocker(
 
 # ---------------------------------------------------------------------------
 # EdgeCatch — exact orthogonal snap-line construction
-# (IB-Tool2.py:1903-2119). Round 1 shipped an annex-cells-near-roads
-# simplification (edge_catch above, kept for the cell pipeline); this
-# is the reference's full geometry: per group, vertex→road nearest
-# points (<70 m) → angle-grouping (with the reference's quirks,
+# (IB-Tool2.py:1903-2119), the reference's full geometry: per group,
+# vertex→road nearest points (<70 m) → angle-grouping (with the reference's quirks,
 # replicated) → snap lines → polygonize(outline ∪ snap lines ∪ touched
 # roads) → keep faces touching buildings → clip to blocks → drop
 # pieces ≥ 3× the group's area.

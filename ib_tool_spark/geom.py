@@ -1906,9 +1906,9 @@ def buffer_polygon(rings: list[np.ndarray], radius: float, n_arc: int = 16) -> l
 def close_holes(rings: list[np.ndarray], max_hole_area: float) -> list[np.ndarray]:
     """Exact polygon-level HoleClose (IB-Tool2.py:1704-50): drop hole
     rings (odd containment depth under the even-odd reading) whose area
-    is below the threshold.  The cell-grid hole_close in delineate.py
-    covers the raster pipeline; this is the ring-level equivalent for
-    exact-geometry callers."""
+    is below the threshold.  delineate._close_np fills holes on the
+    cell grid for full_delineation; this is the ring-level equivalent
+    for exact-geometry callers."""
     rs = [coerce_ring(r) for r in rings]
     out: list[np.ndarray] = []
     for i, r in enumerate(rs):

@@ -135,20 +135,6 @@ def test_mst_cluster_df_roads_beyond_closure_scale(spark, scene):
     pd.testing.assert_frame_equal(a, c)
 
 
-def test_road_cells_df_matches_driver_loop(spark, scene):
-    _b, roads_pd, roads_sp = scene
-    cell_size = 16.0
-    segs = delineate._road_segments_np(roads_pd)[:, :4]
-    want = set()
-    for x1, y1, x2, y2 in segs:
-        gx, gy = delineate._segment_cover_cells(x1, y1, x2, y2, cell_size)
-        want.update(zip(gx.tolist(), gy.tolist()))
-    got = {
-        (r.gx, r.gy) for r in delineate.road_cells_df(roads_sp, cell_size).collect()
-    }
-    assert got == want
-
-
 def test_blocker_df_parity(spark):
     part_rings = [geom.rect_ring(3000.0, 1000.0, 6000.0, 2000.0, 0.0).tolist()]
     parts_pd = pd.DataFrame({"part": ["P0"], "rings": [part_rings]})

@@ -224,9 +224,13 @@ def test_batched_kernel_matches_per_group(per_cluster):
     # one call over every group gives the frame of one call per group,
     # concatenated in key order: with each partition's roads and without
     rows = _kernel_rows(per_cluster)
-    near = delineate._near_segments(rows, synth.roads_pdf()[["rid", "line"]], 10**9)
+    segs = delineate._road_segments_np(synth.roads_pdf()[["rid", "line"]])
+    near = delineate._near_segments(rows, segs)
     assert rows["part"].isna().any() and len(near) > 1
-    cells = delineate._mst_cells_kernel(12.0, 16.0)
+
+    def cells(pdf, road_segs):
+        return delineate._mst_cells_kernel(pdf, road_segs, 12.0, 16.0)
+
     for roads in (near, {}):
         want = pd.concat(
             [cells(g, roads.get(k)) for k, g in rows.groupby("grp", sort=True)], ignore_index=True
@@ -320,8 +324,8 @@ def test_near_segments_match_sorted_segs():
     )
     cases = [(pdf, lines), (_kernel_rows(30), synth.roads_pdf()[["rid", "line"]])]
     for pdf, lines in cases:
-        got = delineate._near_segments(pdf, lines, 10**9)
         segs = delineate._road_segments_np(lines)
+        got = delineate._near_segments(pdf, segs)
         segs = segs[~pd.DataFrame(segs).duplicated().to_numpy()]
         lo, hi = np.minimum(segs[:, :2], segs[:, 2:4]), np.maximum(segs[:, :2], segs[:, 2:4])
         want = {}
@@ -339,7 +343,7 @@ def test_near_segments_match_sorted_segs():
         assert got.keys() == want.keys()
         for part in want:
             np.testing.assert_array_equal(got[part], want[part])
-    a = delineate._near_segments(*cases[0], 10**9)["A"]
+    a = delineate._near_segments(cases[0][0], delineate._road_segments_np(cases[0][1]))["A"]
     tie = a[(a[:, 0] == 0.0) & (a[:, 1] == 0.0) & (a[:, 2] == 10.0) & (a[:, 3] == 0.0)]
     np.testing.assert_array_equal(tie[:, 4], [10.0, 60.0])
 

@@ -200,8 +200,8 @@ def test_driver_built_relations_scan_locally(spark, arrow):
     assert (got["x"].to_numpy() == x).all() and (got["y"].to_numpy() == y).all()
 
     # delineate's driver-built tables: the Thiessen faces, a pandas
-    # partition map (assign_partitions, footprint_density), edge_catch's
-    # road cells from pandas roads and blocker's pandas roads
+    # partition map (assign_partitions, footprint_density) and blocker's
+    # pandas roads
     import pandas as pd
 
     from ib_tool_spark import geom
@@ -226,14 +226,6 @@ def test_driver_built_relations_scan_locally(spark, arrow):
     density = delineate.footprint_density(b, parts)
     _assert_local_scan(density)
     assert density.count() == parts["part_name"].nunique()
-
-    cells = ops.local_df(
-        spark, [(x, y, 0) for x in range(4) for y in range(4)], "gx long, gy long, cluster_id long"
-    )
-    road = pd.DataFrame([{"rid": 0, "line": [[65.0, -100.0], [65.0, 200.0]]}])
-    caught = delineate.edge_catch(cells, road, cell_size=10.0, max_dist=70.0)
-    _assert_local_scan(caught)
-    assert caught.count() > 16
 
     part = ops.local_df(
         spark,
@@ -325,42 +317,33 @@ def _sql_status(spark):
     return store, spark._jvm.scala.jdk.javaapi.CollectionConverters
 
 
-def test_full_delineation_runs_one_grouped_python_stage(spark, arrow):
-    """Across every action of one call (the final collect included):
-    at the default cap the density partitions, the per-partition kernel
-    and the whole finish (PatchRemove, the stitch, HoleClose) run on the
-    driver, so building the frame starts no Spark job, no Python plan
-    node runs at all and the collect runs at most 3 jobs; with the
-    kernel cap forced to 0, clustering, AddSinglBdg and the buffered
-    dissolve share exactly one cogroup stage."""
+def test_full_delineation_runs_no_python_and_at_most_3_jobs(spark, arrow):
+    """Across every action of one call (the final collect included) the
+    density partitions, the per-partition kernel and the whole finish
+    (PatchRemove, the stitch, HoleClose) run on the driver: building the
+    frame starts no Spark job, no Python plan node runs at all and the
+    collect runs at most 3 jobs."""
     sc = spark.sparkContext
-
-    def plan_nodes(**kw):
-        store, conv = _sql_status(spark)
-        before = {e.executionId() for e in conv.asJava(store.executionsList())}
-        group = f"full_delineation_{arrow}_{kw}"
-        sc.setJobGroup(group, group)
-        try:
-            df = delineate.full_delineation(spark, per_cluster=20, **kw)
-            built = list(sc.statusTracker().getJobIdsForGroup(group))
-            df.collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        store, conv = _sql_status(spark)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        # physical-plan node names of every new execution (adaptive final plans)
-        return built, jobs, [
-            n.name()
-            for e in conv.asJava(store.executionsList())
-            if e.executionId() not in before
-            for n in conv.asJava(store.planGraph(e.executionId()).allNodes())
-        ]
-
-    built, jobs, names = plan_nodes()
+    store, conv = _sql_status(spark)
+    before = {e.executionId() for e in conv.asJava(store.executionsList())}
+    group = f"full_delineation_{arrow}"
+    sc.setJobGroup(group, group)
+    try:
+        df = delineate.full_delineation(spark, per_cluster=20)
+        built = list(sc.statusTracker().getJobIdsForGroup(group))
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    store, conv = _sql_status(spark)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    # physical-plan node names of every new execution (adaptive final plans)
+    names = [
+        n.name()
+        for e in conv.asJava(store.executionsList())
+        if e.executionId() not in before
+        for n in conv.asJava(store.planGraph(e.executionId()).allNodes())
+    ]
     assert built == [], built
     python = [n for n in names if "InPandas" in n or "EvalPython" in n or "ExistingRDD" in n]
     assert not python, names
     assert 0 < len(jobs) <= 3, (len(jobs), names)
-    _built, _jobs, names = plan_nodes(cap=0)
-    assert names.count("FlatMapCoGroupsInPandas") == 1, names
-    assert "FlatMapGroupsInPandas" not in names, names

@@ -1,11 +1,11 @@
-"""Final refinement composites: PatchRemove, GapFix, EdgeCatch."""
+"""Final refinement composites: PatchRemove, GapFix, HoleClose."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from ib_tool_spark import delineate
+from ib_tool_spark import delineate, ops
 
 
 def _cells(spark, triples):
@@ -53,21 +53,6 @@ def test_gap_fix_stitches_across_partitions(spark):
     ids = out.groupby("cluster_id")["boundary_id"].unique()
     assert ids[0][0] == ids[1][0]  # stitched
     assert ids[2][0] != ids[0][0]  # distant patch stays separate
-
-
-def test_edge_catch_annexes_toward_road(spark):
-    # square cluster; vertical road 3 cells to the right within 70 m
-    cells = [(x, y, 0) for x in range(4) for y in range(4)]
-    df = _cells(spark, cells)
-    road = pd.DataFrame([{"rid": 0, "line": [[65.0, -100.0], [65.0, 200.0]]}])
-    out = delineate.edge_catch(df, road, cell_size=10.0, max_dist=70.0).toPandas()
-    got = {(r.gx, r.gy) for r in out.itertuples()}
-    # road at x=65 → cells with centers within 10 m: gx=5 and gx=6
-    assert (5, 0) in got and (6, 3) in got
-    # originals retained
-    assert {(x, y) for x in range(4) for y in range(4)} <= got
-    # nothing annexed beyond max_dist on the far side
-    assert all(g[0] <= 10 for g in got)
 
 
 def test_full_delineation_end_to_end(spark):
@@ -126,16 +111,38 @@ def _sorted_cells(df):
     return df.sort_values(["cluster_id", "gx", "gy"]).reset_index(drop=True)
 
 
+def _kernel_rows(per_cluster: int) -> pd.DataFrame:
+    """full_delineation's kernel input: the filtered buildings keyed in
+    numpy, partitioned or above 300 m²."""
+    from ib_tool_spark import synth
+
+    keyed = delineate._keyed_buildings_np(
+        delineate._filtered_buildings(synth.buildings_pdf(per_cluster=per_cluster))
+    )
+    return keyed[keyed["part"].notna() | (keyed["area"] > delineate._SINGLE_MIN_AREA)]
+
+
+def _near(rows: pd.DataFrame, use_roads: bool):
+    from ib_tool_spark import synth
+
+    if not use_roads:
+        return None
+    return delineate._near_segments(rows, delineate._road_segments_np(synth.roads_pdf()[["rid", "line"]]))
+
+
 @pytest.mark.parametrize("use_roads", [True, False], ids=["roads", "no_roads"])
 def test_mst_cluster_cells_matches_staged_stages(spark, keyed_scene, use_roads):
-    """The fused stage emits the rows of mst_cluster + cluster_cells for
-    the partitioned buildings and of cluster_cells over the AddSinglBdg
-    singletons, flagged apart."""
+    """The fused kernel (_mst_cells_kernel over _keyed_buildings_np's
+    rows) emits the rows of mst_cluster + cluster_cells for the
+    partitioned buildings and of cluster_cells over the AddSinglBdg
+    singletons, flagged apart; the staged side keys the buildings in
+    Spark and fetches its roads from a Spark frame."""
     from ib_tool_spark import synth
 
     b, keyed = keyed_scene
+    rows = _kernel_rows(20)
+    fused = delineate._mst_cells_kernel(rows, _near(rows, use_roads), 12.0, 16.0)
     roads = synth.roads_df(spark).select("rid", "line") if use_roads else None
-    fused = delineate.mst_cluster_cells(keyed, roads=roads, cell_size=16.0).toPandas()
 
     bp = keyed.filter(F.col("part_name").isNotNull()).withColumnRenamed("part_name", "part")
     clustered = delineate.mst_cluster(bp, roads=roads)
@@ -159,30 +166,42 @@ def _block(x0, y0, w, h):
     return {(x0 + x, y0 + y) for x in range(w) for y in range(h)}
 
 
+def _fill_per_component(labeled: pd.DataFrame, max_hole_cells: int) -> pd.DataFrame:
+    """_fill_holes_np over each ``comp`` of (gx, gy, comp) rows, as
+    (gx, gy, boundary_id) sorted by (boundary_id, gx, gy)."""
+    parts = [
+        pd.DataFrame(
+            delineate._fill_holes_np(
+                g["gx"].to_numpy(np.int64), g["gy"].to_numpy(np.int64), max_hole_cells
+            ),
+            columns=["gx", "gy"],
+        ).assign(boundary_id=np.int64(comp))
+        for comp, g in labeled.groupby("comp")
+    ]
+    out = pd.concat(parts, ignore_index=True)
+    return out.sort_values(["boundary_id", "gx", "gy"]).reset_index(drop=True)
+
+
 def test_label_and_close_paths_agree(spark):
-    """The driver path and the distributed path (cap=0) give the same
-    frame: holes of 1 and max_hole_cells cells close, one cell larger
-    stays open, and an island inside a closed hole keeps its own id
-    while its ring's fill covers it too."""
+    """_close_np gives the frame of the distributed labelling
+    (ops.cell_components_df with cap=0) closed per component by
+    _fill_holes_np: holes of 1 and max_hole_cells cells close, one cell
+    larger stays open, and an island inside a closed hole keeps its own
+    id while its ring's fill covers it too."""
     k = 9
     a = _block(0, 0, 3, 3) - {(1, 1)}  # 1-cell hole
     b = _block(10, 0, 5, 5) - _block(11, 1, 3, 3)  # k-cell hole
     c = _block(20, 0, 7, 4) - _block(21, 1, 5, 2)  # (k + 1)-cell hole
     d = _block(30, 0, 5, 5) - _block(31, 1, 3, 3)  # k-cell hole around an island
     island = {(32, 2)}
-    df = spark.createDataFrame(sorted(a | b | c | d | island), "gx long, gy long")
+    cells = sorted(a | b | c | d | island)
 
-    def run(**kw):
-        out = delineate._label_and_close(df, max_hole_cells=k, **kw)
-        plan = out._jdf.queryExecution().toString()
-        got = out.toPandas().sort_values(["boundary_id", "gx", "gy"]).reset_index(drop=True)
-        return got, plan
-
-    driver, driver_plan = run()
-    dist, dist_plan = run(cap=0)
-    assert "LocalTableScan" in driver_plan and "FlatMapGroupsInPandas" not in driver_plan
-    assert "FlatMapGroupsInPandas" in dist_plan
-    pd.testing.assert_frame_equal(driver, dist)
+    closed = delineate._close_np(np.array(cells, dtype=np.int64), k)
+    driver = pd.DataFrame(closed, columns=["gx", "gy", "boundary_id"])
+    driver = driver.sort_values(["boundary_id", "gx", "gy"]).reset_index(drop=True)
+    labeled = ops.cell_components_df(spark.createDataFrame(cells, "gx long, gy long"), cap=0)
+    assert not labeled.isLocal()  # the super-cell plan, not a driver-built table
+    pd.testing.assert_frame_equal(driver, _fill_per_component(labeled.toPandas(), k))
 
     by_id = {bid: set(zip(g["gx"], g["gy"])) for bid, g in driver.groupby("boundary_id")}
     assert by_id == {
@@ -222,26 +241,20 @@ def _placement(df):
 
 @pytest.mark.parametrize("roads_kind", ["spark", "pandas", "none"])
 def test_per_partition_placements_agree(spark, keyed_scene, roads_kind):
-    """mst_cluster and mst_cluster_cells return the same frame on the
-    driver (default cap) and in the grouped stage (cap=0), with Spark
-    roads, pandas roads and none."""
+    """mst_cluster returns the same frame on the driver (default cap)
+    and in the grouped stage (cap=0), with Spark roads, pandas roads
+    and none."""
     keyed = _scene_subset(spark, keyed_scene)
     roads = _road_variants(spark)[roads_kind]
     bp = keyed.filter(F.col("part_name").isNotNull()).withColumnRenamed("part_name", "part")
-    cases = [
-        (lambda **kw: delineate.mst_cluster(bp, roads=roads, **kw), ["part", "bid"]),
-        (
-            lambda **kw: delineate.mst_cluster_cells(keyed, roads=roads, cell_size=16.0, **kw),
-            ["cluster_id", "gx", "gy"],
-        ),
-    ]
-    for fn, order in cases:
-        driver, grouped = fn(), fn(cap=0)
-        assert (_placement(driver), _placement(grouped)) == ("driver", "grouped")
-        want = grouped.toPandas().sort_values(order).reset_index(drop=True)
-        got = driver.toPandas().sort_values(order).reset_index(drop=True)
-        assert len(want)
-        pd.testing.assert_frame_equal(got, want)
+    order = ["part", "bid"]
+    driver = delineate.mst_cluster(bp, roads=roads)
+    grouped = delineate.mst_cluster(bp, roads=roads, cap=0)
+    assert (_placement(driver), _placement(grouped)) == ("driver", "grouped")
+    want = grouped.toPandas().sort_values(order).reset_index(drop=True)
+    got = driver.toPandas().sort_values(order).reset_index(drop=True)
+    assert len(want)
+    pd.testing.assert_frame_equal(got, want)
 
 
 def test_per_partition_cap_boundary(spark, keyed_scene):
@@ -252,21 +265,22 @@ def test_per_partition_cap_boundary(spark, keyed_scene):
     from ib_tool_spark import synth
 
     keyed = _scene_subset(spark, keyed_scene).filter(F.col("true_cluster") < 3)
-    n = keyed.filter(F.col("part_name").isNotNull() | (F.col("area") > 300.0)).count()
-    order = ["cluster_id", "gx", "gy"]
+    bp = keyed.filter(F.col("part_name").isNotNull()).withColumnRenamed("part_name", "part")
+    n = bp.count()
+    order = ["part", "bid"]
 
-    def cells(roads, cap):
-        out = delineate.mst_cluster_cells(keyed, roads=roads, cell_size=16.0, cap=cap)
+    def clusters(roads, cap):
+        out = delineate.mst_cluster(bp, roads=roads, cap=cap)
         return _placement(out), out.toPandas().sort_values(order).reset_index(drop=True)
 
     for roads in (None, synth.roads_pdf()[["rid", "line"]]):
-        (p_at, at_cap), (p_above, above) = cells(roads, n), cells(roads, n - 1)
+        (p_at, at_cap), (p_above, above) = clusters(roads, n), clusters(roads, n - 1)
         assert (p_at, p_above) == ("driver", "grouped")
         pd.testing.assert_frame_equal(at_cap, above)
 
     # the n buildings fit, so the road fetch is what exceeds the cap
     roads = synth.roads_df(spark).select("rid", "line")
-    (p_at, at_cap), (p_grouped, grouped) = cells(roads, n), cells(roads, 0)
+    (p_at, at_cap), (p_grouped, grouped) = clusters(roads, n), clusters(roads, 0)
     assert (p_at, p_grouped) == ("grouped", "grouped")
     pd.testing.assert_frame_equal(at_cap, grouped)
 
@@ -342,34 +356,70 @@ def test_buffer_cells_match_per_footprint_reference():
 ARROW_KEY = "spark.sql.execution.arrow.pyspark.enabled"
 
 
+def _full_delineation_in_spark(spark, per_cluster: int, use_roads: bool) -> pd.DataFrame:
+    """full_delineation's frame rebuilt from the Spark operators: the
+    kernel's rows as a Spark frame, the JVM patch_remove plus the
+    singletons, the distributed labelling (ops.cell_components_df with
+    cap=0), _fill_holes_np per boundary, then counts and area."""
+    from ib_tool_spark import synth
+
+    rows = _kernel_rows(per_cluster)
+    cells = spark.createDataFrame(
+        delineate._mst_cells_kernel(rows, _near(rows, use_roads), 12.0, 16.0),
+        "gx long, gy long, cluster_id long, single boolean",
+    )
+    b = delineate._filtered_buildings(synth.buildings_pdf(per_cluster=per_cluster))
+    b_df = spark.createDataFrame(b[["cx", "cy", "area"]], "cx double, cy double, area double")
+    main = cells.filter(~F.col("single")).select("gx", "gy", "cluster_id")
+    kept = delineate.patch_remove(main, b_df, 16.0, min_bdg_count=5, min_patch_cells=4)
+    stitched = kept.unionByName(cells.filter(F.col("single")).select("gx", "gy", "cluster_id"))
+    labeled = ops.cell_components_df(stitched, cap=0).toPandas()
+    counts = _fill_per_component(labeled, 64).groupby("boundary_id").size()
+    return pd.DataFrame(
+        {
+            "boundary_id": counts.index.to_numpy(np.int64),
+            "n_cells": counts.to_numpy(np.int64),
+            "area": counts.to_numpy(np.float64) * 16.0 * 16.0,
+        }
+    )
+
+
 @pytest.mark.parametrize("arrow", ["true", "false"], ids=["arrow_on", "arrow_off"])
 @pytest.mark.parametrize("use_roads", [True, False], ids=["roads", "no_roads"])
 def test_full_delineation_placements_agree(spark, use_roads, arrow):
-    """At the default caps the kernel and the whole finish (PatchRemove,
-    the stitch, HoleClose) run on the driver; with cap=0 the grouped
-    kernel, the Spark PatchRemove and the stitched-cells close run
-    instead (test_plan_shapes pins both placements).  Both give the
-    same frame, with or without roads, with Arrow on or off."""
+    """full_delineation's driver finish (PatchRemove, the stitch,
+    HoleClose in numpy) gives the frame that the Spark operators build
+    from the same kernel rows, with or without roads, with Arrow on or
+    off."""
     old = spark.conf.get(ARROW_KEY)
     spark.conf.set(ARROW_KEY, arrow)
     try:
-        driver = delineate.full_delineation(spark, per_cluster=20, use_roads=use_roads)
-        grouped = delineate.full_delineation(spark, per_cluster=20, use_roads=use_roads, cap=0)
-        got, want = driver.toPandas(), grouped.toPandas()
+        got = delineate.full_delineation(spark, per_cluster=20, use_roads=use_roads).toPandas()
+        want = _full_delineation_in_spark(spark, 20, use_roads)
     finally:
         spark.conf.set(ARROW_KEY, old)
     assert len(want) > 48
     pd.testing.assert_frame_equal(got, want)
 
 
-def test_full_delineation_edge_catch_keeps_the_spark_chain(spark):
-    """With EdgeCatch the finish stays in Spark after the driver kernel
-    (PatchRemove's joins, edge_catch, the stitched-cells close), and the
-    frame equals the one from the grouped kernel (cap=0)."""
-    driver = delineate.full_delineation(spark, per_cluster=20, use_edge_catch=True)
-    grouped = delineate.full_delineation(spark, per_cluster=20, use_edge_catch=True, cap=0)
-    base = delineate.full_delineation(spark, per_cluster=20)
-    got, want = driver.toPandas(), grouped.toPandas()
-    pd.testing.assert_frame_equal(got, want)
-    # EdgeCatch annexes road cells, so it changes the boundaries
-    assert not got.equals(base.toPandas())
+def test_full_delineation_matches_benchmark_digest(spark):
+    """full_delineation(per_cluster=30) has the digest the delineate
+    benchmark stores in perfbench/expected_delineate.json, with Arrow on
+    and off: (rows, bit_xor of xxhash64 over every column)."""
+    import json
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "perfbench", "expected_delineate.json")) as f:
+        want = list(json.load(f)["digest"])
+    old = spark.conf.get(ARROW_KEY)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(ARROW_KEY, arrow)
+            df = delineate.full_delineation(spark, per_cluster=30)
+            row = df.select(
+                F.count(F.lit(1)), F.coalesce(F.bit_xor(F.xxhash64(*df.columns)), F.lit(0))
+            ).collect()[0]
+            assert list(row) == want, (arrow, list(row))
+    finally:
+        spark.conf.set(ARROW_KEY, old)

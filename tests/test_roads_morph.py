@@ -1,4 +1,4 @@
-"""Road graph operators + morphological refinement composites."""
+"""Road graph operators and HoleClose on the cell grid."""
 
 import numpy as np
 import pandas as pd
@@ -8,45 +8,18 @@ from pyspark.sql import functions as F
 from ib_tool_spark import delineate, geom, synth
 
 
-def _cells_df(spark, cells):
-    pdf = pd.DataFrame(sorted(cells), columns=["gx", "gy"])
-    return spark.createDataFrame(pdf, "gx long, gy long")
-
-
-def test_dilate_erode_roundtrip(spark):
-    block = {(x, y) for x in range(5) for y in range(5)}
-    df = _cells_df(spark, block)
-    dil = {(r.gx, r.gy) for r in delineate.dilate_cells(df, 1).collect()}
-    assert dil == {(x, y) for x in range(-1, 6) for y in range(-1, 6)}
-    ero = {(r.gx, r.gy) for r in delineate.erode_cells(df, 1).collect()}
-    assert ero == {(x, y) for x in range(1, 4) for y in range(1, 4)}
-    closed = {(r.gx, r.gy) for r in delineate.morphological_close(df, 1).collect()}
-    assert closed == block  # closing is idempotent on a convex block
-
-
-def test_morphological_close_bridges_gap(spark):
-    # two 3x3 blocks separated by a 1-cell gap → closing(1) bridges it
-    a = {(x, y) for x in range(0, 3) for y in range(0, 3)}
-    b = {(x, y) for x in range(4, 7) for y in range(0, 3)}
-    closed = {
-        (r.gx, r.gy)
-        for r in delineate.morphological_close(_cells_df(spark, a | b), 1).collect()
-    }
-    assert (3, 1) in closed  # gap filled
-    assert a | b <= closed
-    labels = geom.cell_components(
-        np.array([c[0] for c in closed]), np.array([c[1] for c in closed])
-    )
-    assert len(set(labels)) == 1  # single component after closing
-
-
-def test_hole_close(spark):
+def test_hole_close():
     ring = {(x, y) for x in range(6) for y in range(6)} - {(2, 2), (2, 3), (3, 2), (3, 3)}
-    out = {(r.gx, r.gy) for r in delineate.hole_close(_cells_df(spark, ring), max_hole_cells=8).collect()}
-    assert out == {(x, y) for x in range(6) for y in range(6)}
+    xy = np.array(sorted(ring), dtype=np.int64)
+
+    def closed(max_hole_cells):
+        out = delineate._close_np(xy, max_hole_cells)
+        assert (out[:, 2] == 0).all()  # one boundary
+        return set(map(tuple, out[:, :2].tolist()))
+
+    assert closed(8) == {(x, y) for x in range(6) for y in range(6)}
     # too-large hole stays open
-    out2 = {(r.gx, r.gy) for r in delineate.hole_close(_cells_df(spark, ring), max_hole_cells=2).collect()}
-    assert out2 == ring
+    assert closed(2) == ring
 
 
 def test_road_node_degrees(spark):
