@@ -12,11 +12,13 @@ worker failure.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
 import time
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST = "manifest.json"
@@ -114,6 +116,17 @@ class StageCheckpoint:
         return out
 
 
+def _polygons_digest(polygons) -> str:
+    """Content digest of a polygon set (sid + ring coordinates), so a
+    changed scene invalidates every snapshot built from it."""
+    h = hashlib.sha1()
+    for sid, _name, rings in polygons:
+        h.update(str(int(sid)).encode())
+        for r in rings:
+            h.update(np.ascontiguousarray(np.asarray(r, dtype=np.float64)).tobytes())
+    return h.hexdigest()
+
+
 def flagship_checkpointed(
     spark: SparkSession,
     root: str,
@@ -135,7 +148,7 @@ def flagship_checkpointed(
     # fingerprint plus a content digest of the scene (seed + polygon
     # rings), so changing the scene or any upstream parameter
     # invalidates every downstream snapshot — never a stale resume.
-    scene_fp = f"seed={synth.SCENE_SEED}:polys={ops._polygons_digest(scene.polygons)}"
+    scene_fp = f"seed={synth.SCENE_SEED}:polys={_polygons_digest(scene.polygons)}"
 
     fp1 = f"synth:n={n_images}:{scene_fp}"
     images = ck.stage(

@@ -887,46 +887,6 @@ def cover_cells_with_edges(
     return cells, fulls, cpx, cpy, cpar, edge_lists
 
 
-# ---------------------------------------------------------------------------
-# Vector scalar kernels (G16/G17 — NearPoint / VectorAngle,
-# IB-Tool2.py:492-557)
-# ---------------------------------------------------------------------------
-
-
-def perp_foot(px, py, x1, y1, x2, y2):
-    """Foot of the perpendicular from point(s) P onto segment(s) AB,
-    clamped to the segment — vectorized (the reference's NearPoint,
-    IB-Tool2.py:492-513).  Returns (fx, fy, dist)."""
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    x1 = np.asarray(x1, dtype=np.float64)
-    y1 = np.asarray(y1, dtype=np.float64)
-    x2 = np.asarray(x2, dtype=np.float64)
-    y2 = np.asarray(y2, dtype=np.float64)
-    dx, dy = x2 - x1, y2 - y1
-    den = dx * dx + dy * dy
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = np.where(den > 0, ((px - x1) * dx + (py - y1) * dy) / den, 0.0)
-    t = np.clip(t, 0.0, 1.0)
-    fx = x1 + t * dx
-    fy = y1 + t * dy
-    return fx, fy, np.hypot(px - fx, py - fy)
-
-
-def vector_angle(ax, ay, bx, by):
-    """Angle between vectors in radians, vectorized (the reference's
-    VectorAngle, IB-Tool2.py:515-557: arccos of the normalized dot)."""
-    ax = np.asarray(ax, dtype=np.float64)
-    ay = np.asarray(ay, dtype=np.float64)
-    bx = np.asarray(bx, dtype=np.float64)
-    by = np.asarray(by, dtype=np.float64)
-    dot = ax * bx + ay * by
-    den = np.hypot(ax, ay) * np.hypot(bx, by)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        c = np.where(den > 0, dot / den, 1.0)
-    return np.arccos(np.clip(c, -1.0, 1.0))
-
-
 def canonical_ring_bytes(rings: list[np.ndarray], quantum: float = 1e-6) -> bytes:
     """Canonical byte image of a ring set: each ring snapped to quantum,
     rotated to its lexicographically-smallest start vertex, oriented

@@ -3,14 +3,14 @@
 Each operator re-expresses one reference primitive (SURVEY.md §2) as a
 declarative Spark plan: candidate generation by cell equi-join (which
 Catalyst plans as a broadcast hash join — the polygon/center side is
-always tiny relative to the image table), then an exact vectorized
-numpy refine only where the candidate cell is ambiguous.
+always tiny relative to the image table), then an exact refine only
+where the candidate cell is ambiguous.
 
 Scale notes (the 100 TB contract):
 - The image side NEVER shuffles in pip_join/knn_assign — the build side
   is broadcast, so the plan is scan → project (codegen) → broadcast
-  join → Arrow-batched refine.  Throughput scales linearly with
-  executors; there is no shuffle to skew.
+  join → codegen refine, with no Python operator.  Throughput scales
+  linearly with executors; there is no shuffle to skew.
 - density_grid aggregates before its (tiny) k-ring self-join: the
   shuffle moves one row per *occupied cell*, not per point, and Spark's
   partial aggregation does the per-point work map-side.
@@ -30,7 +30,6 @@ from pyspark.sql import types as T
 
 from . import synth
 from .cells import DEFAULT_GRID, GridConfig, encode_col, k_ring_offsets, parent_col
-from .geom import cover_cells, points_in_polygon, rings_bbox
 
 # ---------------------------------------------------------------------------
 # Driver-built relations
@@ -169,61 +168,15 @@ def tile_assign(df: DataFrame, cell_res: int, tile_res: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def polygon_cover_pdf(polygons: list[tuple[int, str, list[np.ndarray]]], res: int,
-                      grid: GridConfig = DEFAULT_GRID) -> pd.DataFrame:
-    """Covering cells of each polygon, classified full/boundary.
-
-    Driver-side (polygon sets are small — the reference's scene has 86
-    boundary polygons); the result is the broadcast build side of the
-    PIP join.
-    """
-    cells_all, sids, fulls = [], [], []
-    for sid, _name, rings in polygons:
-        cells, full = cover_cells(rings, res, grid)
-        cells_all.append(cells)
-        fulls.append(full)
-        sids.append(np.full(cells.shape[0], sid, dtype=np.int64))
-    return pd.DataFrame(
-        {
-            "cell": np.concatenate(cells_all),
-            "sid": np.concatenate(sids),
-            "full": np.concatenate(fulls),
-        }
-    )
-
-
-_COVER_CACHE: dict = {}
-_COVER_CACHE_MAX = 8
-# knn candidate relation cache (same bound/eviction as the cover cache)
-_KNN_CAND_CACHE: dict = {}
-# deepest per-cell candidate list that still uses the fixed-width
-# (codegen least-chain) layout; deeper lists fall back to array+fold
-_KNN_WIDE_MAX = 8
-
-
-def _session_key(spark: SparkSession) -> str:
-    """Cache-key part naming the session's application.  ``id(spark)``
-    can be reused by a new session object at the same address; the
-    application id cannot."""
-    return spark.sparkContext.applicationId
-
-
-def _polygons_digest(polygons) -> str:
-    """Content digest of a polygon set (sid + ring coordinates).  Used
-    as the cover-cache key: id()-based keys can silently alias after
-    garbage collection reuses an address."""
-    import hashlib
-
-    h = hashlib.sha1()
-    for sid, _name, rings in polygons:
-        h.update(str(int(sid)).encode())
-        for r in rings:
-            h.update(np.ascontiguousarray(np.asarray(r, dtype=np.float64)).tobytes())
-    return h.hexdigest()
+def _persisted(df: DataFrame) -> DataFrame:
+    """``df``, persisted unless Spark's cache manager already holds an
+    equal plan: a driver-built relation with the same rows is served
+    from the first one's cached blocks, within this session only."""
+    return df if df.storageLevel.useMemory else df.persist()
 
 
 def _cover_with_edges_pdf(polygons, res, grid) -> pd.DataFrame:
-    """Broadcast build side for the SQL refine: per covering cell its
+    """Broadcast build side of pip_join: per covering cell its
     class, center, center parity, and the edges overlapping the cell."""
     from .geom import cover_cells_with_edges
 
@@ -262,13 +215,14 @@ def _sql_inside_expr():
     cell's local edges).  Equivalent to ray crossing for points in
     general position; zero Python, stays inside whole-stage codegen.
 
-    Degenerate-input caveat: only PROPER crossings count (strict
-    inequalities), so a point exactly on a polygon edge, or whose
-    point-to-center segment passes through a polygon vertex, can
-    classify differently from refine='pandas' (points_in_polygon's
-    half-open-in-y rule).  Exact-parity gates over grid-aligned inputs
-    must either use refine='pandas' on both sides or keep test points
-    off polygon boundaries — the synth scene guarantees the latter.
+    Proper-crossing rule: only PROPER crossings count (strict
+    orientation tests on both segments).  For a point off every polygon
+    edge whose point-to-center segment passes through no polygon vertex
+    this is exactly the even-odd rule of geom.points_in_polygon.  A
+    point ON an edge, or one whose segment touches a vertex, misses the
+    touching crossing and can classify differently from that
+    function's half-open-in-y rule; exact-parity gates keep their
+    points off polygon boundaries — the synth scene guarantees it.
     """
     x, y, cpx, cpy = F.col("x"), F.col("y"), F.col("cpx"), F.col("cpy")
 
@@ -291,89 +245,30 @@ def pip_join(
     res: int = 10,
     grid: GridConfig = DEFAULT_GRID,
     how: str = "inner",
-    refine: str = "sql",
 ) -> DataFrame:
     """Point-in-polygon join: points(x, y, cell) × polygons → + sid.
 
     Plan shape: broadcast-hash-join on the cell key (no shuffle of the
-    point side), then an exact even-odd refine for boundary-cell rows.
-    Replaces arcpy SpatialJoin/SelectLayerByLocation (IB-Tool2.py:882,
-    670 …).
+    point side), then the segment-parity refine of _sql_inside_expr for
+    boundary-cell rows — pure Column math, so the whole join stays in
+    whole-stage codegen with no Python workers.  Replaces arcpy
+    SpatialJoin/SelectLayerByLocation (IB-Tool2.py:882, 670 …).
 
-    ``refine='sql'`` (default): segment-parity test in pure Column math
-    — the whole join stays in whole-stage codegen, no Python workers.
-    ``refine='pandas'``: vectorized numpy ray-crossing in an Arrow
-    batch UDF (the fallback path; also the cross-check in tests).
+    The cover is persisted: the BroadcastExchange is rebuilt per job,
+    and feeding it from cached blocks skips re-serializing the
+    driver-built relation on every run.
 
     ``how='inner'`` keeps matching rows; ``how='anti'`` returns points
     matching NO polygon (INVERT selections, IB-Tool2.py:818-823).
     """
-    spark = points.sparkSession
-    ckey = (_polygons_digest(polygons), res, grid, refine, _session_key(spark))
-    if ckey in _COVER_CACHE:
-        cover, bc = _COVER_CACHE[ckey]
-    else:
-        while len(_COVER_CACHE) >= _COVER_CACHE_MAX:
-            _old_key = next(iter(_COVER_CACHE))
-            _old_cover, _old_bc = _COVER_CACHE.pop(_old_key)
-            for _h in (_old_cover, _old_bc):
-                if _h is not None:
-                    try:
-                        _h.unpersist()
-                    except Exception:
-                        pass
-        if refine == "sql":
-            # persist: the BroadcastExchange is rebuilt per JOB, and
-            # feeding it from cached blocks instead of re-serializing
-            # the driver-local relation saves ~0.15 s per run (measured
-            # at 12 cores) — a per-job fixed cost, so it matters most
-            # for short jobs and small-cluster scaling legs
-            cover = local_df(
-                spark, _cover_with_edges_pdf(polygons, res, grid), _COVER_EDGES_SCHEMA
-            ).persist()
-            bc = None
-        else:
-            cover = local_df(
-                spark, polygon_cover_pdf(polygons, res, grid), "cell long, sid long, full boolean"
-            )
-            rings_by_sid = {
-                sid: [np.asarray(r, dtype=np.float64) for r in rings]
-                for sid, _n, rings in polygons
-            }
-            bc = spark.sparkContext.broadcast(rings_by_sid)
-        _COVER_CACHE[ckey] = (cover, bc)
-
-    joined = points.join(F.broadcast(cover), "cell", "inner")
-
-    if refine == "sql":
-        matched = (
-            joined.withColumn("__inside", _sql_inside_expr())
-            .filter(F.col("__inside"))
-            .drop("__inside", "full", "cpx", "cpy", "cpar", "edges")
-        )
-    else:
-
-        @F.pandas_udf(T.BooleanType())
-        def refine_udf(x: pd.Series, y: pd.Series, sid: pd.Series, full: pd.Series) -> pd.Series:
-            out = full.to_numpy(dtype=bool, na_value=False).copy()
-            todo = ~out
-            if todo.any():
-                xs = x.to_numpy(dtype=np.float64)
-                ys = y.to_numpy(dtype=np.float64)
-                sids = sid.to_numpy(dtype=np.int64)
-                polys = bc.value
-                for s in np.unique(sids[todo]):
-                    m = todo & (sids == s)
-                    out[m] = points_in_polygon(xs[m], ys[m], polys[int(s)])
-            return pd.Series(out)
-
-        matched = (
-            joined.withColumn(
-                "__inside", refine_udf(F.col("x"), F.col("y"), F.col("sid"), F.col("full"))
-            )
-            .filter(F.col("__inside"))
-            .drop("__inside", "full")
-        )
+    cover_pdf = _cover_with_edges_pdf(polygons, res, grid)
+    cover = _persisted(local_df(points.sparkSession, cover_pdf, _COVER_EDGES_SCHEMA))
+    matched = (
+        points.join(F.broadcast(cover), "cell", "inner")
+        .withColumn("__inside", _sql_inside_expr())
+        .filter(F.col("__inside"))
+        .drop("__inside", "full", "cpx", "cpy", "cpar", "edges")
+    )
     if how == "inner":
         return matched
     if how == "anti":
@@ -384,6 +279,11 @@ def pip_join(
 # ---------------------------------------------------------------------------
 # kNN / nearest join (J10 — GenerateNearTable CLOSEST analogue)
 # ---------------------------------------------------------------------------
+
+
+# deepest per-cell candidate list that still uses the fixed-width
+# (codegen least-chain) layout; deeper lists fall back to array+fold
+_KNN_WIDE_MAX = 8
 
 
 def knn_assign(
@@ -441,62 +341,33 @@ def knn_assign(
     # exceptAll parity 0 (plans/r06).  Deeper candidate lists (many
     # overlapping center disks) keep the array+fold form.
     #
-    # persist behind the broadcast, keyed by (centers, cutoff, res):
-    # like the PIP cover, the BroadcastExchange rebuilds per job and
-    # feeding it from cached blocks skips re-serializing the
-    # driver-local candidate relation on every run (bounded LRU)
-    # content-digest key (not the salted built-in hash()): a hash()
-    # collision between two different center sets would silently return
-    # the wrong persisted candidate relation — same reasoning as the
-    # cover cache's sha1 digest (ADVICE r5)
-    import hashlib as _hashlib
-
-    _ckey_h = _hashlib.sha1()
-    _ckey_h.update(centers["center_id"].to_numpy(np.int64).tobytes())
-    _ckey_h.update(cxy.tobytes())
-    ckey = (
-        _ckey_h.hexdigest(),
-        float(cutoff),
-        res,
-        grid,
-        _session_key(spark),
-    )
+    # persist behind the broadcast: like the PIP cover, the
+    # BroadcastExchange rebuilds per job and feeding it from cached
+    # blocks skips re-serializing the driver-local candidate relation
     width = int(cand.groupby("cell").size().max()) if len(cand) else 0
     wide = 0 < width <= _KNN_WIDE_MAX
-    cached = _KNN_CAND_CACHE.get(ckey)
-    if cached is None:
-        while len(_KNN_CAND_CACHE) >= _COVER_CACHE_MAX:
-            _old = _KNN_CAND_CACHE.pop(next(iter(_KNN_CAND_CACHE)))
-            try:
-                _old.unpersist()
-            except Exception:
-                pass
-        if wide:
-            rows = []
-            for cell, g in cand.groupby("cell"):
-                slots = [(int(r.center_id), float(r.cx), float(r.cy)) for r in g.itertuples()]
-                slots += [(None, None, None)] * (width - len(slots))
-                rows.append((int(cell), *(v for s in slots for v in s)))
-            schema = "cell long, " + ", ".join(
-                f"cid{j} long, cx{j} double, cy{j} double" for j in range(width)
+    if wide:
+        rows = []
+        for cell, g in cand.groupby("cell"):
+            slots = [(int(r.center_id), float(r.cx), float(r.cy)) for r in g.itertuples()]
+            slots += [(None, None, None)] * (width - len(slots))
+            rows.append((int(cell), *(v for s in slots for v in s)))
+        schema = "cell long, " + ", ".join(
+            f"cid{j} long, cx{j} double, cy{j} double" for j in range(width)
+        )
+    else:
+        rows = [
+            (
+                int(cell),
+                [
+                    {"center_id": int(r.center_id), "cx": float(r.cx), "cy": float(r.cy)}
+                    for r in g.itertuples()
+                ],
             )
-            cached = local_df(spark, rows, schema).persist()
-        else:
-            grouped = [
-                (
-                    int(cell),
-                    [
-                        {"center_id": int(r.center_id), "cx": float(r.cx), "cy": float(r.cy)}
-                        for r in g.itertuples()
-                    ],
-                )
-                for cell, g in cand.groupby("cell")
-            ]
-            cached = local_df(
-                spark, grouped, "cell long, cands array<struct<center_id: long, cx: double, cy: double>>"
-            ).persist()
-        _KNN_CAND_CACHE[ckey] = cached
-    cand_df = cached
+            for cell, g in cand.groupby("cell")
+        ]
+        schema = "cell long, cands array<struct<center_id: long, cx: double, cy: double>>"
+    cand_df = _persisted(local_df(spark, rows, schema))
     pts = points.withColumn("__kcell", encode_col(F.col("x"), F.col("y"), res, grid))
     joined = pts.join(F.broadcast(cand_df), pts["__kcell"] == cand_df["cell"], "inner").drop(
         cand_df["cell"]

@@ -219,30 +219,31 @@ def test_cover_cache_content_keyed(spark):
     assert all(70.0 <= x <= 90.0 for x in xs_b)
 
 
-def test_cache_keys_name_the_application(spark, monkeypatch):
-    # a new session object can reuse the address of a stopped one, so the
-    # cover and knn candidate caches key on the application id instead
-    from types import SimpleNamespace
+def test_equal_build_sides_share_one_persisted_relation(spark):
+    # Spark's cache manager serves a new driver-built cover or knn
+    # candidate table with equal rows from the first one's cached blocks:
+    # repeated calls persist nothing more, a different polygon set does
+    sc = spark.sparkContext
 
-    def session(app):
-        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+    def persisted():
+        return sc._jsc.sc().getPersistentRDDs().size()
 
-    assert ops._session_key(session("app-1")) != ops._session_key(session("app-2"))
-    assert ops._session_key(spark) == spark.sparkContext.applicationId
-
-    pts = spark.createDataFrame(
-        pd.DataFrame({"pid": [0, 1], "x": [61_000.0, 61_050.0], "y": [61_000.0, 61_000.0]})
+    pts = ops.with_cell(
+        ops.local_df(
+            spark, [(0, 83_000.0, 83_000.0), (1, 83_030.0, 83_000.0)], "pid long, x double, y double"
+        ),
+        10,
     )
-    polys = [(0, "A", [geom.rect_ring(61_000.0, 61_000.0, 100.0, 100.0, 0.0).tolist()])]
-    centers = pd.DataFrame({"center_id": [1], "cx": [61_000.0], "cy": [61_000.0]})
+    polys = [(0, "A", [geom.rect_ring(83_000.0, 83_000.0, 100.0, 100.0, 0.0).tolist()])]
+    centers = pd.DataFrame({"center_id": [1], "cx": [83_000.0], "cy": [83_000.0]})
 
-    ops.pip_join(ops.with_cell(pts, 10), polys, 10)
-    ops.knn_assign(pts, centers, cutoff=70.0)
-    app = spark.sparkContext.applicationId
-    assert app in {k[-1] for k in ops._COVER_CACHE}
-    assert app in {k[-1] for k in ops._KNN_CAND_CACHE}
-    monkeypatch.setattr(ops, "_session_key", lambda s: "another-app")
-    ops.pip_join(ops.with_cell(pts, 10), polys, 10)  # misses: builds its own entries
-    ops.knn_assign(pts, centers, cutoff=70.0)
-    assert sum(k[-1] == "another-app" for k in ops._COVER_CACHE) == 1
-    assert sum(k[-1] == "another-app" for k in ops._KNN_CAND_CACHE) == 1
+    n0 = persisted()
+    for _ in range(2):
+        assert sorted(r.pid for r in ops.pip_join(pts, polys, 10).collect()) == [0, 1]
+    assert persisted() == n0 + 1
+    for _ in range(2):
+        assert sorted(r.pid for r in ops.knn_assign(pts, centers, cutoff=70.0).collect()) == [0, 1]
+    assert persisted() == n0 + 2
+    wider = [(0, "A", [geom.rect_ring(83_000.0, 83_000.0, 300.0, 100.0, 0.0).tolist()])]
+    assert sorted(r.pid for r in ops.pip_join(pts, wider, 10).collect()) == [0, 1]
+    assert persisted() == n0 + 3

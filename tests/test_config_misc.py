@@ -54,16 +54,15 @@ def test_filter_predicate(spark):
     assert mask.tolist() == [True, True, False, False, False]
 
 
-def test_perp_foot():
-    fx, fy, d = geom.perp_foot([5.0, -2.0, 20.0], [5.0, 3.0, 0.0], 0.0, 0.0, 10.0, 0.0)
-    assert fx.tolist() == [5.0, 0.0, 10.0]  # interior, clamped-left, clamped-right
-    assert fy.tolist() == [0.0, 0.0, 0.0]
+def test_nearest_on_segments_clamps_to_one_segment():
+    segs = np.array([[0.0, 0.0, 10.0, 0.0]])
+    nx, ny, d, ang = geom.nearest_on_segments(
+        np.array([5.0, -2.0, 20.0]), np.array([5.0, 3.0, 0.0]), segs
+    )
+    assert nx.tolist() == [5.0, 0.0, 10.0]  # interior, clamped-left, clamped-right
+    assert ny.tolist() == [0.0, 0.0, 0.0]
     assert d.tolist() == [5.0, np.hypot(2, 3), 10.0]
-
-
-def test_vector_angle():
-    a = geom.vector_angle([1.0, 1.0, 1.0], [0.0, 0.0, 0.0], [0.0, -1.0, 1.0], [1.0, 0.0, 0.0])
-    assert np.allclose(a, [np.pi / 2, np.pi, 0.0])
+    assert ang.tolist() == [-90.0, np.degrees(np.arctan2(-3.0, 2.0)), 180.0]
 
 
 def test_canonical_ring_hash_invariance():

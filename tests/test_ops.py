@@ -73,6 +73,38 @@ def test_pip_join_matches_oracle(spark, ids, points_df, scene):
     pd.testing.assert_frame_equal(got, want)
     assert len(want) > N * 0.3  # sanity: a healthy share matched
 
+    # a concave U with a concave hole in its base, rotated off the cell
+    # grid; seeded points kept clear of its edges, where the
+    # proper-crossing refine and points_in_polygon may disagree
+    outer = np.array(
+        [[0, 0], [1500, 0], [1500, 1500], [1000, 1500], [1000, 500], [500, 500], [500, 1500], [0, 1500]],
+        dtype=np.float64,
+    )
+    hole = np.array([[250, 100], [750, 400], [1250, 100], [750, 200]], dtype=np.float64)
+    c, s_ = np.cos(0.3), np.sin(0.3)
+    rot = np.array([[c, s_], [-s_, c]])
+    rings = [r @ rot + np.array([100_003.7, 100_011.3]) for r in (outer, hole)]
+    lo = np.min([r.min(axis=0) for r in rings], axis=0) - 100.0
+    hi = np.max([r.max(axis=0) for r in rings], axis=0) + 100.0
+    xy = np.random.default_rng(13).uniform(lo, hi, size=(4000, 2))
+    segs = np.concatenate([np.hstack([r, np.roll(r, -1, axis=0)]) for r in rings])
+    _nx, _ny, dist, _a = geom.nearest_on_segments(xy[:, 0], xy[:, 1], segs)
+    xy = xy[dist > 0.01]
+    pts = spark.createDataFrame(
+        pd.DataFrame({"pid": np.arange(len(xy)), "x": xy[:, 0], "y": xy[:, 1]})
+    )
+    got = ops.pip_join(ops.with_cell(pts, 10), [(900, "U", rings)], 10).select("pid", "sid").toPandas()
+    inside = geom.points_in_polygon(xy[:, 0], xy[:, 1], rings)
+    assert sorted(got["pid"]) == np.flatnonzero(inside).tolist()
+    assert (got["sid"] == 900).all()
+    # the hole and the notch both hold points that must stay out
+    in_outer = geom.points_in_polygon(xy[:, 0], xy[:, 1], rings[:1])
+    in_hole = geom.points_in_polygon(xy[:, 0], xy[:, 1], rings[1:])
+    assert in_hole.sum() > 50 and (in_outer & ~in_hole).sum() > 500
+    local = (xy - np.array([100_003.7, 100_011.3])) @ rot.T
+    notch = (local[:, 0] > 510) & (local[:, 0] < 990) & (local[:, 1] > 510) & (local[:, 1] < 1490)
+    assert notch.sum() > 50 and not inside[notch].any()
+
 
 def test_pip_join_anti(spark, ids, points_df, scene):
     matched = set(oracle_pip(ids, scene)["image_id"])
@@ -217,26 +249,6 @@ def test_flagship_end_to_end(spark, scene):
         out.sort_values(["image_id", "sid"]).reset_index(drop=True),
         out2.sort_values(["image_id", "sid"]).reset_index(drop=True),
     )
-
-
-def test_pip_join_sql_equals_pandas_refine(spark, ids, points_df, scene):
-    """The codegen segment-parity refine and the numpy ray-crossing
-    refine produce identical join rows."""
-    a = (
-        ops.pip_join(points_df, scene.polygons, 10, refine="sql")
-        .select("image_id", "sid")
-        .toPandas()
-        .sort_values(["image_id", "sid"])
-        .reset_index(drop=True)
-    )
-    b = (
-        ops.pip_join(points_df, scene.polygons, 10, refine="pandas")
-        .select("image_id", "sid")
-        .toPandas()
-        .sort_values(["image_id", "sid"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
 
 
 def test_hex_ops_match_numpy(spark, ids, points_df):

@@ -171,6 +171,23 @@ def _assert_local_scan(df):
     assert "Scan ExistingRDD" not in p, p[:3000]
 
 
+def _cached_relations(df):
+    """The relations cached under ``df``'s optimized plan (its
+    InMemoryRelation nodes), each as a DataFrame over the cached data."""
+    from pyspark.sql import DataFrame
+
+    spark = df.sparkSession
+    found, todo = [], [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "InMemoryRelation":
+            jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, node)
+            found.append(DataFrame(jdf, spark))
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
 def test_driver_built_relations_scan_locally(spark, arrow):
     """Driver-built tables are LocalTableScans with Arrow on or off — a
     list-built frame scans through a Python RDD on every action."""
@@ -240,20 +257,21 @@ def test_driver_built_relations_scan_locally(spark, arrow):
     _assert_local_scan(blocks)
     assert blocks.count() == 2
 
-    # pip_join's cover under either refine and within_distance_join's
-    # candidates.  The coordinates differ per Arrow setting so the cover
-    # cache of one parameter cannot serve the other.
+    # pip_join's cover, read from the join's plan, and
+    # within_distance_join's candidates.  The coordinates differ per
+    # Arrow setting so the cached cover of one parameter cannot serve
+    # the other.
     base = 70_000.0 + (0.0 if arrow == "true" else 1_000.0)
     pts = ops.with_cell(
         ops.local_df(spark, [(0, base, base), (1, base + 500.0, base)], "pid long, x double, y double"),
         10,
     )
     polys = [(0, "A", [geom.rect_ring(base, base, 100.0, 100.0, 0.0).tolist()])]
-    for refine in ("sql", "pandas"):
-        joined = ops.pip_join(pts, polys, 10, refine=refine)
-        cover, _bc = list(ops._COVER_CACHE.values())[-1]  # built by this call
-        _assert_local_scan(cover)
-        assert [r.pid for r in joined.collect()] == [0]
+    joined = ops.pip_join(pts, polys, 10)
+    (cover,) = _cached_relations(joined)
+    assert "edges" in cover.columns
+    _assert_local_scan(cover)
+    assert [r.pid for r in joined.collect()] == [0]
     centers = pd.DataFrame({"center_id": [7], "cx": [base], "cy": [base]})
     near = ops.within_distance_join(pts, centers, 200.0)
     _assert_local_scan(near)
@@ -280,7 +298,7 @@ def test_knn_wide_candidates_keep_long_ids(spark, arrow):
 
     # three centers 100 m apart in a row: cells at the ends of the row
     # hold fewer candidates than the deepest cell, so slots are padded.
-    # The coordinates differ per Arrow setting so the candidate cache
+    # The coordinates differ per Arrow setting so the cached candidates
     # of one parameter cannot serve the other.
     base = 50_000.0 + (0.0 if arrow == "true" else 1_000.0)
     cx = base + np.array([0.0, 100.0, 200.0])
@@ -293,7 +311,7 @@ def test_knn_wide_candidates_keep_long_ids(spark, arrow):
     out = ops.knn_assign(pts, centers, cutoff=70.0)
     p = out._jdf.queryExecution().toString()
     assert "least(" in p, p[:3000]
-    cand = list(ops._KNN_CAND_CACHE.values())[-1]  # built by this call
+    (cand,) = _cached_relations(out)
     _assert_local_scan(cand)
     width = sum(c.startswith("cid") for c in cand.columns)
     assert width >= 2, cand.columns
