@@ -137,8 +137,6 @@ def flagship_checkpointed(
     """The flagship pipeline with a checkpoint boundary per stage —
     kill it after any stage and a rerun resumes from the last snapshot
     (tested in tests/test_checkpoint.py)."""
-    from pyspark.sql import functions as F
-
     from . import ops, synth
 
     scene = synth.default_scene()

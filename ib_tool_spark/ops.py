@@ -310,7 +310,7 @@ def knn_assign(
     cs = grid.cell_size(res)
     k = int(np.ceil(cutoff / cs))
     offs = k_ring_offsets(k)
-    from .cells import encode, xy_to_colrow, encode_colrow
+    from .cells import encode_colrow, xy_to_colrow
 
     cxy = centers[["cx", "cy"]].to_numpy(dtype=np.float64)
     ix, iy = xy_to_colrow(cxy[:, 0], cxy[:, 1], res, grid)

@@ -194,9 +194,9 @@ def test_dissolve_polygons_100k_no_driver_collect(spark):
 
 
 def test_cover_cache_content_keyed(spark):
-    # regression: two different polygon lists with identical length/res
-    # must NOT share a cache entry (the old id()-based key could alias
-    # after garbage collection)
+    # two different polygon lists with identical length/res must NOT be
+    # served from one cached cover: Spark's cache manager matches on the
+    # relation's rows, not on the list's length or identity
     import numpy as np
     from pyspark.sql import functions as F
 
